@@ -11,6 +11,14 @@ nodes register log *paths* (local/HDFS/S3 globs or pasted content
 landed to disk), and analysis reads them through the distributed
 sources. That is the design change that takes the tool surface from
 one-machine-RAM to 100 TB.
+
+Every read tool runs over ONE cached parsed layer per store
+(``LogStore.flagged``), rebuilt only when the store's version changes:
+a registered file's path, length or modification time (listed through
+the Hadoop FileSystem, so HDFS/S3 globs version too), or a paste. A
+rebuild unpersists the superseded layer first, so a store holds one
+cache entry however often its logs change. ``session.clear_caches`` is
+safe: the next call finds the layer uncached and rebuilds it.
 """
 
 from __future__ import annotations
@@ -18,10 +26,17 @@ from __future__ import annotations
 import os
 import tempfile
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.parsing import parse_lines, with_issue_flags
+from .functions.frames import local_frame
+from .functions.parsing import (
+    ALL_PATTERNS,
+    RECOMMENDATION_RULES,
+    parse_lines,
+    with_issue_flags,
+)
 from .operators import analysis
 from .sources.logfiles import read_log_dir
 
@@ -33,6 +48,9 @@ class LogStore:
         self.spark = spark
         self._globs: list[str] = []
         self._paste_dir: str | None = None
+        self._pastes = 0
+        self._layer: DataFrame | None = None
+        self._layer_version: tuple | None = None
 
     def add_glob(self, path_glob: str) -> None:
         """Register a directory glob whose paths encode the node name
@@ -49,6 +67,26 @@ class LogStore:
         os.makedirs(d, exist_ok=True)
         with open(os.path.join(d, "pasted.log"), "a") as fh:
             fh.write(content if content.endswith("\n") else content + "\n")
+        self._pastes += 1
+
+    def _version(self) -> tuple:
+        """(pastes, (path, length, mtime) of every file the globs
+        match). Listed through the Hadoop FileSystem — driver-side
+        metadata calls, no Spark job — so HDFS/S3 globs version too; a
+        matched directory contributes its files, as ``spark.read.text``
+        reads them."""
+        jvm = self.spark.sparkContext._jvm
+        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
+        files = []
+        for g in self._globs:
+            path = jvm.org.apache.hadoop.fs.Path(g)
+            fs = path.getFileSystem(conf)
+            for st in fs.globStatus(path) or []:
+                for f in fs.listStatus(st.getPath()) if st.isDirectory() else [st]:
+                    files.append(
+                        (f.getPath().toString(), f.getLen(), f.getModificationTime())
+                    )
+        return self._pastes, tuple(files)
 
     def lines(self) -> DataFrame:
         if not self._globs:
@@ -60,7 +98,23 @@ class LogStore:
         return out
 
     def flagged(self) -> DataFrame:
-        return with_issue_flags(parse_lines(self.lines())).cache()
+        """The store's cached parsed + issue-flagged layer. The same
+        frame comes back while ``_version()`` is unchanged and the frame
+        is still cached; otherwise the old frame is unpersisted (its
+        plan names the same files, so a stale CacheManager entry would
+        otherwise answer for the new one) and the layer is rebuilt."""
+        version = self._version()
+        if (
+            self._layer is not None
+            and version == self._layer_version
+            and self._layer.storageLevel != StorageLevel.NONE
+        ):
+            return self._layer
+        if self._layer is not None:
+            self._layer.unpersist()
+        self._layer = with_issue_flags(parse_lines(self.lines())).cache()
+        self._layer_version = version
+        return self._layer
 
     def nodes(self) -> list[str]:
         return [
@@ -68,12 +122,11 @@ class LogStore:
         ]
 
 
-def analyze_cluster_report(flagged: DataFrame) -> str:
-    """Markdown parity with the reference's analyze_cluster (ref :738-771)."""
-    summary = analysis.node_summary(flagged).orderBy("node").collect()
-    issues = analysis.issue_counts(flagged).orderBy(F.desc("n"), "issue").collect()
-    recs = analysis.recommendations(flagged).collect()
-
+def _cluster_markdown(summary, issues, recs) -> str:
+    """analyze_cluster's markdown from node rows (node, errors,
+    warnings, total_lines) in node order, (issue, n) pairs in (-n,
+    issue) order and fired (issue, severity, recommendation) rules in
+    rule order."""
     out = ["# Cassandra Cluster Analysis", "", "## Summary by Node"]
     for r in summary:
         out += [
@@ -83,27 +136,90 @@ def analyze_cluster_report(flagged: DataFrame) -> str:
             f"- Total lines: {r.total_lines}",
         ]
     out += ["", "## Detected Issues"]
-    for r in issues:
-        out.append(f"- {r.issue}: {r.n} occurrences")
+    for issue, n in issues:
+        out.append(f"- {issue}: {n} occurrences")
     if recs:
         out += ["", "## Recommendations"]
-        for r in recs:
-            out += [f"\n**{r.issue}** ({r.severity})", f"→ {r.recommendation}"]
+        for issue, severity, rec in recs:
+            out += [f"\n**{issue}** ({severity})", f"→ {rec}"]
     return "\n".join(out)
+
+
+def analyze_cluster_report(flagged: DataFrame) -> str:
+    """Markdown parity with the reference's analyze_cluster (ref :738-771).
+
+    One scan: a per-node rollup of errors, warnings, lines and every
+    issue's count (from the cached ``issues`` array) is the only
+    collect; the cluster-wide issue counts and the fired
+    RECOMMENDATION_RULES derive from its ≤ N-node rows — the same
+    numbers ``analysis.node_summary`` / ``issue_counts`` /
+    ``recommendations`` compute as three separate jobs."""
+    rows = sorted(
+        analysis.node_summary(
+            flagged,
+            *[
+                F.sum(F.array_contains("issues", i).cast("long")).alias(i)
+                for i in ALL_PATTERNS
+            ],
+        ).collect(),
+        key=lambda r: r.node,
+    )
+    totals = {i: sum(r[i] for r in rows) for i in ALL_PATTERNS}
+    issues = sorted(
+        ((i, n) for i, n in totals.items() if n), key=lambda x: (-x[1], x[0])
+    )
+    recs = [
+        (issue, sev, rec)
+        for issue, thr, sev, rec in RECOMMENDATION_RULES
+        if totals[issue] > thr
+    ]
+    return _cluster_markdown(rows, issues, recs)
 
 
 def search_report(flagged: DataFrame, pattern: str, case_sensitive: bool = False,
                   node_filter: str | None = None, limit: int = 100) -> str:
-    """Markdown parity with search_logs (ref :773-799)."""
+    """Markdown parity with search_logs (ref :773-799).
+
+    Two queries over the cached layer instead of numbering every line:
+    the first ``limit`` hits in (node, line_id) order, then one
+    aggregate that counts every hit and, for each shown hit, the lines
+    at or before it on its node — the per-node line number
+    ``analysis.search_logs`` assigns. The shown hits join in as a
+    broadcast literal frame, not as literals in the expression, so the
+    generated code is the same whichever lines they are and is not
+    recompiled per call."""
     df = flagged
     if node_filter:
         df = df.filter(F.col("node") == node_filter)
-    hits = analysis.search_logs(df, pattern, case_sensitive)
-    total = hits.count()
-    shown = hits.orderBy("node", "line_number").limit(limit).collect()
+    match = analysis.search_match(pattern, case_sensitive)
+    shown = (
+        df.filter(match).select("node", "line_id", "raw")
+        .orderBy("node", "line_id").limit(limit).collect()
+    )
+    keys = local_frame(
+        df.sparkSession, [(r.node, r.line_id) for r in shown],
+        "k_node string, k_line long",
+    )
+    all_hits = df.filter(match).select(
+        F.lit(None).cast("string").alias("k_node"),
+        F.lit(None).cast("long").alias("k_line"),
+    )
+    at_or_before = df.join(
+        F.broadcast(keys),
+        (F.col("node") == F.col("k_node")) & (F.col("line_id") <= F.col("k_line")),
+    ).select("k_node", "k_line")
+    counts = {
+        (r.k_node, r.k_line): r.n
+        for r in all_hits.unionByName(at_or_before)
+        .groupBy("k_node", "k_line").agg(F.count("*").alias("n")).collect()
+    }
+    total = counts.get((None, None), 0)
     out = [f"# Search results: '{pattern}'", "", f"Total: {total}", ""]
     for r in shown:
-        out += [f"**{r.node}** (line {r.line_number})", "```", r.content, "```", ""]
+        out += [
+            f"**{r.node}** (line {counts[(r.node, r.line_id)]})",
+            "```", r.raw, "```", "",
+        ]
     if total > limit:
         out.append(f"... and {total - limit} more results")
     return "\n".join(out)

@@ -18,12 +18,11 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.parsing import (
-    ALL_PATTERNS,
     ISSUE_SEVERITY,
     N_NODES,
     RECOMMENDATION_RULES,
@@ -68,12 +67,14 @@ def issue_counts(logs: DataFrame) -> DataFrame:
     )
 
 
-def node_summary(logs: DataFrame) -> DataFrame:
-    """Per-node errors / warnings / total_lines (ref :259-263)."""
+def node_summary(logs: DataFrame, *extra: Column) -> DataFrame:
+    """Per-node errors / warnings / total_lines (ref :259-263), plus
+    any ``extra`` aggregates computed in the same pass."""
     return logs.groupBy("node").agg(
         F.sum(F.col("is_error").cast("long")).alias("errors"),
         F.sum(F.col("is_warning").cast("long")).alias("warnings"),
         F.count("*").alias("total_lines"),
+        *extra,
     )
 
 
@@ -246,6 +247,11 @@ def error_timeline_raw(logs: DataFrame, limit_per_node: int = 100) -> DataFrame:
     )
 
 
+def search_match(pattern: str, case_sensitive: bool = False) -> Column:
+    """True where the raw line matches the search regex (ref :311-327)."""
+    return F.col("raw").rlike(pattern if case_sensitive else f"(?i){pattern}")
+
+
 def search_logs(logs: DataFrame, pattern: str, case_sensitive: bool = False) -> DataFrame:
     """Regex search with per-node line numbers (ref :311-327).
 
@@ -254,10 +260,9 @@ def search_logs(logs: DataFrame, pattern: str, case_sensitive: bool = False) -> 
     the two-stage block scheme (``_numbered_lines``) — no per-node
     global window anywhere in the plan.
     """
-    pat = pattern if case_sensitive else f"(?i){pattern}"
     return (
         _numbered_lines(logs)
-        .filter(F.col("raw").rlike(pat))
+        .filter(search_match(pattern, case_sensitive))
         .select("node", "line_number", F.col("raw").alias("content"))
     )
 
@@ -267,11 +272,13 @@ def recommendations(logs: DataFrame) -> DataFrame:
 
     One conditional aggregation pass computes every issue count, then
     the 5 rules evaluate on the single-row aggregate — a constant-size
-    final stage regardless of input size.
+    final stage regardless of input size. Counts read the flagged
+    ``issues`` array (``issues_col`` matched the same patterns), so no
+    regex re-runs over ``message``.
     """
     counts = logs.agg(
         *[
-            F.sum(F.col("message").rlike(ALL_PATTERNS[issue]).cast("long")).alias(issue)
+            F.sum(F.array_contains("issues", issue).cast("long")).alias(issue)
             for issue, _, _, _ in RECOMMENDATION_RULES
         ]
     )
@@ -1022,24 +1029,22 @@ def node_health_score(logs: DataFrame) -> DataFrame:
     adapts to any cluster's baseline instead of hardcoding absolute
     rates).
 
-    Composition, not recomputation: node_summary, error_bursts
-    (native session_window), and dropped_messages each contribute
-    their already-scale-safe rollup; the joins and the rank/max
-    windows run over node-cardinality rows. All arithmetic is exact
-    integer — no float protocol anywhere.
+    Composition, not recomputation: node_summary (which also sums the
+    dropped-message counts dropped_messages parses, in the same pass)
+    and error_bursts (native session_window) each contribute their
+    already-scale-safe rollup; the join and the rank/max windows run
+    over node-cardinality rows. All arithmetic is exact integer — no
+    float protocol anywhere.
     """
-    ns = node_summary(logs)
+    dropped = F.when(
+        F.col("message").rlike(DROPPED_REGEX),
+        F.regexp_extract("message", DROPPED_REGEX, 1).cast("long"),
+    )
+    ns = node_summary(logs, F.sum(dropped).alias("n_dropped"))
     nb = error_bursts(logs).groupBy("node").agg(
         F.count("*").alias("n_bursts")
     )
-    dr = dropped_messages(logs).groupBy("node").agg(
-        F.sum("total_dropped").alias("n_dropped")
-    )
-    j = (
-        ns.join(nb, "node", "left")
-        .join(dr, "node", "left")
-        .fillna(0, subset=["n_bursts", "n_dropped"])
-    )
+    j = ns.join(nb, "node", "left").fillna(0, subset=["n_bursts", "n_dropped"])
     penalty = (
         HEALTH_W_ERROR * F.col("errors")
         + HEALTH_W_WARN * F.col("warnings")

@@ -8,7 +8,15 @@ shuffle-partition count only needs to be an upper bound.
 
 from __future__ import annotations
 
+import logging
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+#: locked confs already reported, so the warning fires once per process
+#: although ``tune`` runs on every log-layer rebuild
+_LOCKED_LOGGED: set[str] = set()
 
 #: Runtime-settable confs applied to ANY session we are handed (the
 #: driver owns the session during verification). Everything here is a
@@ -30,25 +38,35 @@ RUNTIME_CONFS = {
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent)."""
+    """Apply runtime confs to an existing session (idempotent).
+
+    A conf the deployment has locked (``AnalysisException``, e.g.
+    CANNOT_MODIFY_CONFIG) is skipped and logged once per process;
+    any other failure propagates."""
+    skipped = []
     for k, v in RUNTIME_CONFS.items():
+        if spark.conf.get(k, None) == v:
+            continue  # already applied, e.g. by get_spark
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf locked down in this deployment; proceed
+        except AnalysisException:
+            skipped.append(k)
+    # Size the shuffle to the cluster, not Spark's static 200 — but
+    # only when the conf is still the untouched default, so a
+    # deliberate setting (ours or a user's) is never overridden. AQE
+    # coalesces at runtime either way; this trims the pre-coalesce
+    # width (map output buffers, tiny-task overhead).
+    key = "spark.sql.shuffle.partitions"
     try:
-        # Size the shuffle to the cluster, not Spark's static 200 —
-        # but only when the conf is still the untouched default, so a
-        # deliberate setting (ours or a user's) is never overridden.
-        # AQE coalesces at runtime either way; this trims the
-        # pre-coalesce width (map output buffers, tiny-task overhead).
-        if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(spark.sparkContext.defaultParallelism),
-            )
-    except Exception:
-        pass
+        if spark.conf.get(key) == "200":
+            spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    except AnalysisException:
+        skipped.append(key)
+    fresh = [k for k in skipped if k not in _LOCKED_LOGGED]
+    if fresh:
+        _LOCKED_LOGGED.update(fresh)
+        _log.warning("tune: conf locked in this deployment, left as is: %s",
+                     ", ".join(fresh))
     return spark
 
 

@@ -212,3 +212,163 @@ def test_mcp_stdio_roundtrip_or_designed_skip():
                 assert "Total: " in res.content[0].text
 
     asyncio.run(asyncio.wait_for(roundtrip(), timeout=300))
+
+
+# ---------------------------------------------------------------------------
+# The versioned tool-surface layer (LogStore.flagged)
+# ---------------------------------------------------------------------------
+
+
+def _log_lines(node: str, start: int, n: int) -> str:
+    """n Cassandra-format lines cycling through the error, warning and
+    info templates, plus one stack-trace line the parser drops."""
+    from cassandra_log_analyzer_mcp_spark.functions import parsing as P
+
+    kinds = [
+        ("ERROR", P.ERROR_TEMPLATES, P.ERROR_CLASSES),
+        ("WARN", P.WARN_TEMPLATES, P.WARN_CLASSES),
+        ("INFO", P.INFO_TEMPLATES, P.INFO_CLASSES),
+    ]
+    out = []
+    for i in range(start, start + n):
+        level, msgs, classes = kinds[i % 3]
+        out.append(
+            f"{level} [2025-01-01 10:{i // 60 % 60:02d}:{i % 60:02d},000] "
+            f"[ReadStage-{i % 4}] {classes[i % len(classes)]}:{100 + i} - "
+            f"{msgs[i % len(msgs)]} ({node} #{i})"
+        )
+    out.append("\tat org.apache.cassandra.service.StorageProxy.run(StorageProxy.java:1)")
+    return "\n".join(out) + "\n"
+
+
+def _log_dir(tmp_path, sizes: dict[str, int]) -> str:
+    for node, n in sizes.items():
+        (tmp_path / node).mkdir()
+        (tmp_path / node / "system.log").write_text(_log_lines(node, 0, n))
+    return f"{tmp_path}/*/system.log*"
+
+
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def test_logstore_refreshes_after_append_and_repeat_paste(spark, tmp_path):
+    """A write to a file the store already reads — an append to a live
+    system.log, a second paste to one node — must show in the next
+    answer, and each rebuild must replace the store's cache entry, not
+    add one beside it (the superseded plan names the same files, so
+    its entry would otherwise keep answering)."""
+    store = api.LogStore(spark)
+    store.add_glob(_log_dir(tmp_path, {"node0": 30, "node1": 20}))
+    before = _cache_entries(spark)
+    lines = {"node0": 30, "node1": 20}
+
+    def check():
+        assert store.flagged().count() == sum(lines.values())
+        table = api.compare_report(store.flagged()).splitlines()[4:]
+        cells = [[c.strip() for c in row.strip("|").split("|")] for row in table]
+        assert {c[0]: int(c[3]) for c in cells} == lines
+
+    check()
+    with open(tmp_path / "node0" / "system.log", "a") as fh:
+        fh.write(_log_lines("node0", 30, 7))
+    lines["node0"] += 7
+    check()
+    for k, n in enumerate((5, 4)):
+        store.add_pasted("nodeP", _log_lines("nodeP", 100 * k, n))
+        lines["nodeP"] = lines.get("nodeP", 0) + n
+        check()
+    assert _cache_entries(spark) == before + 1
+    # an unchanged version hands back the very same cached frame
+    assert store.flagged() is store.flagged()
+
+
+def _six_reports(flagged) -> list[str]:
+    return [
+        api.analyze_cluster_report(flagged),
+        api.search_report(flagged, "timed out", False, None, 5),
+        api.errors_report(flagged, None, 10),
+        api.compare_report(flagged),
+        api.issues_report(flagged),
+        api.health_report(flagged),
+    ]
+
+
+def test_logstore_layer_survives_clear_caches(spark, tmp_path):
+    """After clear_caches the store rebuilds a CACHED layer — not a
+    frame whose cache entry is gone and that recomputes the parse on
+    every call — and every report renders the same text."""
+    from pyspark import StorageLevel
+
+    from cassandra_log_analyzer_mcp_spark.session import clear_caches
+
+    store = api.LogStore(spark)
+    store.add_glob(_log_dir(tmp_path, {"node0": 40, "node1": 25}))
+    first = store.flagged()
+    want = _six_reports(first)
+    clear_caches(spark)
+    assert first.storageLevel == StorageLevel.NONE
+    again = store.flagged()
+    assert again is not first
+    assert again.storageLevel != StorageLevel.NONE
+    assert store.flagged() is again
+    assert _six_reports(store.flagged()) == want
+
+
+def test_analyze_cluster_report_matches_registry_operators(spark, sf_dir):
+    """The single-rollup report (and its driver-side rule firing) says
+    exactly what the oracled node_summary / issue_counts /
+    recommendations operators say, and search_report what the oracled
+    search_logs says."""
+    from pyspark.sql import functions as F
+
+    from cassandra_log_analyzer_mcp_spark.operators import analysis
+
+    flagged = logs_flagged(spark, sf_dir)
+    summary = analysis.node_summary(flagged).orderBy("node").collect()
+    issues = [
+        (r.issue, r.n)
+        for r in analysis.issue_counts(flagged)
+        .orderBy(F.desc("n"), "issue").collect()
+    ]
+    recs = [
+        (r.issue, r.severity, r.recommendation)
+        for r in analysis.recommendations(flagged).collect()
+    ]
+    assert recs, "fixture fires no rule; parity would be vacuous"
+    assert api.analyze_cluster_report(flagged) == api._cluster_markdown(
+        summary, issues, recs
+    )
+    # search: the shown hits' line numbers come from a per-hit count,
+    # not search_logs' numbering of every line — same text either way
+    for args in (("tombstone", False, None, 7), ("TIMED OUT", True, None, 5),
+                 ("timed out", False, "node2", 100), ("no such line", False, None, 5)):
+        pattern, case, node, limit = args
+        df = flagged.filter(F.col("node") == node) if node else flagged
+        hits = analysis.search_logs(df, pattern, case)
+        total = hits.count()
+        want = [f"# Search results: '{pattern}'", "", f"Total: {total}", ""]
+        for r in hits.orderBy("node", "line_number").limit(limit).collect():
+            want += [f"**{r.node}** (line {r.line_number})", "```", r.content, "```", ""]
+        if total > limit:
+            want.append(f"... and {total - limit} more results")
+        assert api.search_report(flagged, *args) == "\n".join(want)
+
+
+def test_tune_skips_locked_conf_and_logs_once(spark, monkeypatch, caplog):
+    """A conf the deployment locks is skipped, not fatal, and reported
+    once — tune() runs on every log-layer rebuild."""
+    import logging
+
+    from cassandra_log_analyzer_mcp_spark import session
+
+    locked = "spark.sql.warehouse.dir"  # static: CANNOT_MODIFY_CONFIG
+    monkeypatch.setitem(session.RUNTIME_CONFS, locked, "/nonexistent")
+    monkeypatch.setattr(session, "_LOCKED_LOGGED", set())
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session.tune(spark)
+        session.tune(spark)
+    hits = [r for r in caplog.records if locked in r.getMessage()]
+    assert len(hits) == 1
+    assert spark.conf.get(locked) != "/nonexistent"
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"

@@ -19,7 +19,7 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def canonical_hash(df: pd.DataFrame) -> str:
