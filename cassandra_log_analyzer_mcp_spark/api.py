@@ -19,12 +19,25 @@ the Hadoop FileSystem, so HDFS/S3 globs version too), or a paste. A
 rebuild unpersists the superseded layer first, so a store holds one
 cache entry however often its logs change. ``session.clear_caches`` is
 safe: the next call finds the layer uncached and rebuilds it.
+
+Four of the six read tools render from small per-node rollups kept
+next to that layer (``_ROLLUPS``), each collected the first time a
+tool needs it for the layer's version: ``"nodes"`` (errors, warnings,
+lines, error rate and every issue's count per node) answers
+analyze_cluster, compare_nodes and detect_issues; ``"health"`` (the
+ranked ``node_health_score`` rows) answers cluster_health. They go
+when their layer does: a rebuild supersedes the frame (its entry is
+freed with it), ``clear_caches`` empties the map, and a layer found
+uncached drops its entry and is rolled up directly. Frames that are
+not a store's layer are never memoized. search_logs and get_errors
+depend on their arguments and still scan the layer on every call.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import weakref
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -114,6 +127,7 @@ class LogStore:
             self._layer.unpersist()
         self._layer = with_issue_flags(parse_lines(self.lines())).cache()
         self._layer_version = version
+        _ROLLUPS[self._layer] = {}
         return self._layer
 
     def nodes(self) -> list[str]:
@@ -145,34 +159,72 @@ def _cluster_markdown(summary, issues, recs) -> str:
     return "\n".join(out)
 
 
-def analyze_cluster_report(flagged: DataFrame) -> str:
-    """Markdown parity with the reference's analyze_cluster (ref :738-771).
+def _node_rollup(flagged: DataFrame) -> list:
+    """Per node: errors, warnings, total_lines, each issue's count
+    (from the cached ``issues`` array) and error_rate, rounded in Spark
+    as ``analysis.compare_nodes`` rounds it."""
+    return analysis.node_summary(
+        flagged,
+        *[
+            F.sum(F.array_contains("issues", i).cast("long")).alias(i)
+            for i in ALL_PATTERNS
+        ],
+    ).withColumn(
+        "error_rate", F.round(F.col("errors") / F.col("total_lines"), 4)
+    ).collect()
 
-    One scan: a per-node rollup of errors, warnings, lines and every
-    issue's count (from the cached ``issues`` array) is the only
-    collect; the cluster-wide issue counts and the fired
-    RECOMMENDATION_RULES derive from its ≤ N-node rows — the same
-    numbers ``analysis.node_summary`` / ``issue_counts`` /
-    ``recommendations`` compute as three separate jobs."""
-    rows = sorted(
-        analysis.node_summary(
-            flagged,
-            *[
-                F.sum(F.array_contains("issues", i).cast("long")).alias(i)
-                for i in ALL_PATTERNS
-            ],
-        ).collect(),
-        key=lambda r: r.node,
-    )
+
+def _health_rollup(flagged: DataFrame) -> list:
+    return analysis.node_health_score(flagged).orderBy("rank").collect()
+
+
+_ROLLUP_PARTS = {"nodes": _node_rollup, "health": _health_rollup}
+
+#: LogStore layer frame -> {rollup part: collected rows}. ``flagged()``
+#: registers each layer it builds; an entry is freed with its frame.
+_ROLLUPS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _rollup(flagged: DataFrame, part: str) -> list:
+    """The ``part`` rollup of ``flagged``, collected once per
+    registered, still-cached layer; any other frame is rolled up on
+    every call."""
+    memo = _ROLLUPS.get(flagged)
+    if memo is not None and flagged.storageLevel == StorageLevel.NONE:
+        del _ROLLUPS[flagged]
+        memo = None
+    if memo is None:
+        return _ROLLUP_PARTS[part](flagged)
+    if part not in memo:
+        memo[part] = _ROLLUP_PARTS[part](flagged)
+    return memo[part]
+
+
+def _fired_rules(rows) -> tuple[dict, list]:
+    """Cluster-wide issue totals over node rollup rows, and the
+    RECOMMENDATION_RULES they fire as (issue, severity, recommendation)
+    in rule order — what ``analysis.recommendations`` computes."""
     totals = {i: sum(r[i] for r in rows) for i in ALL_PATTERNS}
-    issues = sorted(
-        ((i, n) for i, n in totals.items() if n), key=lambda x: (-x[1], x[0])
-    )
     recs = [
         (issue, sev, rec)
         for issue, thr, sev, rec in RECOMMENDATION_RULES
         if totals[issue] > thr
     ]
+    return totals, recs
+
+
+def analyze_cluster_report(flagged: DataFrame) -> str:
+    """Markdown parity with the reference's analyze_cluster (ref :738-771).
+
+    Rendered from the ``"nodes"`` rollup: the cluster-wide issue counts
+    and the fired RECOMMENDATION_RULES derive from its ≤ N-node rows —
+    the same numbers ``analysis.node_summary`` / ``issue_counts`` /
+    ``recommendations`` compute as three separate jobs."""
+    rows = sorted(_rollup(flagged, "nodes"), key=lambda r: r.node)
+    totals, recs = _fired_rules(rows)
+    issues = sorted(
+        ((i, n) for i, n in totals.items() if n), key=lambda x: (-x[1], x[0])
+    )
     return _cluster_markdown(rows, issues, recs)
 
 
@@ -242,8 +294,10 @@ def errors_report(flagged: DataFrame, node_name: str | None = None,
 
 
 def compare_report(flagged: DataFrame, nodes: list[str] | None = None) -> str:
-    """Markdown parity with compare_nodes (ref :828-842)."""
-    rows = analysis.compare_nodes(flagged).orderBy("rank").collect()
+    """Markdown parity with compare_nodes (ref :828-842): the
+    ``"nodes"`` rollup in compare_nodes' rank order (errors desc,
+    node)."""
+    rows = sorted(_rollup(flagged, "nodes"), key=lambda r: (-r.errors, r.node))
     if nodes:
         rows = [r for r in rows if r.node in nodes]
     out = [
@@ -254,26 +308,28 @@ def compare_report(flagged: DataFrame, nodes: list[str] | None = None) -> str:
     ]
     for r in rows:
         out.append(
-            f"| {r.node} | {r.errors} | {r.warnings} | {r.lines} | {r.error_rate} |"
+            f"| {r.node} | {r.errors} | {r.warnings} | {r.total_lines} | {r.error_rate} |"
         )
     return "\n".join(out)
 
 
 def issues_report(flagged: DataFrame, severity: str = "all") -> str:
-    """Markdown parity with detect_issues (ref :844-857)."""
-    recs = analysis.recommendations(flagged).collect()
+    """Markdown parity with detect_issues (ref :844-857): the rules the
+    ``"nodes"`` rollup fires, in rule order."""
+    _, recs = _fired_rules(_rollup(flagged, "nodes"))
     out = ["# Detected Issues", ""]
-    for r in recs:
-        if severity == "all" or r.severity.lower() == severity.lower():
-            out += [f"**{r.issue}** ({r.severity})", f"→ {r.recommendation}", ""]
+    for issue, sev, rec in recs:
+        if severity == "all" or sev.lower() == severity.lower():
+            out += [f"**{issue}** ({sev})", f"→ {rec}", ""]
     return "\n".join(out)
 
 
 def health_report(flagged: DataFrame) -> str:
-    """Markdown report over node_health_score — the composed
-    report-card narrative the reference's analyze_cluster implies
-    (who needs attention, ranked, with the penalty breakdown)."""
-    rows = analysis.node_health_score(flagged).orderBy("rank").collect()
+    """Markdown report over node_health_score (the ``"health"``
+    rollup) — the composed report-card narrative the reference's
+    analyze_cluster implies (who needs attention, ranked, with the
+    penalty breakdown)."""
+    rows = _rollup(flagged, "health")
     out = [
         "# Cluster Health",
         "",

@@ -23,8 +23,14 @@ the boundary, not the volume.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+_log = logging.getLogger(__name__)
+#: whether a fallback to the classic path has been reported
+_FALLBACK_LOGGED = False
 
 
 def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
@@ -33,10 +39,14 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     ``rows`` is a sequence of position-matched tuples (the same
     contract as createDataFrame with a DDL string); the result is a
     ``LocalTableScan`` — no PythonRDD, no pickled rows, no Python
-    worker at execution or broadcast time. Falls back to the classic
-    path if Arrow conversion rejects a value (type fidelity beats
-    speed: the fallback is correct, just slower).
+    worker at execution or broadcast time. Each column is inferred,
+    then safe-cast to its field's type, so Arrow rejects a lossy value
+    (1.5 into a long) instead of truncating it. Rows Arrow rejects go
+    to the classic path, which raises on such a value (type fidelity
+    beats speed: the fallback is correct, just slower, and reported
+    once per process, since it brings the Python worker back).
     """
+    global _FALLBACK_LOGGED
     rows = [tuple(r) for r in rows]
     try:
         import pyarrow as pa
@@ -48,11 +58,17 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
         )
         table = pa.Table.from_arrays(
             [
-                pa.array(list(col), type=field.type)
+                pa.array(list(col)).cast(field.type, safe=True)
                 for col, field in zip(cols, arrow_schema)
             ],
             schema=arrow_schema,
         )
         return spark.createDataFrame(table)
-    except Exception:
+    except Exception as e:
+        if not _FALLBACK_LOGGED:
+            _FALLBACK_LOGGED = True
+            _log.warning(
+                "local_frame: Arrow path rejected the rows (%s: %s); "
+                "using createDataFrame(rows, ddl)", type(e).__name__, e,
+            )
         return spark.createDataFrame(rows, schema)

@@ -1119,7 +1119,7 @@ def scd_owner_join(logs: DataFrame) -> DataFrame:
         rows.append(
             (f"node{i}", mid, hi + 1, f"team{(i + 1) % SCD_TEAMS}")
         )
-    dim = local_frame(spark, 
+    dim = local_frame(spark,
         rows, "node string, valid_from long, valid_to long, owner string"
     )
     epoch = F.col("ts").cast("long")

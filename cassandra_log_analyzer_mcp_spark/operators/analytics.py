@@ -3051,7 +3051,7 @@ def zone_map_skip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("eday").alias("f_max"),
         F.count("*").alias("n_rows"),
     )
-    probes = local_frame(spark, 
+    probes = local_frame(spark,
         [(p, _epoch_day(lo), _epoch_day(hi)) for p, lo, hi in ZONE_PROBES],
         schema="probe string, p_lo long, p_hi long",
     )
@@ -3338,7 +3338,7 @@ def range_selectivity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.coalesce(F.lag("cum_rows").over(wnd), F.lit(0))
         ).alias("depth"),
     )
-    probes = local_frame(spark, 
+    probes = local_frame(spark,
         list(SEL_PROBES), schema="probe string, lo long, hi long"
     )
     ov_lo = F.greatest("lo", "lb")
@@ -3702,7 +3702,7 @@ def benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("observed")
     )
     total = counts.agg(F.sum("observed").alias("n_total"))
-    expect = local_frame(spark, 
+    expect = local_frame(spark,
         [(str(d + 1), p) for d, p in enumerate(BENFORD_P)],
         "digit string, p string",
     ).select("digit", F.col("p").cast("double").alias("p"))

@@ -169,7 +169,7 @@ def decontaminate_ngram_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("s").alias("shared"),
         )
     )
-    anchor = local_frame(spark, 
+    anchor = local_frame(spark,
         [(k,) for k in DECONTAM_SWEEP_KS], "gram_k int"
     )
     return anchor.join(F.broadcast(agg), "gram_k", "left").select(

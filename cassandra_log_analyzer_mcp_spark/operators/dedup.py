@@ -1380,7 +1380,7 @@ def dedup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_total = documents(spark, sf_dir).select("doc_id").count()
     n_in_graph = cc.select("doc_id").distinct().count()
-    singletons = local_frame(spark, 
+    singletons = local_frame(spark,
         [(1, n_total - n_in_graph, n_total - n_in_graph)],
         schema="cluster_size long, n_clusters long, n_docs long",
     )

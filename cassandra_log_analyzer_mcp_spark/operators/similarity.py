@@ -2025,7 +2025,7 @@ def mmr_diversified_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         _, v, r, pen, score = best
         chosen.append(v)
         selected.append((rk, v, r, pen, score))
-    return local_frame(spark, 
+    return local_frame(spark,
         selected,
         schema="rk int, vec_id long, rel long, penalty long, mmr long",
     )

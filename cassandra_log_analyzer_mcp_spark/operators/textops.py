@@ -1225,7 +1225,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE folds and must land on the identical merge table.
     """
     merges, _ = _bpe_learn(spark, sf_dir)
-    return local_frame(spark, 
+    return local_frame(spark,
         merges, "round int, left string, right string, n_pairs long"
     )
 

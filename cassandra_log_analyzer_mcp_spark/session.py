@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import logging
 
+from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
@@ -17,6 +18,8 @@ _log = logging.getLogger(__name__)
 #: locked confs already reported, so the warning fires once per process
 #: although ``tune`` runs on every log-layer rebuild
 _LOCKED_LOGGED: set[str] = set()
+#: whether clear_caches has reported a skipped persistent-RDD release
+_RDD_RELEASE_LOGGED = False
 
 #: Runtime-settable confs applied to ANY session we are handed (the
 #: driver owns the session during verification). Everything here is a
@@ -89,17 +92,22 @@ def clear_caches(spark: SparkSession) -> None:
     - the streaming bridges' memory sinks are driver-resident temp
       views (``stream_*``) — dropped by name;
     - the module memos (k-means assignment/state, sampled truth
-      pairs, BPE fold, big-ANN index) must be cleared WITH the blocks:
-      a memo handing out a frame whose cache entry was just dropped
-      would silently recompute-per-use instead of re-caching.
+      pairs, BPE fold, big-ANN index, the tool surface's per-layer
+      rollups) must be cleared WITH the blocks: a memo handing out a
+      frame whose cache entry was just dropped would silently
+      recompute-per-use instead of re-caching, and a rollup would
+      outlive the cached layer it was collected from.
     Everything is rebuilt on demand by the next query.
     """
+    global _RDD_RELEASE_LOGGED
     spark.catalog.clearCache()
     for t in spark.catalog.listTables():
         if t.isTemporary and t.name.startswith("stream_"):
             spark.catalog.dropTempView(t.name)
+    from . import api
     from .operators import dedup, similarity, textops
 
+    api._ROLLUPS.clear()
     similarity._KMEANS_CACHE.clear()
     similarity._KMEANS_STATE_CACHE.clear()
     similarity._BIG_IVF_MEMO.clear()
@@ -120,8 +128,14 @@ def clear_caches(spark: SparkSession) -> None:
         # the very map being iterated
         for r in list(jmap.values()):
             r.unpersist(True)
-    except Exception:
-        pass  # JVM bookkeeping API unavailable; SQL cache is cleared
+    except Py4JError as e:
+        # JVM bookkeeping API unavailable; the SQL cache is cleared
+        if not _RDD_RELEASE_LOGGED:
+            _RDD_RELEASE_LOGGED = True
+            _log.warning(
+                "clear_caches: persistent (localCheckpoint) RDD blocks "
+                "not released: %s: %s", type(e).__name__, e,
+            )
 
 
 def get_spark(

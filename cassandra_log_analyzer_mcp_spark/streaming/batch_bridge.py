@@ -547,7 +547,7 @@ def _landed_events_outer(spark: SparkSession, sf_dir: str) -> str:
     sentinels = (
         ev.agg(F.max("ts").alias("ts"))
         .crossJoin(
-            local_frame(spark, 
+            local_frame(spark,
                 [(-1, "purchase"), (-2, "error")],
                 "event_id long, event_type string",
             )
@@ -858,7 +858,7 @@ def streaming_percentiles_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame
                 int(round(float(cw.sum()))),
             )
         )
-    return local_frame(spark, 
+    return local_frame(spark,
         rows, "event_type string, p50 double, p95 double, p99 double, n long"
     )
 
@@ -1014,7 +1014,7 @@ def streaming_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     top = sorted(state.items(), key=lambda kv: (-kv[1], kv[0]))
     top = top[:STREAM_HH_TOP_K]
-    return local_frame(spark, 
+    return local_frame(spark,
         [(t, c, i + 1) for i, (t, c) in enumerate(top)],
         schema="t string, c bigint, rk int",
     )
@@ -1174,7 +1174,7 @@ def streaming_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return local_frame(spark, 
+    return local_frame(spark,
         alarms,
         schema="node string, hour_s long, n_errors long, cusum long,"
         " k_ref long",
@@ -1361,7 +1361,7 @@ def streaming_trend_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = lines.approxQuantile("t", [0.5], 0.0)
     if not med:
         return trend_from_moments(
-            local_frame(spark, 
+            local_frame(spark,
                 [], "node string, t0 long, t1 long, sy long, sty long"
             )
         )
@@ -1412,7 +1412,7 @@ def streaming_trend_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    moments = local_frame(spark, 
+    moments = local_frame(spark,
         [(n, s[0], s[1], s[2], s[3]) for n, s in sorted(state.items())],
         schema="node string, t0 long, t1 long, sy long, sty long",
     )
@@ -1614,7 +1614,7 @@ def streaming_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         kth = ks[-1][0]
         est = n_kept if n_kept < KMV_K else (KMV_K - 1) * KMV_SPACE // kth
         rows.append((t, truth[t], n_kept, kth, est))
-    return local_frame(spark, 
+    return local_frame(spark,
         rows,
         schema="event_type string, n_true long, n_kept long,"
         " kth_hash long, est_users long",
@@ -1716,7 +1716,7 @@ def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         (doc_id, source, n_tokens, priority, i + 1)
         for i, (priority, doc_id, source, n_tokens) in enumerate(state)
     ]
-    return local_frame(spark, 
+    return local_frame(spark,
         rows,
         schema="doc_id long, source string, n_tokens long,"
         " priority double, rn int",
@@ -1946,7 +1946,7 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append"
     ).parquet(feed)
     run_once()
-    sentinel = local_frame(spark, 
+    sentinel = local_frame(spark,
         [("sentinel",)], "event_type string"
     ).select(
         (F.lit(hi) + 400 * 86400).cast("timestamp").alias("ts"),
@@ -2070,7 +2070,7 @@ def streaming_f2_ams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .f2
     )
     rows = [(r, s, s * s, f2) for r, s in enumerate(state)]
-    return local_frame(spark, 
+    return local_frame(spark,
         rows, schema="r long, s_r long, est_r long, f2_exact long"
     )
 
@@ -2166,7 +2166,7 @@ def streaming_seasonal_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    hourly = local_frame(spark, 
+    hourly = local_frame(spark,
         [(n, h, x) for (n, h), x in sorted(state.items())],
         schema="node string, h long, x long",
     )

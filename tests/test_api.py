@@ -1,8 +1,16 @@
 """Tool-surface parity: LogStore + markdown reports."""
 
+import gc
+import re
+import weakref
+
 import pytest
 
 from cassandra_log_analyzer_mcp_spark import api, server
+from cassandra_log_analyzer_mcp_spark.functions.parsing import (
+    parse_lines,
+    with_issue_flags,
+)
 from cassandra_log_analyzer_mcp_spark.sources.tables import logs_flagged
 
 
@@ -264,10 +272,19 @@ def test_logstore_refreshes_after_append_and_repeat_paste(spark, tmp_path):
     lines = {"node0": 30, "node1": 20}
 
     def check():
-        assert store.flagged().count() == sum(lines.values())
-        table = api.compare_report(store.flagged()).splitlines()[4:]
+        layer = store.flagged()
+        assert layer.count() == sum(lines.values())
+        table = api.compare_report(layer).splitlines()[4:]
         cells = [[c.strip() for c in row.strip("|").split("|")] for row in table]
         assert {c[0]: int(c[3]) for c in cells} == lines
+        analyze = api.analyze_cluster_report(layer)
+        totals = re.findall(r"### (\S+)\n.*\n.*\n- Total lines: (\d+)", analyze)
+        assert {n: int(v) for n, v in totals} == lines
+        # every memoized report matches a frame that is never memoized
+        direct = with_issue_flags(parse_lines(store.lines()))
+        for report in (api.analyze_cluster_report, api.compare_report,
+                       api.issues_report, api.health_report):
+            assert report(layer) == report(direct)
 
     check()
     with open(tmp_path / "node0" / "system.log", "a") as fh:
@@ -281,6 +298,64 @@ def test_logstore_refreshes_after_append_and_repeat_paste(spark, tmp_path):
     assert _cache_entries(spark) == before + 1
     # an unchanged version hands back the very same cached frame
     assert store.flagged() is store.flagged()
+
+
+def test_rollup_memo_entry_goes_with_its_layer(spark, tmp_path):
+    """A layer's memoized rollups are freed with the layer once a
+    rebuild supersedes it, and a layer found uncached drops its entry
+    instead of answering from it."""
+    store = api.LogStore(spark)
+    store.add_glob(_log_dir(tmp_path, {"node0": 12, "node1": 9}))
+    gc.collect()
+    n0 = len(api._ROLLUPS)
+    first = weakref.ref(store.flagged())
+    api.compare_report(store.flagged())
+    api.health_report(store.flagged())
+    assert set(api._ROLLUPS[first()]) == {"nodes", "health"}
+    assert len(api._ROLLUPS) == n0 + 1
+    store.add_pasted("nodeP", _log_lines("nodeP", 0, 3))
+    api.compare_report(store.flagged())
+    gc.collect()
+    assert first() is None
+    assert len(api._ROLLUPS) == n0 + 1
+    layer = store.flagged()
+    layer.unpersist()
+    assert "| nodeP |" in api.compare_report(layer)
+    assert layer not in api._ROLLUPS
+
+
+def test_clear_caches_empties_rollup_memo(spark, tmp_path):
+    from cassandra_log_analyzer_mcp_spark.session import clear_caches
+
+    store = api.LogStore(spark)
+    store.add_glob(_log_dir(tmp_path, {"node0": 10}))
+    api.issues_report(store.flagged())
+    assert len(api._ROLLUPS) >= 1
+    clear_caches(spark)
+    assert len(api._ROLLUPS) == 0
+
+
+def test_clear_caches_logs_skipped_rdd_release_once(spark, monkeypatch, caplog):
+    """A JVM without the persistent-RDD bookkeeping API is reported
+    once; the SQL cache is still cleared."""
+    import logging
+
+    from py4j.protocol import Py4JError
+
+    from cassandra_log_analyzer_mcp_spark import session
+
+    class NoPersistentRDDs:
+        def getPersistentRDDs(self):
+            raise Py4JError("getPersistentRDDs does not exist in the JVM")
+
+    monkeypatch.setattr(spark.sparkContext, "_jsc", NoPersistentRDDs())
+    monkeypatch.setattr(session, "_RDD_RELEASE_LOGGED", False)
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session.clear_caches(spark)
+        session.clear_caches(spark)
+    hits = [r for r in caplog.records if "Py4JError" in r.getMessage()]
+    assert len(hits) == 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def _six_reports(flagged) -> list[str]:
@@ -353,6 +428,39 @@ def test_analyze_cluster_report_matches_registry_operators(spark, sf_dir):
         if total > limit:
             want.append(f"... and {total - limit} more results")
         assert api.search_report(flagged, *args) == "\n".join(want)
+
+
+def test_compare_and_issues_reports_match_registry_operators(spark, sf_dir):
+    """compare_report and issues_report, rendered from the node rollup
+    on the driver, say what the oracled compare_nodes and
+    recommendations operators say."""
+    from cassandra_log_analyzer_mcp_spark.operators import analysis
+
+    flagged = logs_flagged(spark, sf_dir)
+    ranked = analysis.compare_nodes(flagged).orderBy("rank").collect()
+    assert len(ranked) > 2
+    for subset in (None, [ranked[-1].node, ranked[0].node]):
+        want = [
+            "# Node Comparison",
+            "",
+            "| Node | Errors | Warnings | Lines | Error rate |",
+            "|------|--------|----------|-------|------------|",
+        ]
+        for r in ranked:
+            if not subset or r.node in subset:
+                want.append(
+                    f"| {r.node} | {r.errors} | {r.warnings} | {r.lines} |"
+                    f" {r.error_rate} |"
+                )
+        assert api.compare_report(flagged, subset) == "\n".join(want)
+    recs = analysis.recommendations(flagged).collect()
+    assert len({r.severity for r in recs}) > 1, "parity would be vacuous"
+    for severity in ("all", "critical", "High", "medium", "low"):
+        want = ["# Detected Issues", ""]
+        for r in recs:
+            if severity == "all" or r.severity.lower() == severity.lower():
+                want += [f"**{r.issue}** ({r.severity})", f"→ {r.recommendation}", ""]
+        assert api.issues_report(flagged, severity) == "\n".join(want)
 
 
 def test_tune_skips_locked_conf_and_logs_once(spark, monkeypatch, caplog):
