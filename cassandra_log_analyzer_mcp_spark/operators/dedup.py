@@ -297,9 +297,13 @@ def _bucket_pairs(buckets: DataFrame, cap: int | None = None) -> DataFrame:
     pathological bucket. At cluster scale the pair explosion lands on
     the bucket's task either way (same as the join's key partition);
     the cap is the guard in both formulations.
+
+    A repeated (doc_id, band) row counts once: the fold is a set, so
+    it neither pairs a doc with itself nor inflates the occupancy the
+    cap sees.
     """
     g = buckets.groupBy("band").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ids")
+        F.sort_array(F.collect_set("doc_id")).alias("ids")
     )
     if cap is not None:
         g = g.filter(F.size("ids") <= cap)

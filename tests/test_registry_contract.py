@@ -1,24 +1,14 @@
-"""Registry grading-order contract.
+"""Registry surface contract.
 
-The round driver records at most the FIRST 50 ``queries()`` entries
-into CORRECTNESS_r{N}.json (rounds 1, 2, 4, 5, 6 and 7 each produced
-exactly 50 rows — a count cap). Each round the capture window is
-pointed at the queries with the weakest driver-issued evidence.
+Two guards, no Spark session (pure dict/JSON inspection):
 
-Round 10's strategy (registry.R10_DRIVER_WINDOW): after r9, EVERY
-registry query has held a driver slot except the 4 post-freeze r9
-additions (EXTRAS_R9). Slots 1-3 go to that tranche's 3 oracled
-members (zero driver evidence anywhere); slot 50 to its one
-rows-only row (weaker check → tail, per the standing discipline).
-Slots 4-26 honor the R10_ROTATION_LEDGER exactly (the r2-stale
-ANN/embedding + curation tranche promised the r10 lead by the r9
-verdict); slots 27-49 rotate OLDEST-EVIDENCE-FIRST over the 50
-r4-stale queries, and the 27 that don't fit are ledgered as
-R11_ROTATION_LEDGER. These tests load the actual artifacts and
-enforce exactly that, so a re-shuffle can't silently spend slots on
-well-evidenced queries.
+- every registered query has a DuckDB oracle twin or is listed in
+  ``ROWS_ONLY`` with the reason it cannot have one, and no oracle
+  names a query that does not exist;
+- the surface never shrinks: every query graded green in a landed
+  ``CORRECTNESS_r0x.json`` artifact is still registered.
 
-No Spark session needed — pure dict/JSON inspection.
+The values themselves are checked by ``tests/test_oracle_surface.py``.
 """
 
 from __future__ import annotations
@@ -30,195 +20,34 @@ from cassandra_log_analyzer_mcp_spark.plans import registry
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: driver artifacts that actually landed (r3's never did)
-LANDED_ARTIFACTS = (
-    "CORRECTNESS_r01.json",
-    "CORRECTNESS_r02.json",
-    "CORRECTNESS_r04.json",
-    "CORRECTNESS_r05.json",
-    "CORRECTNESS_r06.json",
-    "CORRECTNESS_r07.json",
-    "CORRECTNESS_r08.json",
-    "CORRECTNESS_r09.json",
+#: correctness artifacts that landed (round 3's never did)
+LANDED_ARTIFACTS = tuple(
+    f"CORRECTNESS_r0{n}.json" for n in (1, 2, 4, 5, 6, 7, 8, 9)
 )
 
-#: round-7 additions that landed AFTER the r7 window froze —
-#: replica-graded in round 7, promised the r8 window lead by the
-#: registry's R8 PREP note (and VERDICT r7 ask #1)
-EXTRAS_R7 = {
-    "mixture_temperature_weights",
-    "vocab_coverage_curve",
-    "augment_span_corruption",
-    "template_transitions",
-    "gopher_quality_flags",
-    "gopher_rule_census",
-    "value_ks_drift",
-    "mann_whitney_drift",
-    "benford_check",
-    "decontaminate_semantic",
-    "dedup_minhash_recall_big",
-    "minhash_big_band_census",
-    "dedup_simhash_recall_big",
-    "dedup_winnow_recall_big",
-}
-
-#: round-8 additions BEYOND the window's capacity: replica-graded
-#: this round (tools/check.py at sf0.01 + sf0.1), first in line for
-#: the r9 window alongside the R9_ROTATION_LEDGER
-EXTRAS_R8 = {
-    "dedup_semantic_recall_big",
-    "band_occupancy_census",
-    "dedup_cross_source_matrix",
-    "doc_oov_rate",
-    "dedup_multiset_jaccard",
-    "error_trend_mannkendall",
-    "streaming_mannkendall_state",
-    "decontaminate_ngram_sweep",
-    "doc_prefix_boilerplate",
-    "dedup_token_shift_report",
-}
-
-#: round-9 additions BEYOND the window's capacity (the r9 window
-#: froze when round 9 started): replica-graded this round
-#: (tools/check.py at sf0.01 + sf0.1), first in line for the r10
-#: window alongside the R10_ROTATION_LEDGER
-EXTRAS_R9: set[str] = {
-    "dedup_guard_report",
-    "sem_big_band_census",
-    "dedup_cluster_size_histogram",
-    "dedup_embedding_multiprobe",
-}
-
-#: round-10 additions BEYOND the window's capacity (the r10 window
-#: froze when round 10 started): replica-graded this round
-#: (tools/check.py at sf0.01 + sf0.1), first in line for the r11
-#: window alongside the R11_ROTATION_LEDGER
-EXTRAS_R10: set[str] = {
-    "corpus_token_budget_by_lang",
-    "quality_lang_crosstab",
-    "dedup_survivorship_by_source",
-    "doc_length_quartiles_by_lang",
-    "bucketed_digest_dedup",
-    "embedding_label_coherence",
-}
-
-#: the 13 r1-stale queries round 8's 36 middle slots could NOT fit —
-#: honored as r9 window slots 10-22 (oldest evidence on the surface
-#: when round 9 opened)
-R9_ROTATION_LEDGER = {
-    "customer_order_distribution",
-    "event_funnel",
-    "idle_customers",
-    "large_orders",
-    "late_shipment_priority",
-    "promo_revenue",
-    "regional_revenue",
-    "returned_item_customers",
-    "revenue_rollup",
-    "shipmode_priority",
-    "shipping_priority",
-    "shipping_priority_salted",
-    "top_suppliers",
-}
-
-#: the 23 r2-stale queries round 9's 27 rotation slots could NOT fit
-#: — ledgered as the r10 rotation leads (they will carry the oldest
-#: driver hashes on the surface once round 9 lands)
-R10_ROTATION_LEDGER = {
-    "ann_ivf_cosine",
-    "ann_ivf_persisted",
-    "ann_lsh_cosine",
-    "ann_pq_cosine",
-    "bm25_search",
-    "cluster_balanced_sample",
-    "cluster_summary",
-    "corpus_curation",
-    "corpus_sample",
-    "decontaminate",
-    "doc_embedding_join",
-    "embedding_outliers",
-    "importance_resample",
-    "kmeans_embeddings",
-    "knn_cosine_brute",
-    "knn_quantized_int8",
-    "multimodal_decode_check",
-    "revenue_growth",
-    "rolling_active_users",
-    "silver_node_errors",
-    "source_quality",
-    "train_test_split",
-    "value_outliers_robust",
-}
-
-#: the 27 r4-stale queries round 10's 23 rotation slots could NOT
-#: fit — ledgered as the r11 rotation leads (they will carry the
-#: oldest driver hashes on the surface once round 10 lands)
-R11_ROTATION_LEDGER = {
-    "bigram_lift_collocations",
-    "bloom_pruned_join",
-    "bpe_train_merges",
-    "dedup_chunks_rewrite",
-    "distinct_users_kmv",
-    "doc_gini_diversity",
-    "doc_pagerank",
-    "doc_quality_skyline",
-    "domain_mixture",
-    "interval_overlap_join",
-    "mixture_token_budget",
-    "multimodal_audio_energy",
-    "ngram_novelty_decay",
-    "open_orders_timeline",
-    "phrase_search_positional",
-    "pricing_summary_decimal",
-    "purchase_gap_hazard",
-    "quality_classifier",
-    "range_selectivity_eval",
-    "revenue_grouping_sets",
-    "shard_rebalance_eval",
-    "table_ndv_kmv",
-    "token_counts_cms",
-    "token_f2_ams",
-    "user_value_deciles",
-    "zone_map_skip_stats",
-    "zorder_layout",
-}
-
-#: rows-only by design — no oracle, unit-test evidence instead;
-#: anything NOT listed here must have an oracle_sql() twin.
+#: rows-only by design; anything NOT listed here must have an
+#: oracle_sql() twin.
 ROWS_ONLY = {
+    # sketch values are engine-specific; error-bounded in unit tests
     "distinct_users_sketch",
     "event_value_percentiles_approx",
     "event_value_percentiles_tdigest",
     "streaming_percentiles_tdigest",
+    "table_profile_approx",
+    # Arrow decode stage, not SQL-expressible
     "multimodal_pipeline",
     "multimodal_frames",
-    # approx twin of the exact-at-scale profile: the 100 TB plan swap
-    # (approx_count_distinct / percentile_approx / datasketches HLL),
-    # error-bounded against the exact twin in unit tests — sketch
-    # values are engine-specific, so no DuckDB hash twin by
-    # construction
-    "table_profile_approx",
-    # the BIG embeddings regime (round 7): the 50k drop is GENERATED,
-    # not shipped — no oracle table to read; the exact deterministic
-    # tables are pinned in tests/test_big_ann.py instead (a stronger
-    # check than a floor, same discipline as pr_eval's sampled truth)
+    # the big regimes read GENERATED drops, not shipped tables, so no
+    # oracle table exists; their exact tables are pinned in
+    # tests/test_big_ann.py and tests/test_big_dedup.py
     "ann_ivf_probe_sweep_big",
     "ann_ivf_big_cell_stats",
     "ann_ivf_pq_recall_big",
-    # the BIG documents regime (round 7 late add): same rationale —
-    # generated drop, planted truth, exact tables pinned in
-    # tests/test_big_dedup.py
     "dedup_minhash_recall_big",
     "minhash_big_band_census",
     "dedup_simhash_recall_big",
     "dedup_winnow_recall_big",
-    # round 8: the semantic (embedding-LSH) column of the planted
-    # modality comparison — same generated drop, exact table pinned
-    # in tests/test_big_dedup.py
     "dedup_semantic_recall_big",
-    # round 9: the multiprobe cost census over the same generated
-    # drop's 12-bit semantic band index — exact table pinned in
-    # tests/test_big_dedup.py
     "sem_big_band_census",
 }
 
@@ -229,140 +58,7 @@ def _load(name: str) -> dict:
 
 
 def _driver_graded() -> set[str]:
-    graded: set[str] = set()
-    for name in LANDED_ARTIFACTS:
-        graded |= set(_load(name))
-    return graded
-
-
-def _latest_evidence_round() -> dict[str, str]:
-    latest: dict[str, str] = {}
-    for name in LANDED_ARTIFACTS:
-        rnd = name.split("_r0")[1][0]
-        for query in _load(name):
-            latest[query] = max(latest.get(query, "0"), rnd)
-    return latest
-
-
-def test_r10_window_is_first_50() -> None:
-    order = list(registry.queries())
-    assert len(registry.R10_DRIVER_WINDOW) == 50
-    assert len(set(registry.R10_DRIVER_WINDOW)) == 50
-    assert order[:50] == registry.R10_DRIVER_WINDOW
-
-
-def test_r10_head_is_the_never_graded_oracled_tranche() -> None:
-    """Slots 1-3 = EXTRAS_R9's oracled members — the only oracled
-    queries with ZERO driver-issued evidence after nine artifacts."""
-    head = registry.R10_DRIVER_WINDOW[:3]
-    oracled_extras = EXTRAS_R9 - ROWS_ONLY
-    assert set(head) == oracled_extras
-    assert not set(head) & _driver_graded()
-
-
-def test_r10_honors_the_rotation_ledger() -> None:
-    """Slots 4-26 = the 23-query R10_ROTATION_LEDGER, each carrying
-    r2-stale evidence — the promise round 9 made, kept exactly."""
-    slots = registry.R10_DRIVER_WINDOW[3:26]
-    assert set(slots) == R10_ROTATION_LEDGER
-    latest = _latest_evidence_round()
-    fresher = {q: latest.get(q) for q in slots if latest.get(q) != "2"}
-    assert not fresher, f"ledger entries with fresher evidence: {fresher}"
-
-
-def test_r10_rotation_slots_are_r4_stale() -> None:
-    """Every remaining oracled slot re-grades a query whose latest
-    driver hash is from round 4 — six rounds stale, the weakest
-    evidence among already-graded queries once the ledger is spent.
-    Spending a slot on anything fresher wastes it."""
-    rotation = registry.R10_DRIVER_WINDOW[26:49]
-    latest = _latest_evidence_round()
-    fresher = {q: latest.get(q) for q in rotation if latest.get(q) != "4"}
-    assert not fresher, f"slots wasted on non-r4-stale queries: {fresher}"
-
-
-def test_r10_tail_is_rows_only_band_census() -> None:
-    """Rows-only queries get a WEAKER driver check, so they spend the
-    tail slot, never displacing an oracled query from the head."""
-    tail = registry.R10_DRIVER_WINDOW[49:]
-    assert set(tail) == EXTRAS_R9 & ROWS_ONLY
-    assert all(q in ROWS_ONLY for q in tail)
-
-
-def test_r10_window_plus_ledger_covers_all_stale_r4() -> None:
-    """The 50 r4-stale queries split exactly into the 23 rotation
-    slots plus the 27-query r11 rotation ledger — nothing silently
-    dropped; r2-stale is fully consumed by the honored ledger."""
-    latest = _latest_evidence_round()
-    stale_r2 = {q for q, rnd in latest.items() if rnd == "2"}
-    assert stale_r2 == R10_ROTATION_LEDGER
-    stale_r4 = {q for q, rnd in latest.items() if rnd == "4"}
-    rotation = set(registry.R10_DRIVER_WINDOW[26:49])
-    assert rotation | R11_ROTATION_LEDGER == stale_r4
-    assert not rotation & R11_ROTATION_LEDGER
-
-
-def test_r9_window_was_fully_graded() -> None:
-    """The eviction ledger's premise: rotating ALL fifty r9 slots out
-    is principled only because each one carries a green
-    CORRECTNESS_r09 row — verify that against the artifact itself."""
-    r9 = _load("CORRECTNESS_r09.json")
-    assert set(registry.R9_DRIVER_WINDOW) == set(r9)
-    for name, row in r9.items():
-        if name in ROWS_ONLY:
-            assert row["err"] == "no_oracle", name
-            assert row["spark_rows"] is not None, name
-        else:
-            assert row["rows_match"] and row["schema_match"], name
-            assert row["err"] is None, name
-
-
-def test_r8_window_was_fully_graded() -> None:
-    """The eviction ledger's premise: rotating ALL fifty r8 slots out
-    is principled only because each one carries a green
-    CORRECTNESS_r08 row — verify that against the artifact itself."""
-    r8 = _load("CORRECTNESS_r08.json")
-    assert set(registry.R8_DRIVER_WINDOW) == set(r8)
-    for name, row in r8.items():
-        if name in ROWS_ONLY:
-            assert row["err"] == "no_oracle", name
-            assert row["spark_rows"] is not None, name
-        else:
-            assert row["rows_match"] and row["schema_match"], name
-            assert row["err"] is None, name
-
-
-def test_r7_window_was_fully_graded() -> None:
-    """The eviction ledger's premise: rotating ALL fifty r7 slots out
-    is principled only because each one carries a green
-    CORRECTNESS_r07 row — verify that against the artifact itself.
-    Rows-only occupants are recorded as the weaker rows check
-    (err == 'no_oracle' with spark_rows populated), by design."""
-    r7 = _load("CORRECTNESS_r07.json")
-    assert set(registry.R7_DRIVER_WINDOW) == set(r7)
-    for name, row in r7.items():
-        if name in ROWS_ONLY:
-            assert row["err"] == "no_oracle", name
-            assert row["spark_rows"] is not None, name
-        else:
-            assert row["rows_match"] and row["schema_match"], name
-            assert row["err"] is None, name
-
-
-def test_every_registry_query_has_driver_or_extras_coverage() -> None:
-    """window ∪ graded ∪ extras covers the whole registry — no query
-    exists without either driver evidence, a scheduled r8 slot, or an
-    explicit extras ledger entry."""
-    covered = (
-        set(registry.R10_DRIVER_WINDOW)
-        | _driver_graded()
-        | EXTRAS_R7
-        | EXTRAS_R8
-        | EXTRAS_R9
-        | EXTRAS_R10
-    )
-    missing = set(registry.queries()) - covered
-    assert not missing, f"queries with no evidence plan: {missing}"
+    return set().union(*(_load(name) for name in LANDED_ARTIFACTS))
 
 
 def test_every_query_oracled_or_documented_rows_only() -> None:
@@ -374,14 +70,10 @@ def test_every_query_oracled_or_documented_rows_only() -> None:
         f"queries with neither oracle nor rows-only rationale: "
         f"{unexplained}"
     )
-    # oracles never reference queries that don't exist
     assert not (oracled - qs), f"orphan oracles: {oracled - qs}"
 
 
 def test_graded_surface_never_shrinks() -> None:
-    """Every query the driver ever graded green must stay registered
-    (the replica gate re-verifies them every round); the registry
-    only grows."""
     qs = set(registry.queries())
     gone = _driver_graded() - qs
     assert not gone, f"previously-graded queries dropped: {gone}"

@@ -2513,9 +2513,11 @@ def test_embedding_label_coherence_rederives_exactly(spark, sf_dir):
 
 def test_bucket_pairs_matches_self_join(spark):
     """_bucket_pairs (round-10 fold) must emit exactly the self-join's
-    distinct (da, db) pair set, including the occupancy-cap guard —
-    on a hand-built bucket frame with a hot bucket, a pair bridging
-    two buckets, and a singleton bucket."""
+    distinct (da, db) pair set over the distinct (doc_id, band) rows,
+    including the occupancy-cap guard — on a hand-built bucket frame
+    with a hot bucket, a pair bridging two buckets, and a singleton
+    bucket, and on one with repeated rows (no self-pair, and a repeat
+    does not count toward the cap)."""
     from pyspark.sql import functions as F
 
     from cassandra_log_analyzer_mcp_spark.operators.dedup import (
@@ -2529,9 +2531,16 @@ def test_bucket_pairs_matches_self_join(spark):
         + [(9, "lonely")]                     # occupancy 1 — no pairs
     )
     buckets = spark.createDataFrame(rows, "doc_id long, band string")
+    repeated = spark.createDataFrame(
+        [
+            (1, "b1"), (2, "b1"), (2, "b1"), (3, "b1"),  # occupancy 3
+            (7, "b2"), (7, "b2"),                        # occupancy 1
+        ],
+        "doc_id long, band string",
+    )
 
-    def self_join(cap=None):
-        b = buckets
+    def self_join(frame, cap=None):
+        b = frame.distinct()
         if cap is not None:
             hot = (
                 b.groupBy("band")
@@ -2548,10 +2557,11 @@ def test_bucket_pairs_matches_self_join(spark):
             .distinct()
         )
 
-    for cap in (None, 4, 2, 1):
-        want = {tuple(r) for r in self_join(cap).collect()}
-        got = {tuple(r) for r in _bucket_pairs(buckets, cap=cap).collect()}
-        assert got == want, f"cap={cap}"
+    for label, frame in (("rows", buckets), ("repeated", repeated)):
+        for cap in (None, 4, 3, 2, 1):
+            want = {tuple(r) for r in self_join(frame, cap).collect()}
+            got = {tuple(r) for r in _bucket_pairs(frame, cap=cap).collect()}
+            assert got == want, f"{label} cap={cap}"
     # sanity: the uncapped set includes the hot bucket's 10 pairs and
     # the capped (cap=4) set drops exactly them
     uncapped = {tuple(r) for r in _bucket_pairs(buckets).collect()}

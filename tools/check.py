@@ -1,10 +1,17 @@
 #!/usr/bin/env python3
-"""Local replica of the driver's t2 correctness gate.
+"""Full-surface correctness sweep: every registry query against its
+DuckDB oracle twin.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB at the given sf dir, then compares row count, column names/types,
-and an order-insensitive value hash (columns sorted by name, doubles
-rounded to 9 significant places before hashing).
+DuckDB at the given sf dir, then compares row count, lower-cased column
+names, and an order-insensitive value hash (columns sorted by name,
+doubles rounded to 9 significant places before hashing). Rows-only
+queries report their Spark row count.
+
+Tier-1 runs the same comparison (``oracle_connection`` + ``problems``)
+on every oracled query at sf0.001 in ``tests/test_oracle_surface.py``;
+this CLI is the sweep at the larger drops (sf0.01, sf0.1) and over
+generated ones (``tools/make_sf1.py``).
 
 Usage: python tools/check.py [sf_dir] [--json PATH] [query ...]
 """
@@ -40,6 +47,39 @@ def canonical_hash(df: pd.DataFrame) -> str:
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table of ``sf_dir``."""
+    from cassandra_log_analyzer_mcp_spark.sources.tables import TABLE_NAMES
+
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        # shipped drops are single parquet FILES; generated drops
+        # (tools/make_sf1.py) are Spark-written DIRECTORIES — glob
+        # the part files in that case
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(p):
+            p = f"{p}/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+HASH_MISMATCH = "value-hash mismatch"
+
+
+def problems(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """Why a Spark result differs from its oracle result; empty when
+    row count, lower-cased column names and ``canonical_hash`` agree.
+    The hash is compared only when the columns agree."""
+    found = []
+    if len(sdf) != len(odf):
+        found.append(f"rows {len(sdf)} vs {len(odf)}")
+    if sorted(map(str.lower, sdf.columns)) != sorted(map(str.lower, odf.columns)):
+        found.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
+    elif canonical_hash(sdf) != canonical_hash(odf):
+        found.append(HASH_MISMATCH)
+    return found
+
+
 def main() -> int:
     argv = list(sys.argv[1:])
     json_path = None
@@ -61,18 +101,7 @@ def main() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CHECK_CPUS", "8")
     spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        # shipped drops are single parquet FILES; generated drops
-        # (tools/make_sf1.py) are Spark-written DIRECTORIES — glob
-        # the part files in that case
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(p):
-            p = f"{p}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = oracle_connection(sf_dir)
 
     qs = entry_mod.queries()
     os_ = entry_mod.oracle_sql()
@@ -104,31 +133,21 @@ def main() -> int:
             results[name] = {"err": f"oracle error: {e}"}
             failures += 1
             continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rows {len(sdf)} vs {len(odf)}")
-        schema_ok = sorted(map(str.lower, sdf.columns)) == sorted(
-            map(str.lower, odf.columns)
-        )
-        hash_ok = None  # null in JSON when the hash was never compared
-        if not schema_ok:
-            problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        else:
-            hash_ok = canonical_hash(sdf) == canonical_hash(odf)
-            if not hash_ok:
-                problems.append("value-hash mismatch")
+        found = problems(sdf, odf)
+        schema_ok = not any(p.startswith("cols ") for p in found)
         results[name] = {
             "rows_match": len(sdf) == len(odf),
             "schema_match": schema_ok,
-            "hash_match": hash_ok,
+            # null in JSON when the hash was never compared
+            "hash_match": HASH_MISMATCH not in found if schema_ok else None,
             "spark_rows": len(sdf),
             "oracle_rows": len(odf),
-            "err": "; ".join(problems) or None,
+            "err": "; ".join(found) or None,
         }
-        if problems:
+        if found:
             failures += 1
-            print(f"FAIL {name}: {'; '.join(problems)}")
-            if "value-hash mismatch" in problems and len(sdf) == len(odf):
+            print(f"FAIL {name}: {'; '.join(found)}")
+            if HASH_MISMATCH in found and len(sdf) == len(odf):
                 cols = sorted(sdf.columns)
                 a = sdf.reindex(cols, axis=1).astype(str).sort_values(cols).reset_index(drop=True)
                 b = odf.reindex(cols, axis=1).astype(str).sort_values(cols).reset_index(drop=True)
