@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1990,89 +1991,6 @@ def _dl_distance(a: str, b: str, cap: int | None = None) -> int:
     return d
 
 
-#: below this length the pure-Python DP beats numpy's per-row call
-#: overhead (measured crossover ~48 chars on this host)
-_DL_NP_MIN_LEN = 48
-
-
-def _dl_distance_np(a: str, b: str, cap: int) -> int:
-    """Banded unrestricted Damerau–Levenshtein, rows numpy-vectorized.
-
-    Same contract as _dl_distance(a, b, cap): exact when the true
-    distance ≤ cap, cap+1 otherwise. The inner j-loop of the
-    Lowrance–Wagner DP has three dependency kinds, each of which
-    vectorizes across the band window:
-
-    - diagonal/up terms: reads of the previous row — plain slices;
-    - transposition h[i1][j1]: i1 is a per-character gather from a
-      last-occurrence table (factorized char codes) and j1 a shifted
-      running maximum of this row's match positions — both O(band)
-      vector ops;
-    - the left (deletion) term, the genuinely sequential one: every
-      horizontal step costs exactly 1, so
-      row[j] = min_{k≤j}(tmp[k] + (j−k)) — a min-plus prefix scan,
-      computed as minimum.accumulate(tmp − j) + j.
-
-    ~20× over the per-cell Python loop at 300-char docs; the result
-    is bit-identical (the randomized equivalence test sweeps both).
-    """
-    import numpy as np
-
-    la, lb = len(a), len(b)
-    if abs(la - lb) > cap:
-        return cap + 1
-    maxd = la + lb
-    band = cap
-    codes, inv = np.unique(
-        np.frombuffer((a + b).encode("utf-32-le"), dtype=np.uint32),
-        return_inverse=True,
-    )
-    acode, bcode = inv[:la].astype(np.int64), inv[la:].astype(np.int64)
-    last_occ = np.zeros(len(codes), dtype=np.int64)
-    h = np.full((la + 2, lb + 2), maxd, dtype=np.int64)
-    h[1, 1 : min(lb, band) + 2] = np.arange(min(lb, band) + 1)
-    h[1 : min(la, band) + 2, 1] = np.arange(min(la, band) + 1)
-    for i in range(1, la + 1):
-        lo = max(1, i - band)
-        hi = min(lb, i + band)
-        jg = np.arange(lo, hi + 1)
-        bw = bcode[lo - 1 : hi]
-        ai = acode[i - 1]
-        cost = (bw != ai).astype(np.int64)
-        i1 = last_occ[bw]
-        match_pos = np.where(bw == ai, jg, 0)
-        db = np.empty_like(jg)
-        db[0] = 0
-        np.maximum.accumulate(match_pos[:-1], out=db[1:])
-        tmp = np.minimum(
-            h[i, lo : hi + 1] + cost,          # substitution (diag)
-            h[i, lo + 1 : hi + 2] + 1,         # insertion (up)
-        )
-        np.minimum(
-            tmp,
-            h[i1, db] + (i - i1 - 1) + 1 + (jg - db - 1),  # transpose
-            out=tmp,
-        )
-        arr = tmp - jg
-        arr[0] = min(arr[0], h[i + 1, lo] - (lo - 1))
-        np.minimum.accumulate(arr, out=arr)
-        vals = arr + jg
-        h[i + 1, lo + 1 : hi + 2] = vals
-        if vals.min() > cap:
-            return cap + 1
-        last_occ[ai] = i
-    d = int(h[la + 1, lb + 1])
-    return d if d <= cap else cap + 1
-
-
-def _dl_distance_fast(a: str, b: str, cap: int) -> int:
-    """Dispatch: numpy row-sweep for real documents, the per-cell DP
-    where numpy call overhead would dominate (short strings)."""
-    if min(len(a), len(b)) < _DL_NP_MIN_LEN:
-        return _dl_distance(a, b, cap=cap)
-    return _dl_distance_np(a, b, cap)
-
-
 #: batched-kernel chunk sizing: cap the padded DP cube at ~48M cells
 #: so one chunk's H stays ~200 MB of int32 at worst
 _DL_BATCH_MAX_CELLS = 48_000_000
@@ -2082,10 +2000,9 @@ _DL_BIG = 1 << 20  # "infinity" safely below int32 overflow under +len
 def _dl_distance_batch(tas, tbs, caps):
     """Banded unrestricted Damerau–Levenshtein for a BATCH of pairs,
     vectorized across pairs AND across the row — the numpy call count
-    per DP row is constant in batch size, which is what the per-pair
-    row sweep (_dl_distance_np) can't offer: its ~15 vector ops per
-    row act on ≤2·cap+1 cells, so call overhead dominates at
-    real-document band widths.
+    per DP row is constant in batch size, so call overhead does not
+    dominate at real-document band widths the way it would for a
+    per-pair row sweep (~15 vector ops per row on ≤2·cap+1 cells).
 
     Same contract per pair as _dl_distance(a, b, cap): exact when the
     true distance ≤ cap, cap+1 otherwise (above-cap values are only
@@ -2306,12 +2223,15 @@ def dedup_editdist_dl(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage admissible at 100 TB: candidates arrive shuffle-wide there,
     and each Arrow batch amortizes the kernel across its pairs.
     """
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("int", PandasUDFType.SCALAR)
-    def _dl(ta, tb, thr, lev2):
+    # type-hint registration (pd is module-global, so the stringized
+    # annotations resolve under `from __future__ import annotations`)
+    @pandas_udf("int")
+    def _dl(
+        ta: pd.Series, tb: pd.Series, thr: pd.Series, lev2: pd.Series
+    ) -> pd.Series:
         import numpy as np
-        import pandas as pd
 
         thrv = thr.to_numpy()
         levv = lev2.to_numpy()

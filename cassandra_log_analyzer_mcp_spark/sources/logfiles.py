@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..session import tune
-from ..functions.parsing import parse_lines
 
 try:  # optional dependency, mirrors ref :21-26
     import paramiko  # noqa: F401
@@ -80,10 +79,6 @@ def read_log_dir(
             "raw",
         )
     )
-
-
-def read_and_parse_log_dir(spark: SparkSession, path_glob: str, **kw) -> DataFrame:
-    return parse_lines(read_log_dir(spark, path_glob, **kw))
 
 
 def fetch_logs_via_ssh(

@@ -77,8 +77,8 @@ class LogDirReader(DataSourceReader):
                 yield (partition.node, line.rstrip("\n"))
 
 
-#: landed log corpus per sf_dir (process-lifetime, like
-#: batch_bridge._MATERIALIZED)
+#: landed log corpus per sf_dir (process-lifetime, like the
+#: batch_bridge._landed_log_dir landing)
 _PYDS_MATERIALIZED: dict[str, str] = {}
 
 

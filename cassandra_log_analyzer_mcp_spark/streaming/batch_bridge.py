@@ -14,10 +14,14 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..functions.parsing import synth_raw_lines
@@ -25,13 +29,26 @@ from ..sources.tables import table
 from . import log_stream
 from ..functions.frames import local_frame
 
-_MATERIALIZED: dict[str, str] = {}
-
 #: one work root per process for bridge checkpoints/sinks — a shared
 #: checkpoint ROOT (each query still gets its own subdirectory: Spark
 #: requires one checkpoint dir per query, but the root is created,
 #: tracked and cleaned once instead of one mkdtemp per bridge call)
 _WORK_ROOT: str | None = None
+
+#: shuffle width, and so the number of state stores, of every bridge
+#: query: bridge state is keyed by node, user or window and stays small
+#: at any input size, so it is sized to the state, not to the input
+#: (input parallelism comes from file splits and is unaffected)
+STATE_PARTITIONS = "8"
+
+#: the normalized events projection every events landing writes
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long,"
+    " event_type string, value double"
+)
+
+#: every fixture this process has landed, keyed by (kind, key)
+_LANDINGS: dict[tuple[str, str], str] = {}
 
 
 def _bridge_workdir(prefix: str) -> str:
@@ -62,6 +79,126 @@ def _bridge_workdir(prefix: str) -> str:
     return d
 
 
+def _run(
+    spark: SparkSession, label: str, start: Callable[[], StreamingQuery]
+) -> None:
+    """Run the availableNow query ``start()`` returns to its end.
+
+    For the length of the run the session pins STATE_PARTITIONS and
+    roots every checkpoint the query does not name itself under a
+    fresh work dir (a failed foreachBatch query with no checkpoint
+    otherwise leaves a ``temporary-*`` dir in the JVM's temp dir).
+    Both confs stay set until the query ends, because foreachBatch
+    bodies run their batch jobs on this session. On every exit the
+    query is stopped and both confs are restored — unset where they
+    were unset before.
+    """
+    confs = {
+        "spark.sql.shuffle.partitions": STATE_PARTITIONS,
+        "spark.sql.streaming.checkpointLocation": _bridge_workdir(label),
+    }
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    q = None
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        q = start()
+        if not q.awaitTermination(600):
+            raise TimeoutError(f"{label} did not finish its availableNow run")
+    finally:
+        if q is not None:
+            q.stop()
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _to_table(
+    spark: SparkSession, df: DataFrame, label: str, mode: str
+) -> DataFrame:
+    """Run the streaming ``df`` into a ``stream_<label>_*`` memory sink
+    in output ``mode`` and return the sink table."""
+    sink = f"stream_{label}_{uuid.uuid4().hex[:8]}"
+    _run(
+        spark,
+        label,
+        lambda: log_stream.run_to_memory_sink(df, sink, output_mode=mode),
+    )
+    return spark.table(sink)
+
+
+def _foreach_batch(
+    spark: SparkSession,
+    label: str,
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+) -> None:
+    """Run ``fn(batch, batch_id)`` on every micro-batch of ``stream``."""
+    _run(
+        spark,
+        label,
+        lambda: stream.writeStream.foreachBatch(fn)
+        .trigger(availableNow=True)
+        .start(),
+    )
+
+
+def _two_file_feed(label: str, first: DataFrame, second: DataFrame) -> str:
+    """Land ``first`` and ``second`` as one parquet file each (``0_*``
+    and ``1_*``) under a fresh feed dir and return the dir.
+
+    The file source replays oldest-mtime-first, so the halves' mtimes
+    are pinned 120 s and 60 s in the past: under ``_replay``'s one
+    file per trigger, micro-batch 1 IS ``first`` and micro-batch 2 IS
+    ``second`` — the ordering every "crosses the batch boundary"
+    argument below rests on.
+    """
+    feed = _bridge_workdir(label)
+    now = time.time()
+    for name, half, age in (("0_first", first, 120.0), ("1_second", second, 60.0)):
+        out = os.path.join(feed, name)
+        half.repartition(1).write.parquet(out)
+        for f in os.listdir(out):
+            os.utime(os.path.join(out, f), (now - age, now - age))
+    return feed
+
+
+def _replay(
+    spark: SparkSession, feed: str, schema: str | StructType
+) -> DataFrame:
+    """A ``_two_file_feed`` dir as a stream of one file per trigger."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(feed)
+    )
+
+
+def _landed(kind: str, key: str, write: Callable[[str], None]) -> str:
+    """Land one fixture once per (kind, key) per process: the first
+    call runs ``write(path)`` into a fresh ``path`` under the work
+    root; later calls return that path."""
+    path = _LANDINGS.get((kind, key))
+    if path is None:
+        path = os.path.join(_bridge_workdir(kind), kind)
+        write(path)
+        _LANDINGS[(kind, key)] = path
+    return path
+
+
+def _node_lines(src: DataFrame) -> DataFrame:
+    """The landed text stream (``node`` discovered from the Hive
+    partition dirs) as the source-agnostic (line_id, node, raw)."""
+    return src.select(
+        F.lit(None).cast("long").alias("line_id"),
+        F.col("node").cast("string").alias("node"),
+        F.col("value").alias("raw"),
+    )
+
+
 def _landed_log_dir(spark: SparkSession, sf_dir: str) -> str:
     """Land the synthesized raw lines as per-node log directories
     (once per sf_dir per process).
@@ -70,32 +207,23 @@ def _landed_log_dir(spark: SparkSession, sf_dir: str) -> str:
     the landing step must scale with the cluster, exactly like a real
     log shipper fleet writing to shared storage.
     """
-    if sf_dir in _MATERIALIZED:
-        return _MATERIALIZED[sf_dir]
+
     # On a real cluster the landing root must be SHARED storage
     # (HDFS/S3) or the distributed write's task outputs never reach
     # the driver-visible directory; override via env for that case.
-    root = _bridge_workdir("landed_logs")
-    base = os.path.join(root, f"logs_{uuid.uuid4().hex[:8]}")
-    (
-        synth_raw_lines(table(spark, sf_dir, "events"))
-        .select("node", F.col("raw").alias("value"))
-        # no repartition("node"): that would collapse parallelism to
-        # the distinct-node count; letting every task write its nodes'
-        # files keeps the stage wide (more, smaller files — fine for a
-        # file stream source)
-        .write.partitionBy("node")
-        .text(base)
-    )
-    _MATERIALIZED[sf_dir] = base
-    return base
+    def write(path: str) -> None:
+        (
+            synth_raw_lines(table(spark, sf_dir, "events"))
+            .select("node", F.col("raw").alias("value"))
+            # no repartition("node"): that would collapse parallelism to
+            # the distinct-node count; letting every task write its nodes'
+            # files keeps the stage wide (more, smaller files — fine for a
+            # file stream source)
+            .write.partitionBy("node")
+            .text(path)
+        )
 
-
-_LANDED_SILVER: dict[str, str] = {}
-
-#: node-dim parquet paths already written this process (static dim —
-#: one write per path, not one per streaming_rack_counts call)
-_NODE_DIM_WRITTEN: set[str] = set()
+    return _landed("landed_logs", sf_dir, write)
 
 
 def _landed_silver_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -110,30 +238,21 @@ def _landed_silver_dir(spark: SparkSession, sf_dir: str) -> str:
     in-stream by streaming_issue_counts / streaming_kafka_issue_counts,
     and the landing's content is hash-graded by streaming_silver_counts.
     """
-    if sf_dir in _LANDED_SILVER:
-        return _LANDED_SILVER[sf_dir]
-    log_dir = _landed_log_dir(spark, sf_dir)
-    lines = spark.readStream.text(log_dir).select(
-        F.lit(None).cast("long").alias("line_id"),
-        F.col("node").cast("string").alias("node"),
-        F.col("value").alias("raw"),
-    )
-    parsed = log_stream.parsed_stream(lines).withColumn(
-        "log_date", F.to_date("ts")
-    )
-    work = _bridge_workdir("shared_silver")
-    out = os.path.join(work, "silver")
-    ck = os.path.join(work, "ck")
-    q = log_stream.stream_to_silver(
-        parsed, out, ck, partition_cols=("log_date", "node")
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "shared silver landing did not finish its availableNow batch"
+
+    def write(path: str) -> None:
+        lines = _node_lines(spark.readStream.text(_landed_log_dir(spark, sf_dir)))
+        parsed = log_stream.parsed_stream(lines).withColumn(
+            "log_date", F.to_date("ts")
         )
-    _LANDED_SILVER[sf_dir] = out
-    return out
+        _run(
+            spark,
+            "shared_silver",
+            lambda: log_stream.stream_to_silver(
+                parsed, path, path + "_ck", partition_cols=("log_date", "node")
+            ),
+        )
+
+    return _landed("shared_silver", sf_dir, write)
 
 
 def _silver_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,21 +278,9 @@ def streaming_error_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import burst_state
 
     bursts = burst_state.streaming_error_bursts(_silver_stream(spark, sf_dir))
-    sink = f"stream_bursts_{uuid.uuid4().hex[:8]}"
-    # state is keyed by node (4 keys here) — size the state-store
-    # shuffle to it, same reasoning as streaming_issue_counts.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = log_stream.run_to_memory_sink(bursts, sink, output_mode="append")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_error_bursts did not finish its availableNow batch"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).select("node", "n_events", "start_s", "end_s")
+    return _to_table(spark, bursts, "error_bursts", "append").select(
+        "node", "n_events", "start_s", "end_s"
+    )
 
 
 def streaming_issue_counts(
@@ -200,33 +307,11 @@ def streaming_issue_counts(
     if via_kafka_wire:
         lines = log_stream.from_kafka_wire(log_stream.to_kafka_wire(src))
     else:
-        lines = src.select(
-            F.lit(None).cast("long").alias("line_id"),
-            F.col("node").cast("string").alias("node"),
-            F.col("value").alias("raw"),
-        )
+        lines = _node_lines(src)
     counts = log_stream.windowed_issue_counts(
         log_stream.parsed_stream(lines), window="1 hour", watermark="2 hours"
     )
-    sink = f"stream_counts_{uuid.uuid4().hex[:8]}"
-    # Streaming aggregations allocate ONE STATE STORE PER SHUFFLE
-    # PARTITION; state here is (hour × node × level) — tiny. Size the
-    # shuffle to the state, not the input (input parallelism comes from
-    # file splits and is unaffected): 32 stores → 8 cuts ~3 s of pure
-    # store setup/commit overhead per batch locally, and at scale keeps
-    # checkpoint traffic proportional to state, not cluster width.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = log_stream.run_to_memory_sink(counts, sink, output_mode="complete")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_issue_counts did not finish its availableNow batch"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).select(
+    return _to_table(spark, counts, "issue_counts", "complete").select(
         F.date_format("win_start", "yyyy-MM-dd HH:00:00").alias("hour"),
         "node",
         "level",
@@ -255,21 +340,7 @@ def streaming_windowed_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import analysis
 
     alerts = analysis.windowed_alerts(_silver_stream(spark, sf_dir))
-    sink = f"stream_alerts_{uuid.uuid4().hex[:8]}"
-    # state is (node × window × 5 issues) — tiny; size the state-store
-    # shuffle to it (see streaming_issue_counts)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = log_stream.run_to_memory_sink(alerts, sink, output_mode="complete")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_windowed_alerts did not finish its availableNow batch"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).select(
+    return _to_table(spark, alerts, "windowed_alerts", "complete").select(
         "node", "win_start", "issue", "severity",
         F.col("n_hits").cast("long").alias("n_hits"), "threshold",
     )
@@ -287,21 +358,7 @@ def streaming_error_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import analysis
 
     sess = analysis.error_sessions(_silver_stream(spark, sf_dir))
-    sink = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    # session state is keyed by node (handful of keys) — size the
-    # state-store shuffle to it (see streaming_issue_counts)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = log_stream.run_to_memory_sink(sess, sink, output_mode="complete")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_error_sessions did not finish its availableNow batch"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).select(
+    return _to_table(spark, sess, "error_sessions", "complete").select(
         "node",
         F.col("start_s").cast("long").alias("start_s"),
         F.col("end_s_excl").cast("long").alias("end_s_excl"),
@@ -328,9 +385,6 @@ def streaming_silver_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return node_errors_rollup(spark.read.parquet(out))
 
 
-_LANDED_BATCH: dict[str, str] = {}
-
-
 def _landed_batch_docs(spark: SparkSession, sf_dir: str) -> str:
     """Land the incoming-batch documents as a small multi-file parquet
     directory (once per sf_dir per process) — the "today's crawl
@@ -338,22 +392,18 @@ def _landed_batch_docs(spark: SparkSession, sf_dir: str) -> str:
     files so maxFilesPerTrigger=1 forces two real micro-batches (the
     batch-boundary-independence proof needs >1; every extra batch is
     pure fixed overhead locally)."""
-    if sf_dir in _LANDED_BATCH:
-        return _LANDED_BATCH[sf_dir]
     from ..operators.dedup import INCR_BATCH_MOD
     from ..sources.tables import documents
 
-    root = _bridge_workdir("landed_docs")
-    base = os.path.join(root, f"batch_docs_{uuid.uuid4().hex[:8]}")
-    (
-        documents(spark, sf_dir)
+    return _landed(
+        "landed_docs",
+        sf_dir,
+        lambda path: documents(spark, sf_dir)
         .filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
         .select("doc_id", "text")
         .repartition(2)
-        .write.parquet(base)
+        .write.parquet(path),
     )
-    _LANDED_BATCH[sf_dir] = base
-    return base
 
 
 def streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,9 +421,7 @@ def streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup
 
     land = _landed_batch_docs(spark, sf_dir)
-    work = _bridge_workdir("stream_incr")
-    outdir = os.path.join(work, "out")
-    ck = os.path.join(work, "ck")
+    outdir = os.path.join(_bridge_workdir("stream_incr"), "out")
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -385,56 +433,86 @@ def streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             bdf.sparkSession, sf_dir, bdf
         ).write.mode("append").parquet(outdir)
 
-    # per-micro-batch joins touch a few hundred rows — size the
-    # shuffle to the data, not the session default (same reasoning as
-    # the other bridges' state-store sizing)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_dedup_incremental did not finish its availableNow run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _foreach_batch(spark, "dedup_incremental", stream, handle)
     return spark.read.parquet(outdir)
 
 
-_LANDED_EVENTS: dict[str, str] = {}
+def _events_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table in EVENTS_SCHEMA's shape. The ts column is
+    normalized through the batch loader FIRST, so both drop formats
+    (nanos-long vs micros NTZ) land identically."""
+    return table(spark, sf_dir, "events").select(
+        "event_id",
+        F.col("ts").cast("timestamp").alias("ts"),
+        "user_id",
+        "event_type",
+        "value",
+    )
 
 
 def _landed_events(spark: SparkSession, sf_dir: str) -> str:
     """Land the normalized events table as a small parquet directory
     (once per sf_dir per process) — the shape a CDC feed or event bus
-    archiver leaves in shared storage for a file-source stream. The
-    ts column is normalized through the batch loader FIRST, so both
-    drop formats (nanos-long vs micros NTZ) land identically.
+    archiver leaves in shared storage for a file-source stream.
     """
-    if sf_dir in _LANDED_EVENTS:
-        return _LANDED_EVENTS[sf_dir]
-    root = _bridge_workdir("landed_events")
-    base = os.path.join(root, f"events_{uuid.uuid4().hex[:8]}")
-    (
-        table(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-        )
+    return _landed(
+        "landed_events",
+        sf_dir,
+        lambda path: _events_frame(spark, sf_dir)
         .repartition(2)
-        .write.parquet(base)
+        .write.parquet(path),
     )
-    _LANDED_EVENTS[sf_dir] = base
-    return base
+
+
+def _purchase_error_join(
+    spark: SparkSession, land: str, how: str
+) -> DataFrame:
+    """The purchase→error stream-stream join over an events landing:
+    both sides watermarked 5 hours, joined on user within the 4 hours
+    after the purchase, run to a memory sink; returns the sink table.
+
+    ``user_id`` is coalesced from both sides: that is the identity on
+    inner and left rows, and gives a full join's orphaned errors their
+    user.
+    """
+    purchases = (
+        spark.readStream.schema(EVENTS_SCHEMA)
+        .parquet(land)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("p_ts"),
+            "user_id",
+            F.col("value").alias("purchase_value"),
+        )
+        .withWatermark("p_ts", "5 hours")
+    )
+    errors = (
+        spark.readStream.schema(EVENTS_SCHEMA)
+        .parquet(land)
+        .filter(F.col("event_type") == "error")
+        .select(
+            F.col("event_id").alias("error_id"),
+            F.col("ts").alias("e_ts"),
+            F.col("user_id").alias("e_user"),
+        )
+        .withWatermark("e_ts", "5 hours")
+    )
+    joined = purchases.join(
+        errors,
+        (F.col("user_id") == F.col("e_user"))
+        & (F.col("e_ts") >= F.col("p_ts"))
+        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 4 HOURS")),
+        how,
+    ).select(
+        F.coalesce("user_id", "e_user").alias("user_id"),
+        "purchase_id",
+        "error_id",
+        F.unix_micros("p_ts").alias("purchase_us"),
+        F.unix_micros("e_ts").alias("error_us"),
+        F.round("purchase_value", 2).alias("purchase_value"),
+    )
+    return _to_table(spark, joined, f"purchase_error_{how}", "append")
 
 
 def streaming_purchase_error_join(
@@ -453,66 +531,8 @@ def streaming_purchase_error_join(
     equals the batch interval join EXACTLY — which is what lets the
     DuckDB oracle hash-check the streaming join state machine.
     """
-    land = _landed_events(spark, sf_dir)
-    schema = (
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double"
-    )
-    purchases = (
-        spark.readStream.schema(schema)
-        .parquet(land)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-            "user_id",
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("p_ts", "5 hours")
-    )
-    errors = (
-        spark.readStream.schema(schema)
-        .parquet(land)
-        .filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("ts").alias("e_ts"),
-            F.col("user_id").alias("e_user"),
-        )
-        .withWatermark("e_ts", "5 hours")
-    )
-    joined = purchases.join(
-        errors,
-        (F.col("user_id") == F.col("e_user"))
-        & (F.col("e_ts") >= F.col("p_ts"))
-        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 4 HOURS")),
-    ).select(
-        "user_id",
-        "purchase_id",
-        "error_id",
-        F.unix_micros("p_ts").alias("purchase_us"),
-        F.unix_micros("e_ts").alias("error_us"),
-        F.round("purchase_value", 2).alias("purchase_value"),
-    )
-    sink = f"stream_ss_join_{uuid.uuid4().hex[:8]}"
-    # join state is keyed by user_id — a few hundred keys here; size
-    # the state-store shuffle to it (see streaming_issue_counts)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = log_stream.run_to_memory_sink(joined, sink, output_mode="append")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_purchase_error_join did not finish its"
-                " availableNow batch"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink)
+    return _purchase_error_join(spark, _landed_events(spark, sf_dir), "inner")
 
-
-_LANDED_EVENTS_OUTER: dict[str, str] = {}
 
 #: sentinel event-time lead: far past every real purchase's join
 #: horizon (4 h interval) + watermark delay (5 h), so the final
@@ -532,37 +552,29 @@ def _landed_events_outer(spark: SparkSession, sf_dir: str) -> str:
     Separate from _landed_events: appending sentinels to the shared
     landing dir would leak them into every other streaming query.
     """
-    if sf_dir in _LANDED_EVENTS_OUTER:
-        return _LANDED_EVENTS_OUTER[sf_dir]
-    root = _bridge_workdir("landed_events_outer")
-    base = os.path.join(root, f"events_{uuid.uuid4().hex[:8]}")
-    ev = table(spark, sf_dir, "events").select(
-        "event_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    ev.repartition(2).write.parquet(base)
-    sentinels = (
-        ev.agg(F.max("ts").alias("ts"))
-        .crossJoin(
-            local_frame(spark,
-                [(-1, "purchase"), (-2, "error")],
-                "event_id long, event_type string",
+
+    def write(path: str) -> None:
+        ev = _events_frame(spark, sf_dir)
+        ev.repartition(2).write.parquet(path)
+        sentinels = (
+            ev.agg(F.max("ts").alias("ts"))
+            .crossJoin(
+                local_frame(spark,
+                    [(-1, "purchase"), (-2, "error")],
+                    "event_id long, event_type string",
+                )
+            )
+            .select(
+                "event_id",
+                (F.col("ts") + F.expr(SS_SENTINEL_LEAD)).alias("ts"),
+                F.lit(-1).cast("long").alias("user_id"),
+                "event_type",
+                F.lit(0.0).alias("value"),
             )
         )
-        .select(
-            "event_id",
-            (F.col("ts") + F.expr(SS_SENTINEL_LEAD)).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            "event_type",
-            F.lit(0.0).alias("value"),
-        )
-    )
-    sentinels.coalesce(1).write.mode("append").parquet(base)
-    _LANDED_EVENTS_OUTER[sf_dir] = base
-    return base
+        sentinels.coalesce(1).write.mode("append").parquet(path)
+
+    return _landed("landed_events_outer", sf_dir, write)
 
 
 def streaming_purchase_error_left_join(
@@ -591,64 +603,12 @@ def streaming_purchase_error_left_join(
     load-bearing.
     """
     land = _landed_events_outer(spark, sf_dir)
-    schema = (
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double"
-    )
-    purchases = (
-        spark.readStream.schema(schema)
-        .parquet(land)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-            "user_id",
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("p_ts", "5 hours")
-    )
-    errors = (
-        spark.readStream.schema(schema)
-        .parquet(land)
-        .filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("ts").alias("e_ts"),
-            F.col("user_id").alias("e_user"),
-        )
-        .withWatermark("e_ts", "5 hours")
-    )
-    joined = purchases.join(
-        errors,
-        (F.col("user_id") == F.col("e_user"))
-        & (F.col("e_ts") >= F.col("p_ts"))
-        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 4 HOURS")),
-        "leftOuter",
-    ).select(
-        "user_id",
-        "purchase_id",
-        "error_id",
-        F.unix_micros("p_ts").alias("purchase_us"),
-        F.unix_micros("e_ts").alias("error_us"),
-        F.round("purchase_value", 2).alias("purchase_value"),
-    )
-    sink = f"stream_ss_ljoin_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = log_stream.run_to_memory_sink(joined, sink, output_mode="append")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_purchase_error_left_join did not finish its"
-                " availableNow run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # sentinels are identified by their RESERVED negative event_ids
     # (-1/-2, never assigned to real events) — not by user_id, which
     # the generator owns and could legitimately make negative some day
-    return spark.table(sink).filter(F.col("purchase_id") >= 0)
+    return _purchase_error_join(spark, land, "leftOuter").filter(
+        F.col("purchase_id") >= 0
+    )
 
 
 def streaming_purchase_error_full_join(
@@ -672,61 +632,7 @@ def streaming_purchase_error_full_join(
     non-negative id.
     """
     land = _landed_events_outer(spark, sf_dir)
-    schema = (
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double"
-    )
-    purchases = (
-        spark.readStream.schema(schema)
-        .parquet(land)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-            "user_id",
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("p_ts", "5 hours")
-    )
-    errors = (
-        spark.readStream.schema(schema)
-        .parquet(land)
-        .filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("ts").alias("e_ts"),
-            F.col("user_id").alias("e_user"),
-        )
-        .withWatermark("e_ts", "5 hours")
-    )
-    joined = purchases.join(
-        errors,
-        (F.col("user_id") == F.col("e_user"))
-        & (F.col("e_ts") >= F.col("p_ts"))
-        & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 4 HOURS")),
-        "fullOuter",
-    ).select(
-        F.coalesce("user_id", "e_user").alias("user_id"),
-        "purchase_id",
-        "error_id",
-        F.unix_micros("p_ts").alias("purchase_us"),
-        F.unix_micros("e_ts").alias("error_us"),
-        F.round("purchase_value", 2).alias("purchase_value"),
-    )
-    sink = f"stream_ss_fjoin_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = log_stream.run_to_memory_sink(joined, sink, output_mode="append")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_purchase_error_full_join did not finish its"
-                " availableNow run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).filter(
+    return _purchase_error_join(spark, land, "fullOuter").filter(
         (F.col("purchase_id").isNull() | (F.col("purchase_id") >= 0))
         & (F.col("error_id").isNull() | (F.col("error_id") >= 0))
     )
@@ -765,20 +671,12 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(feed)
     )
-    work = _bridge_workdir("merge_ck")
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch, _epoch: merge_upsert(spark, path, batch)
-        )
-        .option("checkpointLocation", os.path.join(work, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    _foreach_batch(
+        spark,
+        "merge_upsert",
+        stream,
+        lambda batch, _epoch: merge_upsert(spark, path, batch),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "streaming_merge_upsert did not finish its availableNow run"
-        )
     return all_nodes_rollup(read_silver(spark, path))
 
 
@@ -830,21 +728,7 @@ def streaming_percentiles_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             state[et] = (tuple(cm), tuple(cw))
 
-    q = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option(
-            "checkpointLocation",
-            _bridge_workdir("tdigest_ck") + "/ck",
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "streaming_percentiles_tdigest did not finish its"
-            " availableNow run"
-        )
+    _foreach_batch(spark, "percentiles_tdigest", stream, fold_batch)
     rows = []
     for et, (m, w) in state.items():
         cm = np.asarray(m, dtype=np.float64)
@@ -874,8 +758,6 @@ def streaming_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     asof_purchase_before_error's oracle, so the custom stateful
     operator is hash-proven equal to the batch window formulation.
     """
-    import time as _time
-
     from . import asof_state
 
     ev = table(spark, sf_dir, "events").select(
@@ -893,38 +775,13 @@ def streaming_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == "purchase").alias("is_purchase"),
     )
     split = tagged.approxQuantile("epoch", [0.5], 0.0)[0]
-    feed = _bridge_workdir("asof_feed") + "/events"
-    early = os.path.join(feed, "0_early")
-    late = os.path.join(feed, "1_late")
-    tagged.filter(F.col("epoch") < split).repartition(1).write.parquet(early)
-    tagged.filter(F.col("epoch") >= split).repartition(1).write.parquet(late)
-    # the file source replays oldest-mtime-first: pin the early half
-    # strictly older so batch 1 IS the early event-time window
-    now = _time.time()
-    for root, offset in ((early, -120.0), (late, -60.0)):
-        for f in os.listdir(root):
-            p = os.path.join(root, f)
-            os.utime(p, (now + offset, now + offset))
-    stream = (
-        spark.readStream.schema(spark.read.parquet(early).schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
+    feed = _two_file_feed(
+        "asof_feed",
+        tagged.filter(F.col("epoch") < split),
+        tagged.filter(F.col("epoch") >= split),
     )
-    joined = asof_state.streaming_asof(stream)
-    sink = f"stream_asof_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = log_stream.run_to_memory_sink(joined, sink, output_mode="append")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_asof_join did not finish its availableNow run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink)
+    joined = asof_state.streaming_asof(_replay(spark, feed, tagged.schema))
+    return _to_table(spark, joined, "asof_join", "append")
 
 
 #: streaming_topk_tokens: per-batch summary cap + reported top-K.
@@ -993,25 +850,7 @@ def streaming_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             state, [(r.t, r.c) for r in counts.collect()], STREAM_HH_CAP
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .option(
-                "checkpointLocation",
-                _bridge_workdir("topktok_ck") + "/ck",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_topk_tokens did not finish its file feed"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _foreach_batch(spark, "topk_tokens", stream, fold_batch)
     top = sorted(state.items(), key=lambda kv: (-kv[1], kv[0]))
     top = top[:STREAM_HH_TOP_K]
     return local_frame(spark,
@@ -1019,8 +858,6 @@ def streaming_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="t string, c bigint, rk int",
     )
 
-
-_LANDED_DUP_EVENTS: dict[str, str] = {}
 
 #: redelivery fan: every event_id divisible by DUP_MOD lands TWICE —
 #: the deterministic stand-in for an at-least-once event bus
@@ -1032,21 +869,13 @@ def _landed_dup_events(spark: SparkSession, sf_dir: str) -> str:
     (once per sf_dir per process): every DUP_MOD-th event appears in
     two files, byte-identical — what an at-least-once shipper leaves
     behind after a retry."""
-    if sf_dir in _LANDED_DUP_EVENTS:
-        return _LANDED_DUP_EVENTS[sf_dir]
-    root = _bridge_workdir("landed_dup_events")
-    base = os.path.join(root, f"dup_events_{uuid.uuid4().hex[:8]}")
-    ev = table(spark, sf_dir, "events").select(
-        "event_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    dups = ev.filter(F.col("event_id") % DUP_MOD == 0)
-    ev.unionByName(dups).repartition(2).write.parquet(base)
-    _LANDED_DUP_EVENTS[sf_dir] = base
-    return base
+
+    def write(path: str) -> None:
+        ev = _events_frame(spark, sf_dir)
+        dups = ev.filter(F.col("event_id") % DUP_MOD == 0)
+        ev.unionByName(dups).repartition(2).write.parquet(path)
+
+    return _landed("landed_dup_events", sf_dir, write)
 
 
 def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1066,32 +895,14 @@ def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaked duplicate breaks it) and the value sum (a double-count or
     a dropped first sighting breaks it).
     """
-    land = _landed_dup_events(spark, sf_dir)
-    schema = (
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double"
-    )
     deduped = (
-        spark.readStream.schema(schema)
-        .parquet(land)
+        spark.readStream.schema(EVENTS_SCHEMA)
+        .parquet(_landed_dup_events(spark, sf_dir))
         .withWatermark("ts", "3650 days")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    sink = f"stream_dedup_wm_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = log_stream.run_to_memory_sink(deduped, sink, output_mode="append")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_dedup_watermarked did not finish its"
-                " availableNow batch"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        _to_table(spark, deduped, "dedup_watermarked", "append")
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -1119,23 +930,16 @@ def streaming_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     error_cusum_changepoints' oracle: the cross-batch fold must
     produce the batch closed form's EXACT alarm set.
     """
-    import time as _time
-
     from ..operators.analysis import CUSUM_H_MULT, cusum_series
     from ..sources.tables import logs_flagged
 
     series = cusum_series(logs_flagged(spark, sf_dir))
     split = series.approxQuantile("h", [0.5], 0.0)[0]
-    feed = _bridge_workdir("cusum_feed") + "/series"
-    early = os.path.join(feed, "0_early")
-    late = os.path.join(feed, "1_late")
-    series.filter(F.col("h") < split).repartition(1).write.parquet(early)
-    series.filter(F.col("h") >= split).repartition(1).write.parquet(late)
-    now = _time.time()
-    for root, offset in ((early, -120.0), (late, -60.0)):
-        for f in os.listdir(root):
-            p = os.path.join(root, f)
-            os.utime(p, (now + offset, now + offset))
+    feed = _two_file_feed(
+        "cusum_feed",
+        series.filter(F.col("h") < split),
+        series.filter(F.col("h") >= split),
+    )
 
     state: dict[str, tuple[int, int]] = {}
     alarms: list[tuple[str, int, int, int, int]] = []
@@ -1153,27 +957,9 @@ def streaming_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             if s > CUSUM_H_MULT * r.k:
                 alarms.append((r.node, int(r.h), int(r.x), s, int(r.k)))
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(early).schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
+    _foreach_batch(
+        spark, "cusum_alerts", _replay(spark, feed, series.schema), fold_batch
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_cusum_alerts did not finish its availableNow run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return local_frame(spark,
         alarms,
         schema="node string, hour_s long, n_errors long, cusum long,"
@@ -1195,14 +981,12 @@ def streaming_rack_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rack from node parity — a dropped or duplicated enrichment
     row breaks the hash.
     """
-    from ..sources.silver import _default_path, write_node_dim
+    from ..sources.silver import write_node_dim
 
-    dim_path = _default_path(sf_dir) + "_nodedim_stream"
-    # the dim is STATIC — write it once per process (it previously
-    # re-wrote on every call, a build cost charged to the query)
-    if dim_path not in _NODE_DIM_WRITTEN:
-        write_node_dim(spark, dim_path)
-        _NODE_DIM_WRITTEN.add(dim_path)
+    # the dim is STATIC — landed once per process, not once per call
+    dim_path = _landed(
+        "node_dim", sf_dir, lambda path: write_node_dim(spark, path)
+    )
     rack_dim = spark.read.parquet(dim_path)
 
     parsed = _silver_stream(spark, sf_dir)
@@ -1216,19 +1000,7 @@ def streaming_rack_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("n"))
     )
-    sink = f"stream_rack_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = log_stream.run_to_memory_sink(counts, sink, output_mode="complete")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_rack_counts did not finish its availableNow batch"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).select(
+    return _to_table(spark, counts, "rack_counts", "complete").select(
         F.date_format("win.start", "yyyy-MM-dd HH:00:00").alias("hour"),
         "rack",
         "level",
@@ -1285,21 +1057,7 @@ def streaming_dlq_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         "line_id long, node string, raw string"
     ).parquet(land)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(route)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_dlq_counts did not finish its availableNow run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _foreach_batch(spark, "dlq_counts", stream, route)
     ok = (
         spark.read.parquet(main_out)
         .groupBy("node")
@@ -1344,8 +1102,6 @@ def streaming_trend_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fold must land the batch closed form's EXACT integer
     numerator/denominator per node.
     """
-    import time as _time
-
     from ..operators.analysis import trend_from_moments
     from ..sources.tables import logs_flagged
 
@@ -1366,16 +1122,11 @@ def streaming_trend_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     split = med[0]
-    feed = _bridge_workdir("trend_feed") + "/errors"
-    early = os.path.join(feed, "0_early")
-    late = os.path.join(feed, "1_late")
-    lines.filter(F.col("t") < split).repartition(1).write.parquet(early)
-    lines.filter(F.col("t") >= split).repartition(1).write.parquet(late)
-    now = _time.time()
-    for root, offset in ((early, -120.0), (late, -60.0)):
-        for f in os.listdir(root):
-            p = os.path.join(root, f)
-            os.utime(p, (now + offset, now + offset))
+    feed = _two_file_feed(
+        "trend_feed",
+        lines.filter(F.col("t") < split),
+        lines.filter(F.col("t") >= split),
+    )
 
     # node -> [t0, t1, sy, sty]
     state: dict[str, list[int]] = {}
@@ -1394,24 +1145,12 @@ def streaming_trend_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             s[2] += r.sy
             s[3] += r.sty
 
-    stream = spark.readStream.schema("node string, t long").option(
-        "maxFilesPerTrigger", "1"
-    ).option("recursiveFileLookup", "true").parquet(feed)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_trend_state did not finish its availableNow run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _foreach_batch(
+        spark,
+        "trend_state",
+        _replay(spark, feed, "node string, t long"),
+        fold_batch,
+    )
     moments = local_frame(spark,
         [(n, s[0], s[1], s[2], s[3]) for n, s in sorted(state.items())],
         schema="node string, t0 long, t1 long, sy long, sty long",
@@ -1439,8 +1178,6 @@ def streaming_mannkendall_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fold must land the batch test's exact integers (S, pair
     count, tie-corrected variance numerator) per node.
     """
-    import time as _time
-
     from ..operators.analysis import mannkendall_from_daily
     from ..sources.tables import logs_flagged
 
@@ -1461,16 +1198,11 @@ def streaming_mannkendall_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             local_frame(spark, [], "node string, d long, x long")
         )
     split = med[0]
-    feed = _bridge_workdir("mk_feed") + "/errors"
-    early = os.path.join(feed, "0_early")
-    late = os.path.join(feed, "1_late")
-    lines.filter(F.col("t") < split).repartition(1).write.parquet(early)
-    lines.filter(F.col("t") >= split).repartition(1).write.parquet(late)
-    now = _time.time()
-    for root, offset in ((early, -120.0), (late, -60.0)):
-        for f in os.listdir(root):
-            p = os.path.join(root, f)
-            os.utime(p, (now + offset, now + offset))
+    feed = _two_file_feed(
+        "mk_feed",
+        lines.filter(F.col("t") < split),
+        lines.filter(F.col("t") >= split),
+    )
 
     # node -> [t_min, t_max, {day: count}]
     state: dict[str, list] = {}
@@ -1490,24 +1222,12 @@ def streaming_mannkendall_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             s[1] = max(s[1], r.t1)
             s[2][r.d] = s[2].get(r.d, 0) + r.c
 
-    stream = spark.readStream.schema("node string, t long").option(
-        "maxFilesPerTrigger", "1"
-    ).option("recursiveFileLookup", "true").parquet(feed)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_mannkendall_state did not finish its availableNow run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _foreach_batch(
+        spark,
+        "mannkendall_state",
+        _replay(spark, feed, "node string, t long"),
+        fold_batch,
+    )
     rows = []
     for node, (t0, t1, cnt) in sorted(state.items()):
         for d in range(t0 // 24, t1 // 24 + 1):
@@ -1529,25 +1249,14 @@ def streaming_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold must land the batch sketch's exact integers (n_kept,
     kth_hash, estimate) per event type.
     """
-    import time as _time
-
     from ..operators.analytics import KMV_K, KMV_SPACE
-    from ..sources.tables import table
 
     ev = table(spark, sf_dir, "events").select("event_type", "user_id")
-    feed = _bridge_workdir("kmv_feed") + "/events"
-    early = os.path.join(feed, "0_even")
-    late = os.path.join(feed, "1_odd")
-    ev.filter(F.pmod("user_id", F.lit(2)) == 0).repartition(1).write.parquet(
-        early
+    feed = _two_file_feed(
+        "kmv_feed",
+        ev.filter(F.pmod("user_id", F.lit(2)) == 0),
+        ev.filter(F.pmod("user_id", F.lit(2)) == 1),
     )
-    ev.filter(F.pmod("user_id", F.lit(2)) == 1).repartition(1).write.parquet(
-        late
-    )
-    now = _time.time()
-    for root, offset in ((early, -120.0), (late, -60.0)):
-        for f in os.listdir(root):
-            os.utime(os.path.join(root, f), (now + offset, now + offset))
 
     # event_type -> sorted list of (h, user_id), ≤ K entries
     state: dict[str, list[tuple[int, int]]] = {}
@@ -1579,24 +1288,12 @@ def streaming_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         for t in state:
             state[t] = sorted(set(state[t]))[:KMV_K]
 
-    stream = spark.readStream.schema("event_type string, user_id long").option(
-        "maxFilesPerTrigger", "1"
-    ).option("recursiveFileLookup", "true").parquet(feed)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_kmv_state did not finish its availableNow run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _foreach_batch(
+        spark,
+        "kmv_state",
+        _replay(spark, feed, "event_type string, user_id long"),
+        fold_batch,
+    )
     # n_true is the report's evaluation harness, not sketch state —
     # computed distributively from the landed feed, never driver sets
     truth = {
@@ -1636,8 +1333,6 @@ def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shares priority_sample's oracle: the fold must land the batch
     sampler's exact rows and ranks.
     """
-    import time as _time
-
     from ..operators.curation import PRIORITY_SALT, PRIORITY_SAMPLE_K
     from ..functions.texts import tokens_col
     from ..sources.tables import documents
@@ -1662,19 +1357,11 @@ def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("u"),
     )
-    feed = _bridge_workdir("prio_feed") + "/docs"
-    early = os.path.join(feed, "0_even")
-    late = os.path.join(feed, "1_odd")
-    d.filter(F.pmod("doc_id", F.lit(2)) == 0).repartition(1).write.parquet(
-        early
+    feed = _two_file_feed(
+        "prio_feed",
+        d.filter(F.pmod("doc_id", F.lit(2)) == 0),
+        d.filter(F.pmod("doc_id", F.lit(2)) == 1),
     )
-    d.filter(F.pmod("doc_id", F.lit(2)) == 1).repartition(1).write.parquet(
-        late
-    )
-    now = _time.time()
-    for root, offset in ((early, -120.0), (late, -60.0)):
-        for f in os.listdir(root):
-            os.utime(os.path.join(root, f), (now + offset, now + offset))
 
     # bottom-K state: sorted (priority, doc_id, source, n_tokens)
     state: list[tuple[float, int, str, int]] = []
@@ -1697,21 +1384,12 @@ def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.sort()
         del state[PRIORITY_SAMPLE_K:]
 
-    stream = spark.readStream.schema(
-        "doc_id long, source string, n_tokens long, u long"
-    ).option("maxFilesPerTrigger", "1").option(
-        "recursiveFileLookup", "true"
-    ).parquet(feed)
-    q = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
-        .start()
+    _foreach_batch(
+        spark,
+        "priority_sample",
+        _replay(spark, feed, "doc_id long, source string, n_tokens long, u long"),
+        fold_batch,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "streaming_priority_sample did not finish its availableNow run"
-        )
     rows = [
         (doc_id, source, n_tokens, priority, i + 1)
         for i, (priority, doc_id, source, n_tokens) in enumerate(state)
@@ -1737,8 +1415,6 @@ def streaming_funnel_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted. Shares funnel_time_bounded's oracle: the state machine
     must land the batch windows' exact stage counts and per-milles.
     """
-    import time as _time
-
     from collections.abc import Iterator
 
     import pandas as pd
@@ -1752,7 +1428,6 @@ def streaming_funnel_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         FUNNEL_CLICK_W_US,
         FUNNEL_PURCH_W_US,
     )
-    from ..sources.tables import table
 
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros("ts").alias("us")
@@ -1760,15 +1435,11 @@ def streaming_funnel_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = ev.agg(
         ((F.min("us") + F.max("us")) / 2).cast("long").alias("m")
     ).collect()[0].m
-    feed = _bridge_workdir("funnel_feed") + "/events"
-    early = os.path.join(feed, "0_first")
-    late = os.path.join(feed, "1_second")
-    ev.filter(F.col("us") < mid).repartition(1).write.parquet(early)
-    ev.filter(F.col("us") >= mid).repartition(1).write.parquet(late)
-    now = _time.time()
-    for root, offset in ((early, -120.0), (late, -60.0)):
-        for f in os.listdir(root):
-            os.utime(os.path.join(root, f), (now + offset, now + offset))
+    feed = _two_file_feed(
+        "funnel_feed",
+        ev.filter(F.col("us") < mid),
+        ev.filter(F.col("us") >= mid),
+    )
 
     out_schema = StructType(
         [
@@ -1830,11 +1501,9 @@ def streaming_funnel_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             columns=["user_id", "v", "c", "p"],
         )
 
-    stream = spark.readStream.schema(
-        "event_id long, user_id long, event_type string, us long"
-    ).option("maxFilesPerTrigger", "1").option(
-        "recursiveFileLookup", "true"
-    ).parquet(feed)
+    stream = _replay(
+        spark, feed, "event_id long, user_id long, event_type string, us long"
+    )
     updated = stream.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=out_schema,
@@ -1842,23 +1511,10 @@ def streaming_funnel_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = f"stream_funnel_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = log_stream.run_to_memory_sink(
-            updated, sink, output_mode="update"
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_funnel_state did not finish its availableNow"
-                " run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    flags = spark.table(sink).groupBy("user_id").agg(
-        F.max("v").alias("v"), F.max("c").alias("c"), F.max("p").alias("p")
+    flags = (
+        _to_table(spark, updated, "funnel_state", "update")
+        .groupBy("user_id")
+        .agg(F.max("v").alias("v"), F.max("c").alias("c"), F.max("p").alias("p"))
     )
     agg = flags.agg(
         F.sum("v").alias("nv"), F.sum("c").alias("nc"), F.sum("p").alias("np")
@@ -1923,24 +1579,16 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(F.count("*").alias("n"))
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                stream.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise TimeoutError(
-                    "streaming_late_data_drop run did not finish"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        _run(
+            spark,
+            "late_data_drop",
+            lambda: stream.writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start(),
+        )
 
     ev.filter(F.col("ts") >= fresh_cut).repartition(1).write.mode(
         "append"
@@ -1984,26 +1632,16 @@ def streaming_f2_ams(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch sketch's exact integers (every S_r, every S_r², and the
     exact F2 recomputed distributively from the landed feed).
     """
-    import time as _time
-
     from ..functions.texts import tokens_col
     from ..operators.textops import AMS_R
     from ..sources.tables import documents
 
     d = documents(spark, sf_dir).select("doc_id", "text")
-    feed = _bridge_workdir("ams_feed") + "/docs"
-    early = os.path.join(feed, "0_even")
-    late = os.path.join(feed, "1_odd")
-    d.filter(F.pmod("doc_id", F.lit(2)) == 0).repartition(1).write.parquet(
-        early
+    feed = _two_file_feed(
+        "ams_feed",
+        d.filter(F.pmod("doc_id", F.lit(2)) == 0),
+        d.filter(F.pmod("doc_id", F.lit(2)) == 1),
     )
-    d.filter(F.pmod("doc_id", F.lit(2)) == 1).repartition(1).write.parquet(
-        late
-    )
-    now = _time.time()
-    for root, offset in ((early, -120.0), (late, -60.0)):
-        for f in os.listdir(root):
-            os.utime(os.path.join(root, f), (now + offset, now + offset))
 
     state = [0] * AMS_R
 
@@ -2036,27 +1674,12 @@ def streaming_f2_ams(spark: SparkSession, sf_dir: str) -> DataFrame:
         for row in per_r:
             state[row.r] += row.s_r
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
+    _foreach_batch(
+        spark,
+        "f2_ams",
+        _replay(spark, feed, "doc_id long, text string"),
+        fold_batch,
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_f2_ams did not finish its availableNow run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # exact F2 is the report's evaluation column, recomputed
     # distributively from the landed feed — never a driver-side count
     f2 = (
@@ -2091,8 +1714,6 @@ def streaming_seasonal_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-state argument as the CUSUM/trend folds; each batch
     reduces distributively to its partial rollup before the collect.
     """
-    import time as _time
-
     from ..operators.analysis import (
         seasonal_mad_from_series,
         zero_fill_hourly,
@@ -2124,19 +1745,11 @@ def streaming_seasonal_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("p"),
         )
     )
-    feed = _bridge_workdir("smad_feed") + "/errs"
-    even = os.path.join(feed, "0_even")
-    odd = os.path.join(feed, "1_odd")
-    errs.filter(F.pmod("p", F.lit(2)) == 0).select("node", "h").repartition(
-        1
-    ).write.parquet(even)
-    errs.filter(F.pmod("p", F.lit(2)) == 1).select("node", "h").repartition(
-        1
-    ).write.parquet(odd)
-    now = _time.time()
-    for root, offset in ((even, -120.0), (odd, -60.0)):
-        for f in os.listdir(root):
-            os.utime(os.path.join(root, f), (now + offset, now + offset))
+    feed = _two_file_feed(
+        "smad_feed",
+        errs.filter(F.pmod("p", F.lit(2)) == 0).select("node", "h"),
+        errs.filter(F.pmod("p", F.lit(2)) == 1).select("node", "h"),
+    )
 
     state: dict[tuple[str, int], int] = {}
 
@@ -2145,27 +1758,12 @@ def streaming_seasonal_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             key = (r.node, r.h)
             state[key] = state.get(key, 0) + r["count"]
 
-    stream = (
-        spark.readStream.schema("node string, h long")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
+    _foreach_batch(
+        spark,
+        "seasonal_mad",
+        _replay(spark, feed, "node string, h long"),
+        fold_batch,
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "streaming_seasonal_mad did not finish its availableNow run"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     hourly = local_frame(spark,
         [(n, h, x) for (n, h), x in sorted(state.items())],
         schema="node string, h long, x long",

@@ -747,3 +747,95 @@ def test_mk_and_trend_bridges_degrade_on_empty_error_stream(
     assert mk.count() == 0
     tr = batch_bridge.streaming_trend_state(spark, "ignored")
     assert tr.count() == 0
+
+
+_RUN_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.checkpointLocation",
+)
+
+
+def test_bridge_run_stops_and_restores_confs_when_batch_fails(
+    spark, tmp_path
+):
+    """A failing foreachBatch re-raises through the bridge runner, and
+    the runner leaves no active query and both session confs as they
+    were."""
+    from cassandra_log_analyzer_mcp_spark.streaming import batch_bridge
+
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    before = {k: spark.conf.get(k, None) for k in _RUN_CONFS}
+
+    def boom(_batch, _epoch):
+        raise ValueError("bridge batch failed")
+
+    stream = spark.readStream.schema("id long").parquet(src)
+    with pytest.raises(Exception, match="bridge batch failed"):
+        batch_bridge._run(
+            spark,
+            "failing_bridge",
+            lambda: stream.writeStream.foreachBatch(boom)
+            .trigger(availableNow=True)
+            .start(),
+        )
+    assert spark.streams.active == []
+    assert {k: spark.conf.get(k, None) for k in _RUN_CONFS} == before
+
+
+def test_bridge_run_times_out_stops_and_restores_confs(spark):
+    """A query that does not finish in time raises TimeoutError naming
+    the bridge, is stopped, and both confs are restored; while it ran,
+    the runner's state width and checkpoint root were in force."""
+    from cassandra_log_analyzer_mcp_spark.streaming import batch_bridge
+
+    class StalledQuery:
+        stopped = False
+
+        def awaitTermination(self, _timeout):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = StalledQuery()
+    seen = {}
+
+    def start():
+        seen.update({k: spark.conf.get(k, None) for k in _RUN_CONFS})
+        return q
+
+    before = {k: spark.conf.get(k, None) for k in _RUN_CONFS}
+    with pytest.raises(TimeoutError, match="stalled_bridge"):
+        batch_bridge._run(spark, "stalled_bridge", start)
+    assert q.stopped
+    assert {k: spark.conf.get(k, None) for k in _RUN_CONFS} == before
+    assert seen["spark.sql.shuffle.partitions"] == batch_bridge.STATE_PARTITIONS
+    assert seen["spark.sql.streaming.checkpointLocation"].startswith(
+        batch_bridge._WORK_ROOT
+    )
+
+
+def test_two_file_feed_replays_first_half_as_first_batch(spark):
+    """The ordering every two-file replay bridge rests on: exactly two
+    non-empty micro-batches, the first half's rows in batch one."""
+    from cassandra_log_analyzer_mcp_spark.streaming import batch_bridge
+
+    ids = spark.range(6)
+    feed = batch_bridge._two_file_feed(
+        "replay_order", ids.filter("id < 3"), ids.filter("id >= 3")
+    )
+    batches = []
+
+    def record(batch, _epoch):
+        batches.append(sorted(r.id for r in batch.collect()))
+
+    stream = batch_bridge._replay(spark, feed, "id long")
+    batch_bridge._run(
+        spark,
+        "replay_order",
+        lambda: stream.writeStream.foreachBatch(record)
+        .trigger(availableNow=True)
+        .start(),
+    )
+    assert [b for b in batches if b] == [[0, 1, 2], [3, 4, 5]]

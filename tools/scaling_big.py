@@ -24,6 +24,7 @@ PASS per family = wall ratio <= measured candidate ratio x 1.6
 either way.
 
 Usage: python tools/scaling_big.py [out_json]
+       (default ``plans/SCALING_BIG.json``, git-ignored)
        python tools/scaling_big.py --leg <scale> <leg_json>  (internal)
 """
 
@@ -283,8 +284,9 @@ def main() -> None:
         run_leg(int(sys.argv[2]), sys.argv[3])
         return
     out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        REPO, "SCALING_BIG_r10.json"
+        REPO, "plans", "SCALING_BIG.json"
     )
+    os.makedirs(os.path.dirname(os.path.abspath(out_path)), exist_ok=True)
     legs: dict[int, dict] = {}
     for scale in SCALES:
         leg_path = f"/tmp/scaling_big_leg_s{scale}.json"

@@ -3,8 +3,9 @@
 
 Runs ``bench.py`` as a subprocess per (slate, sf_dir) leg — three
 clean processes per slate, back-to-back in ONE measurement window,
-single process at a time — and writes SCALING_SF1_r{N}.json with the
-per-leg query timings and the decade step ratios. Two slates:
+single process at a time — and writes the per-leg query timings and
+the decade step ratios to ``plans/SCALING_SF1.json`` (git-ignored;
+pass ``out_json`` to write elsewhere). Two slates:
 
 - ``headline20``: round 8's exact 20-query slate (comparable row).
 - ``wide43``: the round-9 CHECK_SF1_r09 gate slate — the widened
@@ -103,8 +104,9 @@ def run_leg(slate: list[str], sf_dir: str) -> dict:
 
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        REPO, "SCALING_SF1_r09.json"
+        REPO, "plans", "SCALING_SF1.json"
     )
+    os.makedirs(os.path.dirname(os.path.abspath(out_path)), exist_ok=True)
     out: dict = {
         "protocol": (
             "one measurement window, clean bench.py subprocess per "
