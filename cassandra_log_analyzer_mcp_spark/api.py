@@ -36,7 +36,6 @@ depend on their arguments and still scan the layer on every call.
 from __future__ import annotations
 
 import os
-import tempfile
 import weakref
 
 from pyspark import StorageLevel
@@ -44,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.frames import local_frame
+from .memo import work_dir
 from .functions.parsing import (
     ALL_PATTERNS,
     RECOMMENDATION_RULES,
@@ -74,7 +74,7 @@ class LogStore:
         """Parity with the reference's manual load_logs tool (ref
         :724-736): land pasted content to a local staging dir."""
         if self._paste_dir is None:
-            self._paste_dir = tempfile.mkdtemp(prefix="logstore_")
+            self._paste_dir = work_dir("logstore")
             self._globs.append(f"{self._paste_dir}/*/*.log")
         d = os.path.join(self._paste_dir, node_name)
         os.makedirs(d, exist_ok=True)
@@ -131,9 +131,8 @@ class LogStore:
         return self._layer
 
     def nodes(self) -> list[str]:
-        return [
-            r.node for r in self.lines().select("node").distinct().collect()
-        ]
+        """The nodes of the store's layer, from its "nodes" rollup."""
+        return sorted(r.node for r in _rollup(self.flagged(), "nodes"))
 
 
 def _cluster_markdown(summary, issues, recs) -> str:

@@ -24,6 +24,7 @@ from ..sources.tables import documents
 from .dedup import dedup_exact
 from .textops import lang_pred_case, quality_cols
 from ..functions.frames import local_frame
+from ..memo import work_dir
 
 QUALITY_MIN = 0.5
 TOKENS_MIN = 15
@@ -653,14 +654,9 @@ def jsonl_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one writer task per shard — the silver layer's small-file
     lesson), and the rollup reads only shard/text/source columns.
     """
-    import os
-    import tempfile
-
     docs = documents(spark, sf_dir).select("doc_id", "text", "source")
     shards = corpus_shuffle(spark, sf_dir).select("doc_id", "shard")
-    path = os.path.join(
-        tempfile.mkdtemp(prefix=f"jsonl_export_{os.getpid()}_"), "shards"
-    )
+    path = work_dir("jsonl_export") + "/shards"
     (
         docs.join(shards, "doc_id")
         .repartition("shard")

@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from ..functions.texts import shingles_col, tokens_col
 from ..sources.tables import documents
+from ..memo import memoized, work_dir, work_path
 from .bigscale import BIG_SCALE
 from ..functions.frames import local_frame
 
@@ -799,17 +800,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     )
 
 
-#: component labels memo, keyed (session, sf_dir) — FIVE registry
-#: queries (clusters, histogram, canonical, soft_weights, the shift
-#: report via canonical) consume the same label table, and each
-#: otherwise re-runs the whole large-star/small-star driver loop
-#: (round-structured jobs whose cost is iteration overhead, not data).
-#: Same build-once lifecycle as _KMEANS_CACHE (the 100 TB analogue is
-#: a written cluster-id table); cleared by session.clear_caches with
-#: the other module memos.
-_CC_LABELS_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@memoized
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters: MinHash-LSH verified pairs → connected
     components → (doc_id, cluster_id, cluster_size).
@@ -817,15 +808,14 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The step a real curation pipeline needs after pairwise dedup:
     near-duplication is transitive in effect (a~b, b~c ⇒ keep one of
     {a,b,c}), so keepers must be chosen per component, not per pair.
+    Built and cached once per (session, sf_dir): five registry queries
+    (clusters, histogram, canonical, soft_weights, the shift report
+    via canonical) read the same labels, and each would otherwise
+    re-run the whole large-star/small-star driver loop, whose cost is
+    iteration overhead, not data.
     """
-    key = (id(spark), sf_dir)
-    memo = _CC_LABELS_MEMO.get(key)
-    if memo is not None:
-        return memo
     pairs = dedup_minhash_lsh(spark, sf_dir).select("da", "db")
-    labels = connected_components(pairs).cache()
-    _CC_LABELS_MEMO[key] = labels
-    return labels
+    return connected_components(pairs).cache()
 
 
 def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1731,28 +1721,19 @@ def minhash_bbit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: per-(session, sf_dir) memo for the sampled truth build (ADVICE r5):
-#: makes the cross-query reuse EXPLICIT instead of relying on
-#: CacheManager canonical-plan matching, and bounds residency to one
-#: cached frame per sf_dir per session (pair cardinality — tiny).
-#: Keyed by (id(spark), sf_dir) like _KMEANS_CACHE (ADVICE r6): a
-#: stopped-and-recreated in-process session must not be handed a
-#: DataFrame bound to the dead one.
-_TRUTH_PAIRS_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
+@memoized
 def _sampled_truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exhaustive near-dup truth on the pr-eval sample frame: every
     pair of SAMPLED docs sharing any shingle, exact-Jaccard verified
     at the shared threshold. The scale contract both evals ride:
-    the inverted-index self-join only ever sees sampled docs."""
-    memo = _TRUTH_PAIRS_MEMO.get((id(spark), sf_dir))
-    if memo is not None:
-        return memo
+    the inverted-index self-join only ever sees sampled docs.
+
+    Memoized per (session, sf_dir), so the pr-eval and band-tuning
+    queries share one cached build explicitly rather than through
+    CacheManager plan matching; it holds pair cardinality, tiny."""
     arrs = _doc_shingle_arrays(spark, sf_dir)
     sh = _doc_shingles(spark, sf_dir).filter(_pr_eval_sampled("doc_id"))
-    # NOTE (round 10): the _bucket_pairs fold was tried here and
-    # measured ~8% SLOWER — the shingle subtree is a cached-array
+    # the _bucket_pairs fold was tried here and measured ~8% SLOWER — the shingle subtree is a cached-array
     # explode (cheap, and the self-join's two sides share one
     # ReusedExchange), while shingle buckets are mostly occupancy-1,
     # so the fold only adds collect_list/sort overhead. The fold wins
@@ -1764,17 +1745,12 @@ def _sampled_truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("da", "db")
         .distinct()
     )
-    truth = (
+    return (
         _verified_pairs(arrs, cand_all)
         .filter(F.col("jaccard") >= MINHASH_VERIFY_MIN)
         .select("da", "db")
-        # the pr-eval and band-tuning queries share one truth build
-        # per session instead of re-running the sampled
-        # inverted-index join — pair-cardinality, tiny residency
         .cache()
     )
-    _TRUTH_PAIRS_MEMO[(id(spark), sf_dir)] = truth
-    return truth
 
 
 def minhash_dedup_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2410,10 +2386,6 @@ BIG_DOC_LEN_SPAN = 40
 #: across the LSH S-curve: ~0.89 at 20‰ down to ~0.08 at 400‰.
 BIG_DOC_MUT_PERMILLE = {1: 20, 2: 50, 3: 100, 4: 200, 5: 400}
 
-_BIG_DOC_DIRS: dict[int, str] = {}
-_BIG_DOC_ARRS_MEMO: dict[int, DataFrame] = {}
-
-
 def _h6d(s: F.Column) -> F.Column:
     """First 6 md5 hex chars as a 24-bit integer (the repo's standard
     engine-replayable hash-to-int recipe, similarity.py:572)."""
@@ -2422,15 +2394,10 @@ def _h6d(s: F.Column) -> F.Column:
 
 def _big_documents_dir(spark: SparkSession) -> str:
     """Generate-once location of the big drop (documents.parquet in
-    the shipped schema's core columns: doc_id long, text string).
-    PID-scoped like the big-embeddings dir."""
-    import os
-
-    pid = os.getpid()
-    d = _BIG_DOC_DIRS.get(pid)
-    if d is not None:
-        return d
-    d = f"/tmp/spark_graft_bigdocs_{pid}_s{BIG_SCALE}"
+    the shipped schema's core columns: doc_id long, text string),
+    under the process work root; the parquet's _SUCCESS marker says
+    it is already written."""
+    d = work_path(f"bigdocs_s{BIG_SCALE}")
     marker = os.path.join(d, "documents.parquet", "_SUCCESS")
     if not os.path.exists(marker):
         r = F.col("id") % BIG_DOC_GROUP
@@ -2479,25 +2446,20 @@ def _big_documents_dir(spark: SparkSession) -> str:
             .write.mode("overwrite")
             .parquet(os.path.join(d, "documents.parquet"))
         )
-    _BIG_DOC_DIRS[pid] = d
     return d
 
 
+@memoized
 def _big_doc_arrs(spark: SparkSession) -> DataFrame:
     """Cached distinct-shingle arrays over the big drop — the shared
     substrate both big-dedup queries fold (same shape as
     _doc_shingle_arrays; ~60 MB cached, inside the census budget)."""
-    memo = _BIG_DOC_ARRS_MEMO.get(id(spark))
-    if memo is not None:
-        return memo
     d = _big_documents_dir(spark)
     docs = spark.read.parquet(f"{d}/documents.parquet")
-    arrs = docs.select(
+    return docs.select(
         "doc_id",
         F.array_distinct(shingles_col(tokens_col(), SHINGLE_K)).alias("arr"),
     ).cache()
-    _BIG_DOC_ARRS_MEMO[id(spark)] = arrs
-    return arrs
 
 
 def _big_planted_pairs(spark: SparkSession) -> DataFrame:
@@ -2790,9 +2752,7 @@ SEM_BIG_BAND_BITS = 12
 #: the JACCARD_NUM/DEN discipline applied to cosine
 SEM_BIG_COS_NUM, SEM_BIG_COS_DEN = 3, 4
 
-_BIG_DOC_EMB_MEMO: dict[int, DataFrame] = {}
-
-
+@memoized
 def _big_doc_embeddings(spark: SparkSession) -> DataFrame:
     """Cached (doc_id, emb array<long>, n2 long) — a hashed-sign
     bag-of-tokens embedding of the big drop's ACTUAL text (feature
@@ -2810,9 +2770,6 @@ def _big_doc_embeddings(spark: SparkSession) -> DataFrame:
     combined 64-way sums per doc — no join, no shuffle beyond the
     50k-group aggregation. ~26 MB cached (64×8B per doc).
     """
-    memo = _BIG_DOC_EMB_MEMO.get(id(spark))
-    if memo is not None:
-        return memo
     d = _big_documents_dir(spark)
     docs = spark.read.parquet(f"{d}/documents.parquet")
     toks = docs.select(
@@ -2838,7 +2795,7 @@ def _big_doc_embeddings(spark: SparkSession) -> DataFrame:
         .alias(f"e{j}")
         for j in range(SEM_BIG_DIM)
     ]
-    emb = (
+    return (
         h.groupBy("doc_id")
         .agg(*sums)
         .select(
@@ -2858,8 +2815,6 @@ def _big_doc_embeddings(spark: SparkSession) -> DataFrame:
         )
         .cache()
     )
-    _BIG_DOC_EMB_MEMO[id(spark)] = emb
-    return emb
 
 
 def _sem_band_buckets(emb: DataFrame) -> DataFrame:
@@ -2901,22 +2856,14 @@ def _sem_band_buckets(emb: DataFrame) -> DataFrame:
              F.col("bb.bucket").alias("bucket"))
 
 
-#: memoized CACHED bucket frame per session — building the 48-plane
-#: projection Column tree costs ~3.2 s of pure DRIVER time (py4j
-#: expression construction, measured round 10: no job runs), paid on
-#: every call; the two big-regime consumers (census + recall) now
-#: share one construction and one cache entry. Cleared with the other
-#: module memos by session.clear_caches.
-_SEM_BUCKETS_MEMO: dict[int, DataFrame] = {}
-
-
+@memoized
 def _sem_band_buckets_cached(spark: SparkSession) -> DataFrame:
-    memo = _SEM_BUCKETS_MEMO.get(id(spark))
-    if memo is not None:
-        return memo
-    buckets = _sem_band_buckets(_big_doc_embeddings(spark)).cache()
-    _SEM_BUCKETS_MEMO[id(spark)] = buckets
-    return buckets
+    """The bucket frame, built and cached once per session: the
+    48-plane projection Column tree costs ~3.2 s of driver time (py4j
+    expression construction, no job runs), so the two big-regime
+    consumers (census + recall) share one construction and one cache
+    entry."""
+    return _sem_band_buckets(_big_doc_embeddings(spark)).cache()
 
 
 def _sem_band_probes(buckets: DataFrame) -> DataFrame:
@@ -3200,7 +3147,7 @@ def bucketed_digest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange. The merge hint keeps the strategy the one a real-scale
     run uses (neither side of a 100 TB dedup join broadcasts).
     """
-    from ..sources.bucketed import bucket_workdir, write_bucketed
+    from ..sources.bucketed import write_bucketed
 
     norm = F.trim(
         F.regexp_replace(F.lower("text"), NORM_STRIP_REGEX, " ")
@@ -3212,7 +3159,7 @@ def bucketed_digest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"docs_digest_b_{os.getpid()}_{slug}"
     write_bucketed(
         base, name, "digest", n_buckets=8, sort_col="digest",
-        path=bucket_workdir(name),
+        path=work_dir(name),
     )
     back = spark.table(name)
     ledger = back.groupBy("digest").agg(

@@ -27,6 +27,7 @@ from ..functions.texts import (
 )
 from ..sources.tables import documents, table
 from ..functions.frames import local_frame
+from ..memo import memoized, work_path
 
 FINGERPRINT_K = 5
 VOCAB_TOP_K = 100
@@ -1149,20 +1150,15 @@ def vocab_top_tokens_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_N_MERGES = 8
 
 
-_BPE_CACHE: dict[tuple[int, str], tuple] = {}
-
-
+@memoized
 def _bpe_learn(spark: SparkSession, sf_dir: str):
     """Shared BPE training loop → (merge list, final symbol table),
     memoized per (session, sf_dir): train-once/encode-many is the
     tokenizer lifecycle's whole point — bpe_encode must not pay the
-    8-round training loop again (the final symbol table survives as
-    localCheckpointed blocks for the session's lifetime; released by
-    session.clear_caches' checkpoint cleanup semantics on teardown).
-    See bpe_train_merges for the full design discussion."""
-    key = (id(spark), sf_dir)
-    if key in _BPE_CACHE:
-        return _BPE_CACHE[key]
+    8-round training loop again. The final symbol table lives as
+    localCheckpointed blocks until session.clear_caches releases them
+    together with this memo. See bpe_train_merges for the full design
+    discussion."""
     docs = (
         documents(spark, sf_dir)
         .select("doc_id", tokens_col().alias("toks"))
@@ -1200,7 +1196,6 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
                     ELSE concat(acc, array(x)) END)"""
             ).alias("toks"),
         ).localCheckpoint()
-    _BPE_CACHE[key] = (merges, docs)
     return merges, docs
 
 
@@ -1618,13 +1613,7 @@ def phrase_search_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     position-set formulation (unlike a regex) counts OVERLAPPING
     occurrences correctly.
     """
-    import os
-
-    path = os.path.join(
-        "/tmp",
-        f"spark_graft_postings_{os.getpid()}_"
-        + os.path.basename(sf_dir.rstrip("/")).replace(".", "_"),
-    )
+    path = work_path("postings", sf_dir)
     build_postings(spark, sf_dir, path)
     terms = sorted({w for p in SEARCH_PHRASES for w in p})
     idx = (

@@ -75,8 +75,8 @@ def tune(spark: SparkSession) -> SparkSession:
 
 def clear_caches(spark: SparkSession) -> None:
     """Release every byte this package parked in the session: cached
-    DataFrame blocks, streaming memory-sink tables, and the module
-    memos that hand out cached frames.
+    DataFrame blocks, streaming memory-sink tables, and the session
+    memo that hands out cached frames and landed paths.
 
     Operators cache session-scoped on purpose (CacheManager dedupes
     identical plans, so a gate sweep holds one entry per distinct
@@ -85,39 +85,31 @@ def clear_caches(spark: SparkSession) -> None:
     explicit lifecycle hook for that deployment: call it between
     analyses (the MCP server exposes it as a tool).
 
-    Three layers (round 7 — the r6 driver-heap OOM showed they add up
-    silently; tools/cache_census.py measures them against a budget):
+    The layers add up silently (tools/cache_census.py measures them
+    against a budget), so all of them go together:
 
     - catalog.clearCache() drops all cached blocks in one call;
     - the streaming bridges' memory sinks are driver-resident temp
       views (``stream_*``) — dropped by name;
-    - the module memos (k-means assignment/state, sampled truth
-      pairs, BPE fold, big-ANN index, the tool surface's per-layer
-      rollups) must be cleared WITH the blocks: a memo handing out a
-      frame whose cache entry was just dropped would silently
-      recompute-per-use instead of re-caching, and a rollup would
-      outlive the cached layer it was collected from.
-    Everything is rebuilt on demand by the next query.
+    - ``memo.clear()`` drops every memo entry (k-means assignment and
+      state, sampled truth pairs, component labels, BPE fold, big-ANN
+      and big-dedup state, silver and landing paths) and
+      ``api._ROLLUPS`` the tool surface's per-layer rollups. A memo
+      handing out a frame whose cache entry was just dropped would
+      silently recompute per use instead of re-caching, and a rollup
+      would outlive the cached layer it was collected from.
+    Everything is rebuilt on demand by the next query; a dropped path
+    is written again on its next use.
     """
     global _RDD_RELEASE_LOGGED
     spark.catalog.clearCache()
     for t in spark.catalog.listTables():
         if t.isTemporary and t.name.startswith("stream_"):
             spark.catalog.dropTempView(t.name)
-    from . import api
-    from .operators import dedup, similarity, textops
+    from . import api, memo
 
     api._ROLLUPS.clear()
-    similarity._KMEANS_CACHE.clear()
-    similarity._KMEANS_STATE_CACHE.clear()
-    similarity._BIG_IVF_MEMO.clear()
-    similarity._BIG_PQ_MEMO.clear()
-    dedup._TRUTH_PAIRS_MEMO.clear()
-    dedup._CC_LABELS_MEMO.clear()
-    dedup._BIG_DOC_ARRS_MEMO.clear()
-    dedup._BIG_DOC_EMB_MEMO.clear()
-    dedup._SEM_BUCKETS_MEMO.clear()
-    textops._BPE_CACHE.clear()
+    memo.clear()
     # localCheckpoint() blocks (the BPE/connected-components iteration
     # lineage cuts) live in RDD storage OUTSIDE the SQL CacheManager —
     # release them too (their memos were just cleared, so nothing

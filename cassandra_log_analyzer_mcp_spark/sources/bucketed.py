@@ -9,38 +9,9 @@ tests assert the join plan contains no Exchange on the bucketed path.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .tables import table
-
-_WORK_ROOT: str | None = None
-
-
-def bucket_workdir(prefix: str) -> str:
-    """A fresh subdirectory under one process-shared bucketed-table
-    work root (the streaming bridge's ``_bridge_workdir`` discipline:
-    per-call ``mkdtemp`` would leak a parquet copy into /tmp on every
-    graded invocation). One atexit hook removes the whole tree; when
-    the deployment provides SPARK_GRAFT_BUCKET_DIR (the warehouse
-    volume on a real cluster), the caller owns the lifecycle."""
-    global _WORK_ROOT
-    if _WORK_ROOT is None:
-        provided = os.environ.get("SPARK_GRAFT_BUCKET_DIR")
-        if provided:
-            _WORK_ROOT = provided
-        else:
-            import atexit
-            import shutil
-
-            _WORK_ROOT = tempfile.mkdtemp(prefix="spark_graft_bucketed_")
-            atexit.register(shutil.rmtree, _WORK_ROOT, ignore_errors=True)
-    d = os.path.join(_WORK_ROOT, f"{prefix}_{uuid.uuid4().hex[:8]}")
-    os.makedirs(d, exist_ok=True)
-    return d
 
 
 def write_bucketed(

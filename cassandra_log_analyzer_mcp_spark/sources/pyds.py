@@ -29,6 +29,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..memo import landed
+
 
 class _LogFilePartition(InputPartition):
     def __init__(self, node: str, path: str):
@@ -77,11 +79,6 @@ class LogDirReader(DataSourceReader):
                 yield (partition.node, line.rstrip("\n"))
 
 
-#: landed log corpus per sf_dir (process-lifetime, like the
-#: batch_bridge._landed_log_dir landing)
-_PYDS_MATERIALIZED: dict[str, str] = {}
-
-
 def python_datasource_node_summary(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -95,28 +92,25 @@ def python_datasource_node_summary(
     path delivered byte-identical lines AND the downstream pipeline
     is connector-agnostic.
 
-    The landed corpus is memoized per sf_dir (the lines are a pure
-    function of the events table), matching batch_bridge's
-    _landed_log_dir discipline — repeat invocations re-scan, they
-    don't re-write, and temp roots stop accumulating.
+    The landed corpus is memoized per (session, sf_dir) under the
+    process work root (the lines are a pure function of the events
+    table), as batch_bridge's _landed_log_dir is: repeat invocations
+    re-scan, they don't re-write.
     """
-    import tempfile
-
     from ..functions.parsing import parse_lines, synth_raw_lines, with_issue_flags
     from ..operators.analysis import node_summary
     from ..sources.tables import table
 
-    root = _PYDS_MATERIALIZED.get(sf_dir)
-    if root is None:
-        lines = synth_raw_lines(table(spark, sf_dir, "events"))
-        root = tempfile.mkdtemp(prefix="pyds_logs_") + "/logs"
-        (
-            lines.select("node", F.col("raw").alias("value"))
-            .repartition(4)
-            .write.partitionBy("node")
-            .text(root)
-        )
-        _PYDS_MATERIALIZED[sf_dir] = root
+    root = landed(
+        spark,
+        "pyds_logs",
+        sf_dir,
+        lambda path: synth_raw_lines(table(spark, sf_dir, "events"))
+        .select("node", F.col("raw").alias("value"))
+        .repartition(4)
+        .write.partitionBy("node")
+        .text(path),
+    )
     spark.dataSource.register(LogDirDataSource)
     raw = (
         spark.read.format("logdir")

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..functions.parsing import with_issue_flags
 from .tables import logs
 from ..functions.frames import local_frame
+from ..memo import memo, memoized, work_path
 
 
 def write_silver(spark: SparkSession, sf_dir: str, path: str) -> str:
@@ -261,32 +262,26 @@ def silver_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return node_errors_rollup(read_silver(spark, compacted))
 
 
-#: build-once-per-process silver locations, keyed by sf_dir. At 100 TB
-#: the silver table is written ONCE and every analysis query reads it;
-#: the cache reproduces that build-once/query-many lifecycle inside a
-#: gate sweep (silver_node_errors still rebuilds each call so the WRITE
-#: path itself stays under the hash gate).
-_SILVER_PATHS: dict[str, str] = {}
-
-
 def _default_path(sf_dir: str) -> str:
-    import os
-
-    return os.path.join(
-        "/tmp",
-        f"spark_graft_silver_{os.getpid()}_"
-        + os.path.basename(sf_dir.rstrip("/")).replace(".", "_"),
-    )
+    """Where ``sf_dir``'s silver table lands; every other silver path
+    is this one plus a suffix. Callers look it up when they call it,
+    so the location can be moved by rebinding it."""
+    return work_path("silver", sf_dir)
 
 
 def silver_path(spark: SparkSession, sf_dir: str) -> str:
-    """The silver table's location, building it on first use."""
-    path = _SILVER_PATHS.get(sf_dir)
-    if path is None:
+    """The silver table's location, written once per (session, sf_dir).
+    At 100 TB the silver table is written ONCE and every analysis query
+    reads it; this reproduces that build-once/query-many lifecycle
+    (silver_node_errors still rewrites it each call, so the WRITE path
+    itself stays under the hash gate)."""
+
+    def build() -> str:
         path = _default_path(sf_dir)
         write_silver(spark, sf_dir, path)
-        _SILVER_PATHS[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, "silver", sf_dir, build)
 
 
 def node_summary_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,12 +310,13 @@ def silver_node_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_shape.py), which is exactly how "errors on node3
     yesterday" avoids touching 100 TB. The write is re-done per call
     (build-once at scale; rewriting keeps the query hermetic for the
-    gate) into a PID-scoped path, so concurrent sessions on one host
-    never overwrite each other's files mid-scan.
+    gate) under the process work root, so concurrent processes on one
+    host never overwrite each other's files mid-scan. The rewrite also
+    counts as silver_path's build for this session.
     """
     path = _default_path(sf_dir)
     write_silver(spark, sf_dir, path)
-    _SILVER_PATHS[sf_dir] = path
+    memo(spark, "silver", sf_dir, lambda: path)
     return node_errors_rollup(read_silver(spark, path))
 
 
@@ -392,15 +388,9 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the written files, where the same probe over a round-robin
     layout touches all of them. At 100 TB that file locality is what
     parquet min/max pruning turns into skipped IO."""
-    import os
-
     from pyspark.sql import functions as F
 
-    path = os.path.join(
-        "/tmp",
-        f"spark_graft_zorder_{os.getpid()}_"
-        + os.path.basename(sf_dir.rstrip("/")).replace(".", "_"),
-    )
+    path = work_path("zorder", sf_dir)
     write_zorder(spark, sf_dir, path)
     back = spark.read.parquet(path)
     probe = back.filter(
@@ -492,13 +482,7 @@ def orc_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.parsing import with_issue_flags
     from .tables import logs
 
-    import os
-
-    path = os.path.join(
-        "/tmp",
-        f"spark_graft_orc_{os.getpid()}_"
-        + os.path.basename(sf_dir.rstrip("/")).replace(".", "_"),
-    )
+    path = work_path("orc", sf_dir)
     flagged = with_issue_flags(logs(spark, sf_dir)).withColumn(
         "log_date", F.to_date("ts")
     )
@@ -558,21 +542,15 @@ def silver_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return node_errors_rollup(base)
 
 
-_VERSIONED_PATHS: dict[tuple[int, str], str] = {}
-
-
+@memoized
 def versioned_silver(spark: SparkSession, sf_dir: str) -> str:
     """The shared two-commit table (v0 + v1 manifests), built ONCE
     per (session, sf_dir): time travel, the change feed, and the CDC
     apply all READ this immutable artifact — parquet files and
     manifests never mutate after the build, so sharing is safe and
     rebuilding per query would just re-pay two full silver writes."""
-    key = (id(spark), sf_dir)
-    path = _VERSIONED_PATHS.get(key)
-    if path is None:
-        path = _default_path(sf_dir) + "_versioned"
-        _build_versioned_silver(spark, sf_dir, path)
-        _VERSIONED_PATHS[key] = path
+    path = _default_path(sf_dir) + "_versioned"
+    _build_versioned_silver(spark, sf_dir, path)
     return path
 
 
@@ -733,15 +711,9 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-evolution drop) against an oracle that recomputes the same
     modular drop split straight from the source table.
     """
-    import os
-
     from .tables import table
 
-    path = os.path.join(
-        "/tmp",
-        f"spark_graft_schevo_{os.getpid()}_"
-        + os.path.basename(sf_dir.rstrip("/")).replace(".", "_"),
-    )
+    path = work_path("schevo", sf_dir)
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -999,11 +971,7 @@ def partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .tables import table
 
-    path = os.path.join(
-        "/tmp",
-        f"spark_graft_partevo_{os.getpid()}_"
-        + os.path.basename(sf_dir.rstrip("/")).replace(".", "_"),
-    )
+    path = work_path("partevo", sf_dir)
     ev = table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -1035,9 +1003,6 @@ def partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BRANCH_PATHS: dict[tuple[int, str], str] = {}
-
-
 def silver_branch_diverge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TABLE BRANCHING — the last lakehouse verb after merge /
     restatement / time travel / CDC / vacuum (Iceberg branches, Delta
@@ -1061,15 +1026,12 @@ def silver_branch_diverge(spark: SparkSession, sf_dir: str) -> DataFrame:
     both reads are manifest-driven file-list scans with partition
     columns recovered (basePath), censuses are one rollup each.
     """
-    import os
-
     from ..functions.parsing import with_issue_flags
     from .tables import logs
 
     path = versioned_silver(spark, sf_dir)
-    key = (id(spark), sf_dir)
-    bpath = _BRANCH_PATHS.get(key)
-    if bpath is None:
+
+    def branch() -> str:
         bpath = path + "_branch"
         flagged = with_issue_flags(logs(spark, sf_dir)).withColumn(
             "log_date", F.to_date("ts")
@@ -1089,7 +1051,9 @@ def silver_branch_diverge(spark: SparkSession, sf_dir: str) -> DataFrame:
         _manifest_write(
             bpath, 0, _manifest_read(path, 0) + _manifest_files(spark, bpath)
         )
-        _BRANCH_PATHS[key] = bpath
+        return bpath
+
+    bpath = memo(spark, "silver_branch", sf_dir, branch)
 
     main = spark.read.option("basePath", path).parquet(
         *_manifest_read(path, 1)

@@ -13,7 +13,6 @@ deterministic regardless of batch boundaries.
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 import uuid
 from collections.abc import Callable
@@ -25,15 +24,10 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..functions.parsing import synth_raw_lines
+from ..memo import landed, work_dir
 from ..sources.tables import table
 from . import log_stream
 from ..functions.frames import local_frame
-
-#: one work root per process for bridge checkpoints/sinks — a shared
-#: checkpoint ROOT (each query still gets its own subdirectory: Spark
-#: requires one checkpoint dir per query, but the root is created,
-#: tracked and cleaned once instead of one mkdtemp per bridge call)
-_WORK_ROOT: str | None = None
 
 #: shuffle width, and so the number of state stores, of every bridge
 #: query: bridge state is keyed by node, user or window and stays small
@@ -46,38 +40,6 @@ EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long,"
     " event_type string, value double"
 )
-
-#: every fixture this process has landed, keyed by (kind, key)
-_LANDINGS: dict[tuple[str, str], str] = {}
-
-
-def _bridge_workdir(prefix: str) -> str:
-    """A fresh subdirectory under the process-shared bridge work root.
-
-    EVERY bridge feed, checkpoint, sink and landing dir goes through
-    here (ADVICE r8: per-call ``tempfile.mkdtemp`` leaked the written
-    parquet halves + checkpoint state into /tmp on every invocation —
-    repeated bench/driver runs accumulate). When the root is ours
-    (mkdtemp), one atexit hook removes the whole tree at process end;
-    when the deployment provides SPARK_GRAFT_LANDING_DIR (shared
-    HDFS/S3 on a real cluster), the caller owns the lifecycle and we
-    never delete it.
-    """
-    global _WORK_ROOT
-    if _WORK_ROOT is None:
-        provided = os.environ.get("SPARK_GRAFT_LANDING_DIR")
-        if provided:
-            _WORK_ROOT = provided
-        else:
-            import atexit
-            import shutil
-
-            _WORK_ROOT = tempfile.mkdtemp(prefix="stream_bridge_work_")
-            atexit.register(shutil.rmtree, _WORK_ROOT, ignore_errors=True)
-    d = os.path.join(_WORK_ROOT, f"{prefix}_{uuid.uuid4().hex[:8]}")
-    os.makedirs(d, exist_ok=True)
-    return d
-
 
 def _run(
     spark: SparkSession, label: str, start: Callable[[], StreamingQuery]
@@ -95,7 +57,7 @@ def _run(
     """
     confs = {
         "spark.sql.shuffle.partitions": STATE_PARTITIONS,
-        "spark.sql.streaming.checkpointLocation": _bridge_workdir(label),
+        "spark.sql.streaming.checkpointLocation": work_dir(label),
     }
     prev = {k: spark.conf.get(k, None) for k in confs}
     q = None
@@ -155,7 +117,7 @@ def _two_file_feed(label: str, first: DataFrame, second: DataFrame) -> str:
     ``second`` — the ordering every "crosses the batch boundary"
     argument below rests on.
     """
-    feed = _bridge_workdir(label)
+    feed = work_dir(label)
     now = time.time()
     for name, half, age in (("0_first", first, 120.0), ("1_second", second, 60.0)):
         out = os.path.join(feed, name)
@@ -177,18 +139,6 @@ def _replay(
     )
 
 
-def _landed(kind: str, key: str, write: Callable[[str], None]) -> str:
-    """Land one fixture once per (kind, key) per process: the first
-    call runs ``write(path)`` into a fresh ``path`` under the work
-    root; later calls return that path."""
-    path = _LANDINGS.get((kind, key))
-    if path is None:
-        path = os.path.join(_bridge_workdir(kind), kind)
-        write(path)
-        _LANDINGS[(kind, key)] = path
-    return path
-
-
 def _node_lines(src: DataFrame) -> DataFrame:
     """The landed text stream (``node`` discovered from the Hive
     partition dirs) as the source-agnostic (line_id, node, raw)."""
@@ -201,7 +151,7 @@ def _node_lines(src: DataFrame) -> DataFrame:
 
 def _landed_log_dir(spark: SparkSession, sf_dir: str) -> str:
     """Land the synthesized raw lines as per-node log directories
-    (once per sf_dir per process).
+    (once per sf_dir per session).
 
     Written BY SPARK (partitionBy node), not collected to the driver —
     the landing step must scale with the cluster, exactly like a real
@@ -223,15 +173,15 @@ def _landed_log_dir(spark: SparkSession, sf_dir: str) -> str:
             .text(path)
         )
 
-    return _landed("landed_logs", sf_dir, write)
+    return landed(spark, "landed_logs", sf_dir, write)
 
 
 def _landed_silver_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Parse+classify the landed raw feed ONCE per process through
+    """Parse+classify the landed raw feed ONCE per session through
     the checkpointed exactly-once streaming silver writer, and share
     the landed parquet as the parsed-feed fixture downstream bridges
-    stream from (round 6: the silver-cache discipline applied to
-    streams). At 100 TB this IS the architecture: ONE ingest stream
+    stream from (the batch silver table's build-once discipline
+    applied to streams). At 100 TB this IS the architecture: ONE ingest stream
     lands bronze→silver through the commit log; every consumer
     streams the silver table instead of re-running the regex parse
     over raw text per query. The text→parse path itself stays graded
@@ -252,14 +202,14 @@ def _landed_silver_dir(spark: SparkSession, sf_dir: str) -> str:
             ),
         )
 
-    return _landed("shared_silver", sf_dir, write)
+    return landed(spark, "shared_silver", sf_dir, write)
 
 
 def _silver_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared parsed+classified feed as a STREAMING source: a
     parquet file stream over the silver landing — the same parsed
     schema ``parsed_stream`` emits (plus the log_date partition
-    column), with the parse paid once per process instead of once
+    column), with the parse paid once per session instead of once
     per bridge query."""
     path = _landed_silver_dir(spark, sf_dir)
     return spark.readStream.schema(
@@ -273,7 +223,7 @@ def streaming_error_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checks the Python-state path too: closed bursts are exactly
     the batch sessionization minus each node's final (still-open)
     burst, which is plain SQL. Source: the shared streamed-silver
-    landing (_silver_stream) — parse paid once per process.
+    landing (_silver_stream) — parse paid once per session.
     """
     from . import burst_state
 
@@ -378,7 +328,7 @@ def streaming_silver_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.silver import node_errors_rollup
 
     # the shared landing IS the stream_to_silver run this query
-    # grades (built once per process; first caller pays it); the SAME
+    # grades (built once per session; first caller pays it); the SAME
     # rollup code as silver_node_errors — they share one oracle, so
     # the consumer must be shared, not copied
     out = _landed_silver_dir(spark, sf_dir)
@@ -387,7 +337,7 @@ def streaming_silver_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _landed_batch_docs(spark: SparkSession, sf_dir: str) -> str:
     """Land the incoming-batch documents as a small multi-file parquet
-    directory (once per sf_dir per process) — the "today's crawl
+    directory (once per sf_dir per session) — the "today's crawl
     arriving in shared storage" a streaming ingest consumes. Two
     files so maxFilesPerTrigger=1 forces two real micro-batches (the
     batch-boundary-independence proof needs >1; every extra batch is
@@ -395,7 +345,8 @@ def _landed_batch_docs(spark: SparkSession, sf_dir: str) -> str:
     from ..operators.dedup import INCR_BATCH_MOD
     from ..sources.tables import documents
 
-    return _landed(
+    return landed(
+        spark,
         "landed_docs",
         sf_dir,
         lambda path: documents(spark, sf_dir)
@@ -421,7 +372,7 @@ def streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup
 
     land = _landed_batch_docs(spark, sf_dir)
-    outdir = os.path.join(_bridge_workdir("stream_incr"), "out")
+    outdir = os.path.join(work_dir("stream_incr"), "out")
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -452,10 +403,11 @@ def _events_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _landed_events(spark: SparkSession, sf_dir: str) -> str:
     """Land the normalized events table as a small parquet directory
-    (once per sf_dir per process) — the shape a CDC feed or event bus
+    (once per sf_dir per session) — the shape a CDC feed or event bus
     archiver leaves in shared storage for a file-source stream.
     """
-    return _landed(
+    return landed(
+        spark,
         "landed_events",
         sf_dir,
         lambda path: _events_frame(spark, sf_dir)
@@ -574,7 +526,7 @@ def _landed_events_outer(spark: SparkSession, sf_dir: str) -> str:
         )
         sentinels.coalesce(1).write.mode("append").parquet(path)
 
-    return _landed("landed_events_outer", sf_dir, write)
+    return landed(spark, "landed_events_outer", sf_dir, write)
 
 
 def streaming_purchase_error_left_join(
@@ -663,7 +615,7 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _default_path(sf_dir) + "_smerge"
     write_silver(spark, sf_dir, path)
-    feed = _bridge_workdir("merge_feed") + "/updates"
+    feed = work_dir("merge_feed") + "/updates"
     merge_updates(spark, path).repartition(2).write.parquet(feed)
 
     stream = (
@@ -707,7 +659,7 @@ def streaming_percentiles_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     ev = table(spark, sf_dir, "events").select("event_type", "value")
-    feed = _bridge_workdir("tdigest_feed") + "/events"
+    feed = work_dir("tdigest_feed") + "/events"
     ev.repartition(2).write.parquet(feed)
 
     stream = (
@@ -828,7 +780,7 @@ def streaming_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import documents
 
     docs = documents(spark, sf_dir).select("doc_id", "text")
-    feed = _bridge_workdir("topktok_feed") + "/docs"
+    feed = work_dir("topktok_feed") + "/docs"
     docs.repartition(2).write.parquet(feed)
 
     stream = (
@@ -866,7 +818,7 @@ DUP_MOD = 7
 
 def _landed_dup_events(spark: SparkSession, sf_dir: str) -> str:
     """Land the events table WITH synthetic redelivery duplicates
-    (once per sf_dir per process): every DUP_MOD-th event appears in
+    (once per sf_dir per session): every DUP_MOD-th event appears in
     two files, byte-identical — what an at-least-once shipper leaves
     behind after a retry."""
 
@@ -875,7 +827,7 @@ def _landed_dup_events(spark: SparkSession, sf_dir: str) -> str:
         dups = ev.filter(F.col("event_id") % DUP_MOD == 0)
         ev.unionByName(dups).repartition(2).write.parquet(path)
 
-    return _landed("landed_dup_events", sf_dir, write)
+    return landed(spark, "landed_dup_events", sf_dir, write)
 
 
 def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -983,9 +935,9 @@ def streaming_rack_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.silver import write_node_dim
 
-    # the dim is STATIC — landed once per process, not once per call
-    dim_path = _landed(
-        "node_dim", sf_dir, lambda path: write_node_dim(spark, path)
+    # the dim is STATIC — landed once per session, not once per call
+    dim_path = landed(
+        spark, "node_dim", sf_dir, lambda path: write_node_dim(spark, path)
     )
     rack_dim = spark.read.parquet(dim_path)
 
@@ -1028,13 +980,13 @@ def streaming_dlq_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_json_lines,
     )
 
-    land = _bridge_workdir("dlq_feed") + "/lines"
+    land = work_dir("dlq_feed") + "/lines"
     (
         corrupt_some_lines(synth_json_lines(table(spark, sf_dir, "events")))
         .repartition(2)
         .write.parquet(land)
     )
-    work = _bridge_workdir("dlq_out")
+    work = work_dir("dlq_out")
     main_out = os.path.join(work, "parsed")
     dlq_out = os.path.join(work, "dlq")
 
@@ -1565,7 +1517,7 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hi = ev.agg(F.max("ts").cast("long").alias("m")).collect()[0].m
     fresh_cut = F.lit(hi - 3600).cast("timestamp")
-    root = _bridge_workdir("late_drop")
+    root = work_dir("late_drop")
     feed = os.path.join(root, "feed")
     ckpt = os.path.join(root, "ckpt")
     out = os.path.join(root, "out")

@@ -101,19 +101,16 @@ def test_health_report_renders_all_nodes(spark, sf_dir):
 
 
 def test_cache_budget_census_and_full_release(spark, sf_dir):
-    """Round-7 cache-footprint gate (the r6 driver-heap OOM lesson):
-    after building every designed cache layer + memory sinks, the
-    measured footprint stays under budget, and clear_caches releases
-    ALL THREE layers — SQL cache blocks, localCheckpoint RDD storage,
-    stream_* sink views — plus the module memos."""
+    """Cache-footprint gate (layers that add up silently can run the
+    driver heap out): after building every designed cache layer +
+    memory sinks, the measured footprint stays under budget, and
+    clear_caches releases ALL THREE layers — SQL cache blocks,
+    localCheckpoint RDD storage, stream_* sink views — plus every
+    session memo entry."""
     import importlib
 
     cache_census = importlib.import_module("tools.cache_census")
-    from cassandra_log_analyzer_mcp_spark.operators import (
-        dedup,
-        similarity,
-        textops,
-    )
+    from cassandra_log_analyzer_mcp_spark import memo
     from cassandra_log_analyzer_mcp_spark.plans import registry
     from cassandra_log_analyzer_mcp_spark.session import clear_caches
 
@@ -139,15 +136,13 @@ def test_cache_budget_census_and_full_release(spark, sf_dir):
         loaded["cached_rdd_bytes"] + loaded["sink_est_bytes"]
         < 256 * 1024 * 1024
     )
+    assert memo.entries()
     clear_caches(spark)
     after = cache_census.census(spark)
     assert after["cached_rdd_bytes"] == 0
     assert after["n_cached_rdds"] == 0
     assert after["n_sinks"] == 0
-    assert not similarity._KMEANS_CACHE
-    assert not similarity._KMEANS_STATE_CACHE
-    assert not dedup._TRUTH_PAIRS_MEMO
-    assert not textops._BPE_CACHE
+    assert memo.entries() == []
     # and the session still works: the next query rebuilds on demand
     assert qs["node_summary"](spark, sf_dir).count() > 0
 

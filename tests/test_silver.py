@@ -179,13 +179,11 @@ def test_merge_upsert_key_level_semantics(spark, sf_dir):
             assert r.level == "WARN" and r.is_warning
 
 
-def test_zorder_probe_locality(spark, sf_dir):
+def test_zorder_probe_locality(spark, sf_dir, tmp_path):
     """The 2-D probe's matching rows must concentrate in FEWER files
     under the z-ordered layout than under a round-robin layout of the
     same data into the same file count — the locality that parquet
     min/max stats turn into skipped IO at scale."""
-    import os
-
     from pyspark.sql import functions as F
 
     from cassandra_log_analyzer_mcp_spark.sources.silver import (
@@ -198,8 +196,8 @@ def test_zorder_probe_locality(spark, sf_dir):
     )
     from cassandra_log_analyzer_mcp_spark.sources.tables import table
 
-    zpath = f"/tmp/spark_graft_zorder_test_{os.getpid()}"
-    rpath = f"/tmp/spark_graft_rr_test_{os.getpid()}"
+    zpath = str(tmp_path / "zorder")
+    rpath = str(tmp_path / "round_robin")
     write_zorder(spark, sf_dir, zpath)
     mask = 255
     ev = table(spark, sf_dir, "events").select(

@@ -1,5 +1,6 @@
 """Source hygiene for the package."""
 
+import re
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parents[1] / "cassandra_log_analyzer_mcp_spark"
@@ -13,3 +14,29 @@ def test_no_trailing_whitespace():
         if line != line.rstrip()
     ]
     assert not bad, "trailing whitespace at " + ", ".join(bad)
+
+
+#: what only ``memo.py`` may do: build-once state goes through its
+#: memo and scratch files under its work root
+_MEMO_ONLY = {
+    "id(spark)": re.compile(r"\bid\(spark\)"),
+    '"/tmp" literal': re.compile(r"""["']/tmp\b"""),
+    "mkdtemp": re.compile(r"\bmkdtemp\("),
+    "module-level dict memo": re.compile(
+        r"^_?[A-Z][A-Z0-9_]*\s*(:[^=]*)?=\s*(\{\}|dict\(\))\s*(#.*)?$"
+    ),
+}
+#: the MCP adapter's SSH staging dir, which no test can drive
+_ALLOWED = {("server.py", "mkdtemp")}
+
+
+def test_memo_and_scratch_go_through_memo_module():
+    bad = [
+        f"{path.relative_to(PKG.parent)}:{n}: {what}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path.name != "memo.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        for what, pat in _MEMO_ONLY.items()
+        if pat.search(line) and (path.name, what) not in _ALLOWED
+    ]
+    assert not bad, "outside memo.py: " + ", ".join(bad)

@@ -787,6 +787,7 @@ def test_bridge_run_times_out_stops_and_restores_confs(spark):
     """A query that does not finish in time raises TimeoutError naming
     the bridge, is stopped, and both confs are restored; while it ran,
     the runner's state width and checkpoint root were in force."""
+    from cassandra_log_analyzer_mcp_spark import memo
     from cassandra_log_analyzer_mcp_spark.streaming import batch_bridge
 
     class StalledQuery:
@@ -812,7 +813,7 @@ def test_bridge_run_times_out_stops_and_restores_confs(spark):
     assert {k: spark.conf.get(k, None) for k in _RUN_CONFS} == before
     assert seen["spark.sql.shuffle.partitions"] == batch_bridge.STATE_PARTITIONS
     assert seen["spark.sql.streaming.checkpointLocation"].startswith(
-        batch_bridge._WORK_ROOT
+        memo.work_root()
     )
 
 

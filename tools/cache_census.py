@@ -15,7 +15,7 @@ footprint a MEASURED number with a budget:
    sizeInBytes estimate),
 3. assert the total under SPARK_GRAFT_CACHE_BUDGET_MB (default 3072),
 4. call session.clear_caches and assert everything released —
-   zero cached blocks, zero stream_* views, empty module memos.
+   zero cached blocks, zero stream_* views, an empty session memo.
 
 Usage: python tools/cache_census.py [sf_dir] [--json PATH] [--full]
 Exit 1 if over budget or if clear_caches leaves residue.
@@ -102,11 +102,7 @@ def main() -> int:
         del argv[i : i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
 
-    from cassandra_log_analyzer_mcp_spark.operators import (
-        dedup,
-        similarity,
-        textops,
-    )
+    from cassandra_log_analyzer_mcp_spark import memo
     from cassandra_log_analyzer_mcp_spark.plans import registry
     from cassandra_log_analyzer_mcp_spark.session import (
         clear_caches,
@@ -138,20 +134,11 @@ def main() -> int:
     total = loaded["cached_rdd_bytes"] + loaded["sink_est_bytes"]
     under = total <= BUDGET_MB * 1024 * 1024
 
+    loaded["memo_entries"] = len(memo.entries())
+
     clear_caches(spark)
     after = census(spark)
-    memos_empty = not any(
-        (
-            similarity._KMEANS_CACHE,
-            similarity._KMEANS_STATE_CACHE,
-            similarity._BIG_IVF_MEMO,
-            similarity._BIG_PQ_MEMO,
-            dedup._TRUTH_PAIRS_MEMO,
-            dedup._BIG_DOC_ARRS_MEMO,
-            dedup._BIG_DOC_EMB_MEMO,
-            textops._BPE_CACHE,
-        )
-    )
+    memos_empty = not memo.entries()
     released = (
         after["cached_rdd_bytes"] == 0
         and after["n_sinks"] == 0
