@@ -30,7 +30,10 @@ when their layer does: a rebuild supersedes the frame (its entry is
 freed with it), ``clear_caches`` empties the map, and a layer found
 uncached drops its entry and is rolled up directly. Frames that are
 not a store's layer are never memoized. search_logs and get_errors
-depend on their arguments and still scan the layer on every call.
+depend on their arguments, so each call is one Spark job over the
+cached layer: a per-partition top-k plus a merge, with no shuffle of
+the layer. search's per-node line numbers are the layer's
+``line_number`` column, numbered once at ingest (``read_log_dir``).
 """
 
 from __future__ import annotations
@@ -39,10 +42,9 @@ import os
 import weakref
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.frames import local_frame
 from .memo import work_dir
 from .functions.parsing import (
     ALL_PATTERNS,
@@ -102,13 +104,12 @@ class LogStore:
         return self._pastes, tuple(files)
 
     def lines(self) -> DataFrame:
+        """Every registered glob read as one source: a node's line
+        numbers continue across globs in registration order, so a
+        paste follows the node's files."""
         if not self._globs:
             raise ValueError("no logs loaded — register a glob or paste content")
-        dfs = [read_log_dir(self.spark, g) for g in self._globs]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return read_log_dir(self.spark, self._globs)
 
     def flagged(self) -> DataFrame:
         """The store's cached parsed + issue-flagged layer. The same
@@ -231,48 +232,29 @@ def search_report(flagged: DataFrame, pattern: str, case_sensitive: bool = False
                   node_filter: str | None = None, limit: int = 100) -> str:
     """Markdown parity with search_logs (ref :773-799).
 
-    Two queries over the cached layer instead of numbering every line:
-    the first ``limit`` hits in (node, line_id) order, then one
-    aggregate that counts every hit and, for each shown hit, the lines
-    at or before it on its node — the per-node line number
-    ``analysis.search_logs`` assigns. The shown hits join in as a
-    broadcast literal frame, not as literals in the expression, so the
-    generated code is the same whichever lines they are and is not
-    recompiled per call."""
+    One top-k scan: the first ``limit`` hits in (node, line_number)
+    order, with the total hit count observed on the same scan. A
+    ``LogStore`` layer carries ``line_number`` from ingest; any other
+    frame is numbered on the call (``analysis._numbered_lines``)."""
     df = flagged
     if node_filter:
         df = df.filter(F.col("node") == node_filter)
-    match = analysis.search_match(pattern, case_sensitive)
+    if "line_number" not in df.columns:
+        df = analysis._numbered_lines(df)
+    total = Observation()
+    # a limit of 0 would plan no scan, so the observation would not fill
     shown = (
-        df.filter(match).select("node", "line_id", "raw")
-        .orderBy("node", "line_id").limit(limit).collect()
-    )
-    keys = local_frame(
-        df.sparkSession, [(r.node, r.line_id) for r in shown],
-        "k_node string, k_line long",
-    )
-    all_hits = df.filter(match).select(
-        F.lit(None).cast("string").alias("k_node"),
-        F.lit(None).cast("long").alias("k_line"),
-    )
-    at_or_before = df.join(
-        F.broadcast(keys),
-        (F.col("node") == F.col("k_node")) & (F.col("line_id") <= F.col("k_line")),
-    ).select("k_node", "k_line")
-    counts = {
-        (r.k_node, r.k_line): r.n
-        for r in all_hits.unionByName(at_or_before)
-        .groupBy("k_node", "k_line").agg(F.count("*").alias("n")).collect()
-    }
-    total = counts.get((None, None), 0)
-    out = [f"# Search results: '{pattern}'", "", f"Total: {total}", ""]
+        df.filter(analysis.search_match(pattern, case_sensitive))
+        .select("node", "line_number", "raw")
+        .observe(total, F.count(F.lit(1)).alias("n"))
+        .orderBy("node", "line_number").limit(max(limit, 1)).collect()
+    )[:limit]
+    n = total.get["n"]
+    out = [f"# Search results: '{pattern}'", "", f"Total: {n}", ""]
     for r in shown:
-        out += [
-            f"**{r.node}** (line {counts[(r.node, r.line_id)]})",
-            "```", r.raw, "```", "",
-        ]
-    if total > limit:
-        out.append(f"... and {total - limit} more results")
+        out += [f"**{r.node}** (line {r.line_number})", "```", r.raw, "```", ""]
+    if n > limit:
+        out.append(f"... and {n - limit} more results")
     return "\n".join(out)
 
 
@@ -281,7 +263,8 @@ def errors_report(flagged: DataFrame, node_name: str | None = None,
     """Markdown parity with get_errors (ref :801-826): ONE list
     truncated to ``limit`` across nodes (the reference slices the
     concatenated per-node lists, ref :816-819) — served by
-    get_errors_global, whose oracle pins exactly these semantics."""
+    get_errors_global, whose oracle pins exactly these semantics: one
+    top-k scan of the layer."""
     df = flagged
     if node_name:
         df = df.filter(F.col("node") == node_name)

@@ -10,7 +10,9 @@ Scale notes (100 TB):
   (node, issue, hour) → map-side partial aggregation, a single shuffle
   of tiny partial states. No collect-based loops anywhere (the
   reference is one giant driver loop, ref :230-263).
-- Top-N is per-partition-key ``row_number`` — never a global sort.
+- Top-N per node is per-partition-key ``row_number``; a cross-node
+  top-N is a per-partition top-k plus a merge of the survivors
+  (``TakeOrderedAndProject``) — never a global sort of the input.
 - Timeline/window operators bucket timestamps with integer arithmetic
   on the epoch so no per-row Python and no session-timezone coupling.
 """
@@ -198,28 +200,22 @@ def get_errors_global(logs: DataFrame, limit: int = 50) -> DataFrame:
     errors_by_node then slices ``errors[:limit]``), not per node.
 
     The reference's cross-node order is dict insertion order; pinned
-    deterministic here as (node, ts, line_id). Three narrowing stages:
-    first-N within (node, day) — fine-grained, parallel — then first-N
-    per node over the ≤ N×days survivors, then the global rank over
-    ≤ N×nodes rows. The single-partition windows only ever see
-    survivor rows, never the error stream.
+    deterministic here as (node, ts, line_id). The first ``limit`` are
+    a per-partition top-k plus a merge of the ≤ ``limit`` rows each
+    partition keeps (``TakeOrderedAndProject``): distributed at any
+    size, one job when collected. ``rn`` numbers only those survivors,
+    so the single-partition window never sees the error stream.
     """
-    pre_w = Window.partitionBy("node", "day").orderBy("ts", "line_id")
-    node_w = Window.partitionBy("node").orderBy("ts", "line_id")
     w = Window.orderBy("node", "ts", "line_id")
     return (
         logs.filter(F.col("is_error"))
+        .select("node", "ts_str", "level", "clazz", "message", "ts", "line_id")
+        .orderBy("node", "ts", "line_id")
+        .limit(limit)
         .select(
-            "node", "ts_str", "level", "clazz", "message", "ts", "line_id",
-            F.to_date("ts").alias("day"),
+            F.row_number().over(w).alias("rn"),
+            "node", "ts_str", "level", "clazz", "message",
         )
-        .withColumn("pre_rn", F.row_number().over(pre_w))
-        .filter(F.col("pre_rn") <= limit)
-        .withColumn("nrn", F.row_number().over(node_w))
-        .filter(F.col("nrn") <= limit)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= limit)
-        .select("rn", "node", "ts_str", "level", "clazz", "message")
     )
 
 

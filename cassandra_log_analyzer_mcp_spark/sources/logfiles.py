@@ -15,10 +15,14 @@ files into a local staging dir that ``read_log_dir`` then scans.
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.parsing import LOG_LINE_REGEX
 from ..session import tune
 
 try:  # optional dependency, mirrors ref :21-26
@@ -31,52 +35,68 @@ except ImportError:
 
 def read_log_dir(
     spark: SparkSession,
-    path_glob: str,
+    path_glob: str | Sequence[str],
     node_regex: str = r".*/([^/]+)/[^/]+$",
 ) -> DataFrame:
-    """Read raw log lines from a glob; node extracted from the path.
+    """Read raw log lines from one glob or several; node extracted
+    from the path.
 
-    Returns (line_id, node, raw). line_id is a per-node monotonic line
-    number, the distributed analogue of the reference's enumerate()
-    (ref :319), PINNED to (file name, in-file order): when a node has
-    several files (rotated ``system.log.1`` etc.) the numbering is
-    deterministic across runs and cluster layouts — files sort by
-    name, lines by position within each file. (monotonically_
-    increasing_id alone is partition-indexed, and Spark packs file
-    splits into partitions by SIZE order, so it is not file-name
-    ordered across files.)
+    Returns (line_id, node, raw, line_number). line_id is a per-node
+    monotonic line number, the distributed analogue of the reference's
+    enumerate() (ref :319), PINNED to (glob, file name, in-file order):
+    a node's lines continue from glob to glob in the order the globs
+    are given, and within a glob from file to file in name order
+    (rotated ``system.log.1`` etc.), so the numbering is deterministic
+    across runs and cluster layouts. (monotonically_increasing_id
+    alone is partition-indexed, and Spark packs file splits into
+    partitions by SIZE order, so it is not file-name ordered across
+    files.) line_number is the per-node rank among the lines
+    ``LOG_LINE_REGEX`` matches — the line number search_logs reports
+    (ref :319 enumerates parsed entries); ``parse_lines`` keeps exactly
+    those lines and passes the column through.
 
-    Numbering is two-stage (no per-node global window): row_number
-    within each (node, file) partition — parallel per file — plus the
-    file's cumulative line offset from the tiny (node × file) rollup,
+    Numbering is two-stage (no per-node global window): row_number and
+    a running count of parseable lines within each (node, glob, file)
+    partition — parallel per file — plus the file's cumulative line
+    and parseable-line offsets from the tiny (node × file) rollup,
     broadcast back.
     """
     tune(spark)
-    df = (
-        spark.read.text(path_glob)
-        .select(
+    globs = [path_glob] if isinstance(path_glob, str) else list(path_glob)
+    parts = [
+        spark.read.text(g).select(
+            F.lit(i).alias("_glob"),
             F.regexp_extract(F.input_file_name(), node_regex, 1).alias("node"),
             F.input_file_name().alias("_fname"),
             F.col("value").alias("raw"),
             F.monotonically_increasing_id().alias("_file_order"),
+            F.col("value").rlike(LOG_LINE_REGEX).cast("long").alias("_parsed"),
         )
+        for i, g in enumerate(globs)
+    ]
+    df = functools.reduce(DataFrame.unionByName, parts)
+    keys = ["node", "_glob", "_fname"]
+    per_file = df.groupBy(*keys).agg(
+        F.count("*").alias("cnt"), F.sum("_parsed").alias("parsed")
     )
-    per_file = df.groupBy("node", "_fname").agg(F.count("*").alias("cnt"))
-    wb = Window.partitionBy("node").orderBy("_fname")
+    before = (
+        Window.partitionBy("node").orderBy("_glob", "_fname")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
     offsets = per_file.select(
-        "node", "_fname",
-        F.coalesce(
-            F.sum("cnt").over(wb.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("_offset"),
+        *keys,
+        F.coalesce(F.sum("cnt").over(before), F.lit(0)).alias("_offset"),
+        F.coalesce(F.sum("parsed").over(before), F.lit(0)).alias("_parsed_offset"),
     )
-    w = Window.partitionBy("node", "_fname").orderBy("_file_order")
+    w = Window.partitionBy(*keys).orderBy("_file_order")
+    upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (
-        df.join(F.broadcast(offsets), ["node", "_fname"])
+        df.join(F.broadcast(offsets), keys)
         .select(
             (F.col("_offset") + F.row_number().over(w)).alias("line_id"),
             "node",
             "raw",
+            (F.col("_parsed_offset") + F.sum("_parsed").over(upto)).alias("line_number"),
         )
     )
 

@@ -409,20 +409,13 @@ def test_analyze_cluster_report_matches_registry_operators(spark, sf_dir):
     assert api.analyze_cluster_report(flagged) == api._cluster_markdown(
         summary, issues, recs
     )
-    # search: the shown hits' line numbers come from a per-hit count,
-    # not search_logs' numbering of every line — same text either way
+    # search: a frame that carries no line_number is numbered on the
+    # call, as search_logs numbers it
     for args in (("tombstone", False, None, 7), ("TIMED OUT", True, None, 5),
                  ("timed out", False, "node2", 100), ("no such line", False, None, 5)):
         pattern, case, node, limit = args
-        df = flagged.filter(F.col("node") == node) if node else flagged
-        hits = analysis.search_logs(df, pattern, case)
-        total = hits.count()
-        want = [f"# Search results: '{pattern}'", "", f"Total: {total}", ""]
-        for r in hits.orderBy("node", "line_number").limit(limit).collect():
-            want += [f"**{r.node}** (line {r.line_number})", "```", r.content, "```", ""]
-        if total > limit:
-            want.append(f"... and {total - limit} more results")
-        assert api.search_report(flagged, *args) == "\n".join(want)
+        hits = _search_want(flagged, pattern, case, node)
+        assert api.search_report(flagged, *args) == _search_text(pattern, hits, limit)
 
 
 def test_compare_and_issues_reports_match_registry_operators(spark, sf_dir):
@@ -475,3 +468,162 @@ def test_tune_skips_locked_conf_and_logs_once(spark, monkeypatch, caplog):
     assert len(hits) == 1
     assert spark.conf.get(locked) != "/nonexistent"
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+# ---------------------------------------------------------------------------
+# search_report / errors_report: one top-k scan of the layer
+# ---------------------------------------------------------------------------
+
+
+def _rotated_store(spark, tmp_path) -> api.LogStore:
+    """Two nodes, each with a live system.log and one rotated file."""
+    for node, (live, rotated) in {"node0": (14, 9), "node1": (8, 12)}.items():
+        (tmp_path / node).mkdir()
+        (tmp_path / node / "system.log").write_text(_log_lines(node, 0, live))
+        (tmp_path / node / "system.log.1").write_text(
+            _log_lines(node, 200, rotated)
+        )
+    store = api.LogStore(spark)
+    store.add_glob(f"{tmp_path}/*/system.log*")
+    return store
+
+
+def _search_want(flagged, pattern, case, node) -> list[tuple]:
+    """Every (node, line_number, content) hit of the oracled
+    search_logs, in the order search_report shows them."""
+    from pyspark.sql import functions as F
+
+    from cassandra_log_analyzer_mcp_spark.operators import analysis
+
+    df = flagged.filter(F.col("node") == node) if node else flagged
+    return sorted(tuple(r) for r in analysis.search_logs(df, pattern, case).collect())
+
+
+def _search_text(pattern, hits, limit) -> str:
+    out = [f"# Search results: '{pattern}'", "", f"Total: {len(hits)}", ""]
+    for node, line_number, content in hits[:limit]:
+        out += [f"**{node}** (line {line_number})", "```", content, "```", ""]
+    if len(hits) > limit:
+        out.append(f"... and {len(hits) - limit} more results")
+    return "\n".join(out)
+
+
+def _errors_text(errors, node, limit) -> str:
+    """errors_report's text from (node, ts, line_id, ts_str, message)
+    error rows, sorted on the driver in get_errors_global's order."""
+    shown = [e for e in errors if not node or e[0] == node][:limit]
+    out = [f"# Errors ({len(shown)})", ""]
+    for n, _, _, ts_str, message in shown:
+        out += [f"**{n}** [{ts_str}]", "```", message, "```", ""]
+    return "\n".join(out)
+
+
+def _check_search_and_errors(layer) -> None:
+    """0 hits, fewer than ``limit``, exactly ``limit`` and more than
+    ``limit`` (``limit`` 0 too), for both tools."""
+    assert "line_number" in layer.columns
+    seen = set()
+    for pattern, case, node in (("timed out", False, None), ("GC PAUSE", True, None),
+                                ("compaction", False, "node1"), ("no such line", False, None)):
+        hits = _search_want(layer, pattern, case, node)
+        total = len(hits)
+        for limit in {0, 1, max(total - 1, 1), total, total + 3}:
+            want = _search_text(pattern, hits, limit)
+            assert api.search_report(layer, pattern, case, node, limit) == want
+            seen.add((total > limit) - (total < limit) if total else "none")
+    assert seen == {"none", -1, 0, 1}
+    errors = sorted(
+        (r.node, r.ts, r.line_id, r.ts_str, r.message)
+        for r in layer.filter("is_error").collect()
+    )
+    seen = set()
+    for node in (None, "node0", "nosuchnode"):
+        total = sum(not node or e[0] == node for e in errors)
+        for limit in {0, 1, max(total - 1, 1), total, total + 3}:
+            assert api.errors_report(layer, node, limit) == _errors_text(errors, node, limit)
+            seen.add((total > limit) - (total < limit) if total else "none")
+    assert seen == {"none", -1, 0, 1}
+
+
+def test_search_and_errors_reports_match_oracled_operators(spark, tmp_path):
+    """On a LogStore layer, search_report renders what search_logs
+    numbers and errors_report lists get_errors_global's rows — also
+    after an append to a live file and after a rotated file lands."""
+    store = _rotated_store(spark, tmp_path)
+    _check_search_and_errors(store.flagged())
+    with open(tmp_path / "node0" / "system.log", "a") as fh:
+        fh.write(_log_lines("node0", 400, 6))
+    _check_search_and_errors(store.flagged())
+    (tmp_path / "node1" / "system.log.2").write_text(_log_lines("node1", 600, 7))
+    _check_search_and_errors(store.flagged())
+
+
+def test_paste_numbers_on_from_the_nodes_files(spark, tmp_path):
+    """A node registered under two globs — log files, then a paste —
+    numbers its pasted lines after its files' lines, as the
+    reference's load_logs appends them (a per-glob numbering reported
+    the pasted hit below at line 3)."""
+    (tmp_path / "node0").mkdir()
+    (tmp_path / "node0" / "system.log").write_text(
+        "INFO [2025-01-01 10:00:00,000] [T-1] C:1 - alpha\n"
+        "\tat org.apache.cassandra.Foo.run(Foo.java:1)\n"
+        "WARN [2025-01-01 10:00:01,000] [T-1] C:2 - beta\n"
+        "INFO [2025-01-01 10:00:02,000] [T-1] C:3 - gamma\n"
+    )
+    store = api.LogStore(spark)
+    store.add_glob(f"{tmp_path}/*/system.log*")
+    store.add_pasted(
+        "node0",
+        "INFO [2025-01-01 10:00:03,000] [T-1] C:4 - delta\n"
+        "ERROR [2025-01-01 10:00:04,000] [T-1] C:5 - needle\n",
+    )
+    layer = store.flagged()
+    report = api.search_report(layer, "needle")
+    assert "**node0** (line 5)" in report, report
+    assert sorted((r.line_id, r.line_number) for r in layer.collect()) == [
+        (1, 1), (3, 2), (4, 3), (5, 4), (6, 5),
+    ]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_and_errors_run_one_job_on_a_cached_layer(spark, tmp_path):
+    store = _rotated_store(spark, tmp_path)
+    layer = store.flagged()
+    layer.count()
+    for pattern, case, node in (("timed out", False, None), ("GC", True, "node1")):
+        assert _jobs(spark, lambda: api.search_report(layer, pattern, case, node, 3)) == 1
+    for node in (None, "node0"):
+        assert _jobs(spark, lambda: api.errors_report(layer, node, 4)) == 1
+
+
+def test_repeated_search_leaves_no_per_call_state(spark, sf_dir):
+    """The hit count is observed on the search scan; repeated calls
+    leave no pending observation or extra listener in the session."""
+    flagged = logs_flagged(spark, sf_dir)
+    om = spark._jsparkSession.observationManager()
+    field = om.getClass().getDeclaredField("observations")
+    field.setAccessible(True)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def state():
+        return field.get(om).size(), bus.listeners().size()
+
+    api.search_report(flagged, "tombstone", False, None, 3)
+    before = state()
+    for pattern in ("tombstone", "timed out", "no such line", "GC"):
+        api.search_report(flagged, pattern, False, None, 3)
+    assert state() == before
+    assert before[0] == 0

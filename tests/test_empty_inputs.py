@@ -4,14 +4,13 @@ slice of the registry must return EMPTY (or its fixed report shape),
 never throw, when every source table has zero rows."""
 
 import os
-import tempfile
 
 import pytest
 
 
 @pytest.fixture(scope="module")
-def empty_sf_dir(spark, sf_dir):
-    dst = tempfile.mkdtemp(prefix="sf_empty_")
+def empty_sf_dir(spark, sf_dir, tmp_path_factory):
+    dst = str(tmp_path_factory.mktemp("sf_empty"))
     for f in os.listdir(sf_dir):
         if f.endswith(".parquet"):
             df = spark.read.parquet(os.path.join(sf_dir, f)).limit(0)

@@ -221,6 +221,23 @@ def test_search_logs_has_no_per_node_global_window(spark, sf_dir):
         assert "BroadcastHashJoin" in plan
 
 
+def test_get_errors_global_windows_only_its_top_k_survivors(spark, sf_dir):
+    """The cross-node first-N is a per-partition top-k plus a merge
+    (TakeOrderedAndProject); the one window, which numbers ``rn``, sits
+    directly on its ≤ limit survivors and never on the error stream."""
+    from cassandra_log_analyzer_mcp_spark.operators import analysis
+    from cassandra_log_analyzer_mcp_spark.sources.tables import logs_flagged
+
+    plan = _plan(analysis.get_errors_global(logs_flagged(spark, sf_dir)))
+    tree = plan.split("\n\n", 1)[0]
+    assert "TakeOrderedAndProject" in tree
+    assert len(_window_specs(plan)) == 1
+    windows = [ln for ln in tree.splitlines() if ln.lstrip("+- ").startswith("Window ")]
+    assert len(windows) == 1
+    below = tree.splitlines()[tree.splitlines().index(windows[0]) + 1]
+    assert "TakeOrderedAndProject" in below, tree
+
+
 def test_error_bursts_has_no_per_node_history_window(spark, sf_dir):
     """Burst detection must sessionize via the native session_window
     aggregate (map-side combinable); the only window function allowed

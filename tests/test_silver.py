@@ -36,19 +36,18 @@ def test_silver_partition_pruning(spark, silver_path):
     assert pruned.count() > 0
 
 
-def test_restatement_touches_only_restated_partitions(spark, sf_dir):
+def test_restatement_touches_only_restated_partitions(spark, sf_dir, tmp_path):
     """Dynamic partition overwrite contract: the restate step rewrites
     ONLY the corrected day's partitions — every other partition keeps
     its original files (same inodes; static mode would truncate the
     whole table) — and the corrected day holds only error lines."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cassandra_log_analyzer_mcp_spark.sources import silver
 
-    path = tempfile.mkdtemp(prefix="silver_restate_test_")
+    path = str(tmp_path)
     silver.write_silver(spark, sf_dir, path)
 
     def inodes():
@@ -80,17 +79,16 @@ def test_restatement_touches_only_restated_partitions(spark, sf_dir):
     assert restated.filter(~F.col("is_error")).count() == 0
 
 
-def test_compaction_one_file_per_partition(spark, sf_dir):
+def test_compaction_one_file_per_partition(spark, sf_dir, tmp_path):
     """Compaction contract: the fragmented write leaves multiple files
     in at least one partition; the rewrite leaves EXACTLY one parquet
     file per (log_date, node) directory and the identical row set."""
     import os
-    import tempfile
 
     from cassandra_log_analyzer_mcp_spark.sources import silver
 
-    frag = tempfile.mkdtemp(prefix="silver_frag_")
-    comp = tempfile.mkdtemp(prefix="silver_comp_")
+    frag = str(tmp_path / "frag")
+    comp = str(tmp_path / "comp")
     silver.write_silver_fragmented(spark, sf_dir, frag)
     silver.compact_silver(spark, frag, comp)
 
@@ -111,14 +109,13 @@ def test_compaction_one_file_per_partition(spark, sf_dir):
     b = spark.read.parquet(comp).count()
     assert a == b
 
-def test_merge_upsert_key_level_semantics(spark, sf_dir):
+def test_merge_upsert_key_level_semantics(spark, sf_dir, tmp_path):
     """Key-level merge: only the batch's (day0, MERGE_NODE) partition
     rewrites (every other file keeps its inode — including OTHER
     NODES of day0), bystander rows inside the rewritten partition
     survive byte-identically, and the updated keys carry the new
     level with no duplicates."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -127,7 +124,7 @@ def test_merge_upsert_key_level_semantics(spark, sf_dir):
     )
     from cassandra_log_analyzer_mcp_spark.sources import silver
 
-    path = tempfile.mkdtemp(prefix="silver_merge_test_")
+    path = str(tmp_path)
     silver.write_silver(spark, sf_dir, path)
     base = silver.read_silver(spark, path)
     day0 = base.agg(F.min("log_date")).collect()[0][0]

@@ -40,3 +40,17 @@ def test_memo_and_scratch_go_through_memo_module():
         if pat.search(line) and (path.name, what) not in _ALLOWED
     ]
     assert not bad, "outside memo.py: " + ", ".join(bad)
+
+
+def test_tests_make_scratch_dirs_through_pytest():
+    """A test's scratch dir comes from ``tmp_path`` /
+    ``tmp_path_factory``, which pytest bounds; a ``mkdtemp`` result
+    outlives the run."""
+    tests = Path(__file__).resolve().parent
+    bad = [
+        f"{path.name}:{n}"
+        for path in sorted(tests.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if _MEMO_ONLY["mkdtemp"].search(line)
+    ]
+    assert not bad, "mkdtemp in tests: " + ", ".join(bad)

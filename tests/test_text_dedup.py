@@ -989,16 +989,15 @@ def test_pca_matches_numpy_dominant_eigenvector(spark, sf_dir):
     assert np.array_equal(got, expect)
 
 
-def test_ivf_append_preserves_existing_files(spark, sf_dir):
+def test_ivf_append_preserves_existing_files(spark, sf_dir, tmp_path):
     """Append maintenance: the arrival batch's files land INSIDE the
     existing cell directories without touching the initial build's
     files (same inodes), and the appended layout holds exactly the
     full assignment."""
     import os
-    import tempfile
 
     assign, _ = similarity._ivf_index_and_probes(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="ivf_append_test_") + "/idx"
+    path = str(tmp_path / "idx")
     arrival = F.col("vec_id") % similarity.IVF_APPEND_MOD == 0
     (
         assign.filter(~arrival)
@@ -1988,7 +1987,7 @@ def test_tokenizer_fertility_consistent_with_encode(spark, sf_dir):
         assert 1000 * r.n_bpe_symbols // r.n_raw_tokens == r.fertility_permille
 
 
-def test_multik_certification_proven_against_raw_text(spark):
+def test_multik_certification_proven_against_raw_text(spark, tmp_path):
     """Round-7 property (VERDICT r6 ask #6): on a crafted slice, the
     gram quantization at K ∈ {8,16,32} neither LOSES nor SPLITS any
     maximal cross-document verbatim repeat, certification widths
@@ -1997,7 +1996,6 @@ def test_multik_certification_proven_against_raw_text(spark):
     holds window-by-window against the original token streams —
     not just against the gram substrate."""
     import os
-    import tempfile
 
     from cassandra_log_analyzer_mcp_spark.operators.textops import (
         MULTIK_WIDTHS,
@@ -2045,7 +2043,7 @@ def test_multik_certification_proven_against_raw_text(spark):
         (i, " ".join(t), "en", "crafted", len(" ".join(t)))
         for i, t in docs.items()
     ]
-    sf_like = tempfile.mkdtemp(prefix="crafted_slice_")
+    sf_like = str(tmp_path)
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string,"
         " n_chars long"
