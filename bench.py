@@ -2,39 +2,45 @@
 """Benchmark harness: times every registered query end-to-end.
 
 Runs each ``queries()`` entry at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and
-prints ONE JSON line::
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+CPUs this process may run on) and prints ONE JSON line::
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...}
 
 Results are materialized with the noop sink so timings include full
 execution (scan → shuffle → result) without driver collection cost.
+The sidecar (``full`` in the line) also carries a per-query
+``profile``: build and plan seconds, plan-shape counts, and the
+jobs, stages, tasks, shuffle, spill and executor time of the query's
+job group.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-#: The driver records only the last N bytes of bench stdout
-#: (BENCH_r01.json kept a 2000-byte tail with ``parsed: null`` — the
-#: full 126-query JSON line is ~3.3 KB, so the line's head fell out of
-#: the capture window and the remainder could not parse). The emitted
-#: line must therefore fit the window WITH headroom for the newline
-#: and any stray byte the harness prepends. Pinned to the 2000-byte
-#: capture minus ≥250 bytes of ambient-JVM-line headroom (VERDICT r7
-#: hygiene #2 asked ≥150; the startup notices themselves are silenced
-#: at source via log4j2-quiet.properties, so the headroom is now
-#: insurance, not load-bearing).
+#: The driver records only the last N bytes of bench stdout. The full
+#: per-query JSON line outgrows that window, and a line whose head
+#: falls out of the capture cannot parse, so the emitted line must fit
+#: the window with headroom for the newline and any stray byte the
+#: harness prepends. The JVM startup notices are silenced at source
+#: (log4j2-quiet.properties), so the headroom is insurance.
 CAPTURE_WINDOW_BYTES = 2000
 TAIL_HEADROOM_BYTES = 250
 STDOUT_BYTE_BUDGET = CAPTURE_WINDOW_BYTES - TAIL_HEADROOM_BYTES
+
+#: Two spin calibrations further apart than this ratio ran under
+#: different host load: wall-clock figures taken between them compare
+#: loads, not code.
+SPIN_RATIO_MAX = 1.5
 
 
 def build_stdout_payload(
@@ -44,7 +50,7 @@ def build_stdout_payload(
 ) -> dict[str, object]:
     """Compact payload for the driver's tail-limited stdout capture.
 
-    Keeps the SLOWEST queries (the rows a plan audit reads first) and
+    Keeps the SLOWEST queries (the rows a profile reads first) and
     stops before the serialized line outgrows ``STDOUT_BYTE_BUDGET``;
     ``value`` still covers every query and ``full`` names the sidecar
     file holding the untrimmed per-query dict.
@@ -70,14 +76,25 @@ def build_stdout_payload(
     return out
 
 
+def sidecar_name(subset: bool, start: dict, end: dict) -> str:
+    """Where a sweep writes its per-query detail. A slate-restricted
+    run never overwrites the committed full-surface file, and neither
+    does a full sweep whose own start and end spin calibrations differ
+    by more than ``SPIN_RATIO_MAX``."""
+    if subset:
+        return "BENCH_FULL_subset.json"
+    spins = (start["spin_s"], end["spin_s"])
+    if max(spins) > SPIN_RATIO_MAX * min(spins):
+        return "BENCH_FULL_contaminated.json"
+    return "BENCH_FULL.json"
+
+
 def _spin_calibration() -> float:
-    """Fixed CPU-bound micro-workload, timed (VERDICT r8 ask #3).
+    """Fixed CPU-bound micro-workload, timed.
 
     A loaded host stretches this the same way it stretches the
-    measured queries, so recording it at sweep start/end makes a
-    contended-host sweep machine-adjudicable (the r8 driver read
-    569 s where the same HEAD measured 405 s locally, and nothing in
-    the artifact proved contention). The LCG loop is pure-Python
+    measured queries, so recording it at sweep start and end makes a
+    contended sweep machine-checkable. The LCG loop is pure-Python
     integer work — no allocation, no libm — so its wall time tracks
     scheduler pressure, not memory or I/O state.
     """
@@ -99,19 +116,40 @@ def _load_sentinel() -> dict[str, object]:
     return {"loadavg": load, "spin_s": _spin_calibration()}
 
 
+#: plan-shape counts: profile key -> physical node name
+_PLAN_NODES = {
+    "exchanges": "Exchange",
+    "broadcast_joins": "BroadcastHashJoin",
+    "sortmerge_joins": "SortMergeJoin",
+    "windows": "Window",
+}
+
+
+def plan_shape(plan: str) -> dict[str, int]:
+    """Node counts of a ``formatted`` physical plan, read from its
+    per-node detail headers (``(7) BroadcastHashJoin [codegen id : 2]``)
+    so each node counts once. ``codegen_stages`` counts the distinct
+    codegen ids; an adaptive plan fuses its stages as they run, so
+    before execution only materialized cached sub-plans show any."""
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    shape = {k: nodes.count(v) for k, v in _PLAN_NODES.items()}
+    shape["codegen_stages"] = len(set(re.findall(r"\[codegen id : (\d+)\]", plan)))
+    return shape
+
+
 def main() -> None:
     # The driver parses the TAIL of the combined stdout+stderr capture
     # for the single JSON line. The JVM writes noise to BOTH streams
     # (log4j to stderr, occasional banners to fd 1) bypassing
     # sys.stdout, and the java launcher itself prints the
     # jdk.incubator.vector incubator-module warning to stderr before
-    # log4j even loads (VERDICT r8 #1 — the option is baked into
-    # spark-launcher's JavaModuleOptions, unremovable from here). So:
-    # save the real stdout fd, then point BOTH fd 1 and fd 2 at a
-    # sidecar noise log BEFORE the JVM launches; the JVM inherits the
-    # redirected fds and every byte of its noise lands in the file.
-    # The JSON line alone is written to the saved fd at the end, so
-    # the combined capture IS the bare JSON line.
+    # log4j even loads (the option is baked into spark-launcher's
+    # JavaModuleOptions, unremovable from here). So: save the real
+    # stdout fd, then point BOTH fd 1 and fd 2 at a sidecar noise log
+    # BEFORE the JVM launches; the JVM inherits the redirected fds and
+    # every byte of its noise lands in the file. The JSON line alone is
+    # written to the saved fd at the end, so the combined capture IS
+    # the bare JSON line.
     real_stdout = os.dup(1)
     here = os.path.dirname(os.path.abspath(__file__))
     noise_path = os.path.join(here, "BENCH_NOISE.log")
@@ -139,14 +177,53 @@ def main() -> None:
         raise
 
 
+def _profiled(spark, stats, listener, name: str, fn, sf_dir: str):
+    """Time one query — ``fn()`` plus the noop write, in job group
+    ``name`` — and profile it. Returns (seconds or -1.0, profile).
+
+    The plan string is taken after the timed run and kept out of its
+    total. Streaming bridges run their micro-batches under each
+    stream's run id, so those groups count too."""
+    from cassandra_log_analyzer_mcp_spark.plans.explain import plan_string
+
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    w0 = time.time()
+    t0 = time.perf_counter()
+    try:
+        df = fn(spark, sf_dir)
+        build_s = time.perf_counter() - t0
+        df.write.format("noop").mode("overwrite").save()
+        total = round(time.perf_counter() - t0, 3)
+    except Exception as e:  # a broken query should not hide the rest
+        print(f"bench error in {name}: {e}", file=sys.stderr)
+        return -1.0, {"error": type(e).__name__}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    w1 = time.time()
+    stats.drain()
+    st = stats.group([name] + listener.runs_between(w0, w1), w0, w1)
+    t0 = time.perf_counter()
+    plan = plan_string(df)
+    return total, {
+        "build_s": round(build_s, 3),
+        "plan_s": round(time.perf_counter() - t0, 3),
+        **plan_shape(plan),
+        "jobs": st.jobs,
+        "stages": st.stages,
+        "tasks": st.tasks,
+        "shuffle_write_mb": round(st.shuffle_write_mb, 3),
+        "spill_mb": round(st.spill_mb, 3),
+        "executor_s": round(st.executor_run_s, 3),
+    }
+
+
 def _run(real_stdout: int, noise_path: str) -> None:
 
-    # Silence the pandas concat FutureWarning at the source (ADVICE /
-    # VERDICT r6 #8): it leaked ahead of the JSON line in the driver's
-    # tail capture. The env var reaches the forked Python UDF workers
-    # (the in-process filter alone would not); set before the JVM and
-    # worker pool launch.
-    import re
+    # Silence the pandas concat FutureWarning at the source: it leaked
+    # ahead of the JSON line in the driver's tail capture. The env var
+    # reaches the forked Python UDF workers (the in-process filter
+    # alone would not); set before the JVM and worker pool launch.
     import warnings
 
     warnings.filterwarnings("ignore", category=FutureWarning)
@@ -154,8 +231,7 @@ def _run(real_stdout: int, noise_path: str) -> None:
         "ignore", message="Cannot infer the eval type"
     )
     # message is a REGEX: the literal '+' in the advisory text made
-    # the unescaped pattern unmatchable (observed still firing after
-    # the first silencing attempt) — escape it
+    # the unescaped pattern unmatchable — escape it
     warnings.filterwarnings(
         "ignore", message=re.escape("In Python 3.6+ and Spark 3.0+")
     )
@@ -171,27 +247,21 @@ def _run(real_stdout: int, noise_path: str) -> None:
     )
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     # Host-contention sentinel, taken BEFORE the JVM exists and again
     # after the sweep: two clean snapshots bracketing the measurement.
     sentinel_start = _load_sentinel()
 
     from cassandra_log_analyzer_mcp_spark.plans import registry
-    from cassandra_log_analyzer_mcp_spark.session import get_spark
+    from cassandra_log_analyzer_mcp_spark.session import local_spark
+    from perfbench.tracing import ProgressListener, SparkStats
 
-    spark = get_spark(
-        app_name="bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_spark("bench")
 
     qs = registry.queries()
-    # Optional slate restriction (round 8 — the sf1.0 scaling leg
-    # runs the ~20-query headline slate only; the generated decade
-    # drop ships no scaled embeddings/multimodal columns): comma-
-    # separated query names, unknown names rejected loudly.
+    # Optional slate restriction (a scaling leg or a worker-width run
+    # times a named slate only): comma-separated query names, unknown
+    # names rejected loudly.
     subset = os.environ.get("SPARK_GRAFT_QUERIES")
     if subset:
         names = [n.strip() for n in subset.split(",") if n.strip()]
@@ -215,107 +285,32 @@ def _run(real_stdout: int, noise_path: str) -> None:
             ).save()
         except Exception as e:
             print(f"warm-up failed: {name}: {type(e).__name__}", file=sys.stderr)
-    # Materialize the two designed build-once shared layers at the
-    # measured SF before timing: the parsed-silver cache and the
-    # per-doc shingle arrays (the 100 TB analogue is a written silver
-    # parquet table). Per-query timings below are then the MARGINAL
-    # cost of each query on top of shared infrastructure — the same
-    # accounting a warehouse benchmark uses (load ≠ query).
-    from cassandra_log_analyzer_mcp_spark.operators.dedup import (
-        _doc_shingle_arrays,
-    )
-    from cassandra_log_analyzer_mcp_spark.sources.tables import logs_flagged
-    from cassandra_log_analyzer_mcp_spark.streaming.batch_bridge import (
-        _landed_silver_dir,
-    )
+    # Build the shared build-once layers at the measured SF before
+    # timing, each recorded by name in the sidecar: per-query timings
+    # are then the MARGINAL cost of each query on top of shared
+    # infrastructure (load ≠ query), and a layer's cost does not land
+    # on whichever consumer happens to run first.
+    shared_build_s = registry.prebuild_shared_layers(spark, sf_dir)
 
-    # Each shared layer's build time is recorded by name in the
-    # sidecar (ADVICE r6): pre-paying these OUTSIDE the timed loop is
-    # an accounting change vs pre-r6 sidecars — cross-round A/B reads
-    # must not mistake the moved cost for a code win (ab_compare.py
-    # notes this in its protocol string).
-    shared_build_s: dict[str, float] = {}
-
-    def _build(layer: str, fn) -> None:
-        t0 = time.perf_counter()
-        fn()
-        shared_build_s[layer] = round(time.perf_counter() - t0, 3)
-
-    _build(
-        "_shared_logs_flagged_build_s",
-        lambda: logs_flagged(spark, sf_dir)
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
-    )
-    _build(
-        "_shared_shingle_arrays_build_s",
-        lambda: _doc_shingle_arrays(spark, sf_dir)
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
-    )
-    # the streaming analogue of the silver cache (round 6): the raw
-    # text landing + the ONE checkpointed parse→silver ingest stream
-    # every bridge query consumes; build ≠ query, same accounting as
-    # the two batch layers above
-    _build(
-        "_shared_silver_build_s",
-        lambda: _landed_silver_dir(spark, sf_dir),
-    )
-    # the batch silver parquet table itself (written once at 100 TB;
-    # silver_node_errors & co. still rebuild their OWN writes so the
-    # write path stays under the hash gate — this only pre-pays the
-    # shared read-side location)
-    from cassandra_log_analyzer_mcp_spark.sources.silver import silver_path
-
-    _build(
-        "_shared_batch_silver_build_s",
-        lambda: silver_path(spark, sf_dir),
-    )
-    # the trained k-means index (assignment + exact centroid state) —
-    # the fourth designed build-once layer (its docstring's 100 TB
-    # analogue is a written cluster-id table; three registry queries
-    # consume the cached assignment and ann_ivf_kmeans reads the
-    # memoized trained state). Measured: the build is ~14 s of
-    # round-structured Lloyd jobs at sf0.1 while the consuming
-    # queries cost 0.2-3 s marginal — charging the build to whichever
-    # consumer happens to run first made bench ordering, not plan
-    # quality, decide the top rows.
-    from cassandra_log_analyzer_mcp_spark.operators.similarity import (
-        kmeans_assignments,
-        kmeans_centroid_state,
-    )
-
-    def _kmeans_layer() -> None:
-        kmeans_assignments(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        kmeans_centroid_state(spark, sf_dir)
-
-    _build("_shared_kmeans_index_build_s", _kmeans_layer)
-
+    stats = SparkStats(spark)
+    listener = ProgressListener()
+    spark.streams.addListener(listener)
     timings: dict[str, float] = {}
+    profile: dict[str, dict] = {}
     for name, fn in qs.items():
-        t0 = time.perf_counter()
-        try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-        except Exception as e:  # a broken query should not hide the rest
-            timings[name] = -1.0
-            print(f"bench error in {name}: {e}", file=sys.stderr)
+        timings[name], profile[name] = _profiled(
+            spark, stats, listener, name, fn, sf_dir
+        )
+    spark.streams.removeListener(listener)
 
     sentinel_end = _load_sentinel()
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # Full per-query detail goes to a sidecar file; the stdout line is
-    # tail-capture-limited (see STDOUT_BYTE_BUDGET). Slate-restricted
-    # runs (SPARK_GRAFT_QUERIES) write a SEPARATE sidecar so a subset
-    # sweep can never clobber the committed full-surface artifact
-    # (VERDICT r9 "what's wrong" #1).
+    # tail-capture-limited (see STDOUT_BYTE_BUDGET).
     here = os.path.dirname(os.path.abspath(__file__))
-    sidecar = "BENCH_FULL_subset.json" if subset else "BENCH_FULL.json"
+    sidecar = sidecar_name(bool(subset), sentinel_start, sentinel_end)
     with open(os.path.join(here, sidecar), "w") as f:
         json.dump(
             {
@@ -325,11 +320,11 @@ def _run(real_stdout: int, noise_path: str) -> None:
                 ),
                 "unit": "sec",
                 "queries": timings,
+                "profile": profile,
                 "sf": sf_val,
                 "shared_build_s": shared_build_s,
                 # contention evidence: loadavg + a fixed pure-Python
-                # spin timing at sweep start/end. tools/ab_compare.py
-                # flags legs whose spin calibrations differ >1.5×.
+                # spin timing at sweep start/end (see sidecar_name)
                 "load_sentinel": {
                     "start": sentinel_start,
                     "end": sentinel_end,

@@ -1,38 +1,11 @@
-"""Plan inspection helpers: audit every registered query's physical
-plan for the shapes that matter at scale."""
+"""Plan inspection: the physical plan of a built frame as text."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), mode
     )
-
-
-def audit(spark: SparkSession, sf_dir: str) -> dict[str, dict]:
-    """Summarize join/scan characteristics per registered query."""
-    from . import registry
-
-    out: dict[str, dict] = {}
-    for name, fn in registry.queries().items():
-        try:
-            p = plan_string(fn(spark, sf_dir))
-        except Exception as e:
-            out[name] = {"error": str(e)}
-            continue
-        out[name] = {
-            "broadcast_joins": p.count("BroadcastHashJoin"),
-            "sortmerge_joins": p.count("SortMergeJoin"),
-            "shuffled_hash_joins": p.count("ShuffledHashJoin"),
-            "cartesian": p.count("CartesianProduct")
-            + p.count("BroadcastNestedLoopJoin"),
-            "exchanges": p.count("Exchange"),
-            "pushed_filters": "PushedFilters: [" in p
-            and "PushedFilters: []" not in p,
-            "codegen_stages": p.count("WholeStageCodegen"),
-            "cached": "InMemoryTableScan" in p,
-        }
-    return out

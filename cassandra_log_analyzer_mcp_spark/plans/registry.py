@@ -6,6 +6,7 @@ re-exports. Every SURVEY §2 operator registers here.
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +40,7 @@ from ..sources.silver import (
     silver_restatement as _silver_restatement,
     silver_branch_diverge as _silver_branch_diverge,
     silver_vacuum as _silver_vacuum,
+    silver_path,
 )
 from ..sources.pyds import (
     python_datasource_node_summary as _pyds_node_summary,
@@ -58,6 +60,45 @@ def _on_logs(op: Callable[[DataFrame], DataFrame]) -> QueryFn:
 
     run.__name__ = op.__name__
     return run
+
+
+def _noop(df: DataFrame) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _kmeans_index(spark: SparkSession, sf_dir: str) -> None:
+    _noop(similarity.kmeans_assignments(spark, sf_dir))
+    similarity.kmeans_centroid_state(spark, sf_dir)
+
+
+#: The build-once layers many queries read, by the name their build
+#: time is reported under, in build order: the cached parse+flag log
+#: frame, the per-doc shingle arrays, the streaming silver landing
+#: (the one checkpointed parse→silver ingest every bridge streams
+#: from), the batch silver table, and the trained k-means index
+#: (assignment + exact centroid state). Each is cached or memoized per
+#: session, so a prebuild moves its cost out of whichever query runs
+#: first.
+SHARED_LAYERS: dict[str, Callable[[SparkSession, str], object]] = {
+    "_shared_logs_flagged_build_s":
+        lambda spark, sf_dir: _noop(logs_flagged(spark, sf_dir)),
+    "_shared_shingle_arrays_build_s":
+        lambda spark, sf_dir: _noop(dedup._doc_shingle_arrays(spark, sf_dir)),
+    "_shared_silver_build_s": batch_bridge._landed_silver_dir,
+    "_shared_batch_silver_build_s": silver_path,
+    "_shared_kmeans_index_build_s": _kmeans_index,
+}
+
+
+def prebuild_shared_layers(spark: SparkSession, sf_dir: str) -> dict[str, float]:
+    """Build every ``SHARED_LAYERS`` entry at ``sf_dir``; seconds per
+    layer, by name. A failing build raises."""
+    built: dict[str, float] = {}
+    for name, build in SHARED_LAYERS.items():
+        t0 = time.perf_counter()
+        build(spark, sf_dir)
+        built[name] = round(time.perf_counter() - t0, 3)
+    return built
 
 
 def queries() -> dict[str, QueryFn]:

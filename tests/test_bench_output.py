@@ -119,6 +119,43 @@ def test_combined_capture_tail_is_bare_json() -> None:
     for leg in ("start", "end"):
         assert sent[leg]["spin_s"] > 0
         assert len(sent[leg]["loadavg"]) == 3
+    # one profile per timed query: the build part of its total, the
+    # plan string's seconds (outside the total), its job-group counts
+    for name in full["slate"]:
+        prof = full["profile"][name]
+        assert 0 <= prof["build_s"] <= full["queries"][name], prof
+        assert prof["plan_s"] >= 0
+        for key in ("exchanges", "broadcast_joins", "sortmerge_joins",
+                    "windows", "codegen_stages", "stages", "tasks",
+                    "shuffle_write_mb", "spill_mb", "executor_s"):
+            assert prof[key] >= 0, (name, key)
+    assert full["profile"]["issue_counts"]["jobs"] >= 1
+    # the shared layers are recorded under the prebuild's own names
+    assert set(full["shared_build_s"]) == set(registry.SHARED_LAYERS)
+
+
+def test_contaminated_full_sweep_gets_its_own_sidecar() -> None:
+    """A full sweep whose own spin calibrations differ by more than
+    SPIN_RATIO_MAX cannot overwrite the committed sidecar."""
+    clean = ({"spin_s": 0.20}, {"spin_s": 0.25})
+    dirty = ({"spin_s": 0.20}, {"spin_s": 0.35})
+    assert bench.sidecar_name(False, *clean) == "BENCH_FULL.json"
+    assert bench.sidecar_name(False, *dirty) == "BENCH_FULL_contaminated.json"
+    assert bench.sidecar_name(True, *dirty) == "BENCH_FULL_subset.json"
+
+
+def test_plan_shape_counts_each_node_once() -> None:
+    plan = (
+        "== Physical Plan ==\n"
+        "AdaptiveSparkPlan (5)\n+- Window (4)\n   +- Exchange (3)\n\n\n"
+        "(1) Scan parquet \n(2) Filter [codegen id : 1]\n"
+        "(3) Exchange\nArguments: hashpartitioning(k#1, 4)\n"
+        "(4) Window\n(5) AdaptiveSparkPlan\n"
+    )
+    assert bench.plan_shape(plan) == {
+        "exchanges": 1, "broadcast_joins": 0, "sortmerge_joins": 0,
+        "windows": 1, "codegen_stages": 1,
+    }
 
 
 def test_pathologically_long_names_never_overflow() -> None:

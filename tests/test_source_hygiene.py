@@ -54,3 +54,26 @@ def test_tests_make_scratch_dirs_through_pytest():
         if _MEMO_ONLY["mkdtemp"].search(line)
     ]
     assert not bad, "mkdtemp in tests: " + ", ".join(bad)
+
+
+#: the shared-layer builders ``registry.prebuild_shared_layers`` owns
+_LAYER_BUILDERS = (
+    "_doc_shingle_arrays",
+    "_landed_silver_dir",
+    "silver_path",
+    "kmeans_assignments",
+    "kmeans_centroid_state",
+)
+
+
+def test_harnesses_prebuild_through_the_registry():
+    """bench.py and the driver entry build the shared layers through
+    the one prebuild, never by naming a layer builder."""
+    root = PKG.parent
+    bad = [
+        f"{name}: {builder}"
+        for name in ("bench.py", "__spark_entry__.py")
+        for builder in _LAYER_BUILDERS
+        if builder in (root / name).read_text()
+    ]
+    assert not bad, "layer builder named outside the prebuild: " + ", ".join(bad)

@@ -11,14 +11,19 @@ re-probe protocol (both orders, plan-md5) before any adjudication.
 from __future__ import annotations
 
 import json
+import os
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import SPIN_RATIO_MAX  # noqa: E402
 
 
 def _calibration_flag(old_full: dict, new_full: dict) -> dict | None:
-    """Cross-leg host-contention rule (VERDICT r8 ask #3): if the two
-    legs' fixed spin calibrations differ >1.5×, wall-clock ratios are
-    comparing hosts/loads, not code — flag the comparison as
-    contaminated instead of leaving the adjudication to prose."""
+    """Cross-leg host-contention rule: if the two legs' fixed spin
+    calibrations differ by more than ``SPIN_RATIO_MAX``, wall-clock
+    ratios are comparing hosts/loads, not code — flag the comparison
+    as contaminated instead of leaving the adjudication to prose."""
     spins = []
     for full in (old_full, new_full):
         sent = full.get("load_sentinel")
@@ -32,8 +37,8 @@ def _calibration_flag(old_full: dict, new_full: dict) -> dict | None:
         "new_leg_mean_spin_s": round(spins[1], 4),
         "ratio": round(ratio, 3),
         "verdict": (
-            "CONTAMINATED: legs ran under >1.5x different host load"
-            if ratio > 1.5
+            f"CONTAMINATED: legs ran under >{SPIN_RATIO_MAX}x different host load"
+            if ratio > SPIN_RATIO_MAX
             else "clean: comparable host load across legs"
         ),
     }

@@ -106,16 +106,10 @@ def main() -> int:
     from cassandra_log_analyzer_mcp_spark.plans import registry
     from cassandra_log_analyzer_mcp_spark.session import (
         clear_caches,
-        get_spark,
+        local_spark,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="cache_census",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_spark("cache_census")
 
     qs = registry.queries()
     names = list(qs) if full else REPRESENTATIVE

@@ -129,14 +129,9 @@ def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/spark_graft_sf1.0"
 
-    from cassandra_log_analyzer_mcp_spark.session import get_spark
+    from cassandra_log_analyzer_mcp_spark.session import local_spark
 
-    spark = get_spark(
-        app_name="make_sf1",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        shuffle_partitions=32,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_spark("make_sf1", shuffle_partitions=32)
 
     for t in VERBATIM:
         spark.read.parquet(os.path.join(src, f"{t}.parquet")).write.mode(

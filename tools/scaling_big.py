@@ -118,14 +118,9 @@ def run_leg(scale: int, out_path: str) -> None:
     from cassandra_log_analyzer_mcp_spark.operators import dedup as D
     from cassandra_log_analyzer_mcp_spark.operators import similarity as S
     from cassandra_log_analyzer_mcp_spark.plans import registry
-    from cassandra_log_analyzer_mcp_spark.session import get_spark
+    from cassandra_log_analyzer_mcp_spark.session import local_spark
 
-    spark = get_spark(
-        app_name=f"scaling_big_s{scale}",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        shuffle_partitions=32,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_spark(f"scaling_big_s{scale}", shuffle_partitions=32)
 
     # pinned-recipe re-derivation at ids EXCLUSIVE to this scale's
     # tail group (base doc, light copy, independent doc; 3 vector

@@ -68,7 +68,6 @@ SF_DIRS = {
 def run_leg(slate: list[str], sf_dir: str) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
-    env["SPARK_GRAFT_CPUS"] = env.get("SPARK_GRAFT_CPUS", "32")
     env["SPARK_GRAFT_QUERIES"] = ",".join(slate)
     # capture the leg's output for diagnostics (ADVICE r9: DEVNULL +
     # check=True aborted the sweep with nothing to read on failure)

@@ -327,14 +327,9 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
 
     from cassandra_log_analyzer_mcp_spark.plans import registry
-    from cassandra_log_analyzer_mcp_spark.session import get_spark
+    from cassandra_log_analyzer_mcp_spark.session import local_spark
 
-    spark = get_spark(
-        app_name="skew_gate",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_spark("skew_gate")
 
     root = os.path.join("/tmp", f"spark_graft_skewgate_{os.getpid()}")
     stats = build_drops(spark, sf_dir, root)
