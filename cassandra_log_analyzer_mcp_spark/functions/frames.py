@@ -1,4 +1,6 @@
-"""Driver-literal DataFrames without the Python-worker round trip.
+"""Frame-level helpers: driver-literal DataFrames without the
+Python-worker round trip (``local_frame``) and the skew-safe
+two-stage per-key top-N (``two_stage_top_n``).
 
 ``spark.createDataFrame(list_of_tuples, ddl)`` parallelizes pickled
 rows through a Python worker: every action over the frame (including
@@ -26,7 +28,9 @@ from __future__ import annotations
 import logging
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.sql.window import Window
 
 _log = logging.getLogger(__name__)
 #: whether a fallback to the classic path has been reported
@@ -72,3 +76,25 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
                 "using createDataFrame(rows, ddl)", type(e).__name__, e,
             )
         return spark.createDataFrame(rows, schema)
+
+
+def two_stage_top_n(
+    df: DataFrame, key: str, block: str, n: int, *order
+) -> DataFrame:
+    """The first ``n`` rows per ``key`` by ``order``, numbered ``rn``.
+
+    When ``key`` has few values (nodes, clusters), one window
+    partitioned by it alone funnels the whole input through that many
+    tasks. Stage 1 keeps the first ``n`` within each (``key``,
+    ``block``) — fine-grained partitions, fully parallel; a key's
+    global first ``n`` is necessarily among its blocks' first ``n``.
+    Stage 2 re-ranks only the survivors. Both stages' ranks are left
+    on the frame (``pre_rn``, ``rn``) for the caller's projection."""
+    pre_w = Window.partitionBy(key, block).orderBy(*order)
+    w = Window.partitionBy(key).orderBy(*order)
+    return (
+        df.withColumn("pre_rn", F.row_number().over(pre_w))
+        .filter(F.col("pre_rn") <= n)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
+    )

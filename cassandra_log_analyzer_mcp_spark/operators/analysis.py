@@ -30,7 +30,7 @@ from ..functions.parsing import (
     RECOMMENDATION_RULES,
 )
 from ..functions.spans import epoch_span_midpoint
-from ..functions.frames import local_frame
+from ..functions.frames import local_frame, two_stage_top_n
 
 def _severity_map():
     return F.create_map(
@@ -108,27 +108,17 @@ def compare_nodes(logs: DataFrame) -> DataFrame:
 def get_errors(logs: DataFrame, limit_per_node: int = 50) -> DataFrame:
     """First N error entries per node in log order (ref :801-826).
 
-    Skew-aware two-stage top-N: node cardinality is tiny (cluster
-    size), so a single per-node window would funnel the whole error
-    stream through a handful of partitions. Stage 1 takes the first N
-    within each (node, day) — fine-grained partitions, massively
-    parallel; the global first-N per node is necessarily contained in
-    some day's first-N. Stage 2 re-ranks only the ≤ N×days survivors.
+    Node cardinality is tiny (cluster size), so the top-N is
+    two-stage over (node, day) blocks (``two_stage_top_n``): stage 2
+    re-ranks only the ≤ N×days survivors.
     """
-    pre_w = Window.partitionBy("node", "day").orderBy("ts", "line_id")
-    w = Window.partitionBy("node").orderBy("ts", "line_id")
-    return (
-        logs.filter(F.col("is_error"))
-        .select(
-            "node", "ts_str", "level", "clazz", "message", "ts", "line_id",
-            F.to_date("ts").alias("day"),
-        )
-        .withColumn("pre_rn", F.row_number().over(pre_w))
-        .filter(F.col("pre_rn") <= limit_per_node)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= limit_per_node)
-        .select("node", "rn", "ts_str", "level", "clazz", "message")
+    errors = logs.filter(F.col("is_error")).select(
+        "node", "ts_str", "level", "clazz", "message", "ts", "line_id",
+        F.to_date("ts").alias("day"),
     )
+    return two_stage_top_n(
+        errors, "node", "day", limit_per_node, "ts", "line_id"
+    ).select("node", "rn", "ts_str", "level", "clazz", "message")
 
 
 #: line-id block width for two-stage per-node line numbering. At 100 TB
@@ -227,20 +217,13 @@ def error_timeline_raw(logs: DataFrame, limit_per_node: int = 100) -> DataFrame:
     and the operator scale-safe — same two-stage (node, day) top-N
     shape as get_errors.
     """
-    pre_w = Window.partitionBy("node", "day").orderBy("ts", "line_id")
-    w = Window.partitionBy("node").orderBy("ts", "line_id")
-    return (
-        logs.filter(F.col("level").isin("ERROR", "WARN"))
-        .select(
-            "node", "ts_str", "level", "thread", "clazz", "message",
-            "ts", "line_id", F.to_date("ts").alias("day"),
-        )
-        .withColumn("pre_rn", F.row_number().over(pre_w))
-        .filter(F.col("pre_rn") <= limit_per_node)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= limit_per_node)
-        .select("node", "rn", "ts_str", "level", "thread", "clazz", "message")
+    entries = logs.filter(F.col("level").isin("ERROR", "WARN")).select(
+        "node", "ts_str", "level", "thread", "clazz", "message",
+        "ts", "line_id", F.to_date("ts").alias("day"),
     )
+    return two_stage_top_n(
+        entries, "node", "day", limit_per_node, "ts", "line_id"
+    ).select("node", "rn", "ts_str", "level", "thread", "clazz", "message")
 
 
 def search_match(pattern: str, case_sensitive: bool = False) -> Column:

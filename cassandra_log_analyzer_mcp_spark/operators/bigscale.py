@@ -1,4 +1,4 @@
-"""Scale knob for the generated BIG regimes (VERDICT r9 ask #4).
+"""Scale knob for the generated BIG regimes.
 
 The big-dedup and big-ANN regimes are id-parametric md5 recipes —
 growing N is a strict superset of the smaller drop (doc/vector i has
@@ -26,9 +26,9 @@ import os
 
 
 def _parse_big_scale() -> int:
-    """Validated like SPARK_GRAFT_BAND_MAX_OCCUPANCY (ADVICE r9
-    pattern): non-integer fails with a pointed message, < 1 is
-    rejected rather than silently emptying the regimes."""
+    """Validated at import: a non-integer fails with a pointed
+    message, and < 1 is rejected rather than silently emptying the
+    regimes."""
     raw = os.environ.get("SPARK_GRAFT_BIG_SCALE", "1")
     try:
         val = int(raw)

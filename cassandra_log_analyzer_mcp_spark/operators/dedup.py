@@ -77,27 +77,34 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _verified_pairs(arrs: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact Jaccard for candidate (da, db) pairs.
+def _pair_sides(arrs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``pairs`` (da, db, …) with each side's shingle array attached as
+    ``arr_a`` / ``arr_b``.
 
-    Joins each pair to the per-doc shingle ARRAYS (one row per doc,
-    not one per shingle) and intersects map-side — the shuffle volume
-    is O(candidates + docs), versus O(candidates × shingles) for the
-    exploded-join formulation (~100× less data moved here).
-    """
+    The join is to the per-doc ARRAYS (one row per doc, not one per
+    shingle), so the verify that follows intersects map-side — the
+    shuffle volume is O(candidates + docs), versus O(candidates ×
+    shingles) for the exploded-join formulation (~100× less data
+    moved here)."""
     a = arrs.select(F.col("doc_id").alias("da"), F.col("arr").alias("arr_a"))
     b = arrs.select(F.col("doc_id").alias("db"), F.col("arr").alias("arr_b"))
-    inter = F.size(F.array_intersect("arr_a", "arr_b"))
+    return pairs.join(a, "da").join(b, "db")
+
+
+def _inter() -> F.Column:
+    """|A ∩ B| of the two attached shingle arrays."""
+    return F.size(F.array_intersect("arr_a", "arr_b"))
+
+
+def _verified_pairs(arrs: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact Jaccard for candidate (da, db) pairs (``_pair_sides``)."""
+    inter = _inter()
     na = F.size(F.col("arr_a"))
     nb = F.size(F.col("arr_b"))
-    return (
-        cand.join(a, "da")
-        .join(b, "db")
-        .select(
-            "da",
-            "db",
-            F.round(inter / (na + nb - inter), 4).alias("jaccard"),
-        )
+    return _pair_sides(arrs, cand).select(
+        "da",
+        "db",
+        F.round(inter / (na + nb - inter), 4).alias("jaccard"),
     )
 
 
@@ -181,8 +188,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _band_buckets(arrs: DataFrame) -> DataFrame:
-    """(doc_id, band) LSH bucket keys from MinHash signatures.
+def _signatures(arrs: DataFrame) -> DataFrame:
+    """(doc_id, sig0..sigK): MinHash signatures as columns.
 
     Signatures are map-side array folds over the cached shingle
     arrays — min of md5(k:s) per hash family, no aggregation shuffle
@@ -196,13 +203,33 @@ def _band_buckets(arrs: DataFrame) -> DataFrame:
             F.md5(F.concat(F.lit(f"{k}:"), s)), 1, 16
         )
 
-    sigs = arrs.filter(F.size("arr") > 0).select(
+    return arrs.filter(F.size("arr") > 0).select(
         "doc_id",
         *[
             F.array_min(F.transform("arr", _sig_hash(k))).alias(f"sig{k}")
             for k in range(MINHASH_K)
         ],
     )
+
+
+def _signature_sides(sigs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``pairs`` (da, db, …) with each side's signature components
+    attached as ``a0..aK`` / ``b0..bK``."""
+    sa = sigs.select(
+        F.col("doc_id").alias("da"),
+        *[F.col(f"sig{k}").alias(f"a{k}") for k in range(MINHASH_K)],
+    )
+    sb = sigs.select(
+        F.col("doc_id").alias("db"),
+        *[F.col(f"sig{k}").alias(f"b{k}") for k in range(MINHASH_K)],
+    )
+    return pairs.join(sa, "da").join(sb, "db")
+
+
+def _band_buckets(arrs: DataFrame) -> DataFrame:
+    """(doc_id, band) LSH bucket keys: consecutive signature pairs
+    (``_signatures``) hashed into MINHASH_BANDS band keys."""
+    sigs = _signatures(arrs)
     bands = F.array(
         *[
             F.concat(
@@ -215,9 +242,9 @@ def _band_buckets(arrs: DataFrame) -> DataFrame:
     return sigs.select("doc_id", F.explode(bands).alias("band"))
 
 
-#: Hot-bucket guard on the band equi-join (round 8 — VERDICT r7 ask
-#: #3; the df-cap treatment doc_surprisal applies to hot grams,
-#: applied to LSH banding): a band bucket shared by more than this
+#: Hot-bucket guard on the band equi-join (the df-cap treatment
+#: doc_surprisal applies to hot grams, applied to LSH banding): a
+#: band bucket shared by more than this
 #: many docs is boilerplate collision, not near-dup signal, and its
 #: Σc·(c−1)/2 pair expansion lands on ONE join key — one task owns
 #: the whole quadratic blow-up (the skew tools/skew_gate.py plants
@@ -240,39 +267,12 @@ def _band_buckets(arrs: DataFrame) -> DataFrame:
 #: only on pathological drops. Calibration/eval queries
 #: (minhash_estimate_eval, band_tuning, bbit, editdist's candidate
 #: reuse) stay UNCAPPED on purpose — they measure banding itself.
-#: TUNABLE (ADVICE r8): the cap is a recall/throughput trade, so a
-#: boilerplate-heavy deployment that wants the lost pairs back (or a
-#: skew-prone one that wants a tighter guard) sets
-#: SPARK_GRAFT_BAND_MAX_OCCUPANCY — the DuckDB oracles interpolate
-#: THIS constant, so both engines move together; dedup_guard_report
-#: surfaces the dropped-bucket count IN-BAND next to the verified
-#: pair volume, so a pathological corpus shows its recall trade in
-#: the dedup output stream itself, not only in the separate census.
-def _parse_band_max_occupancy() -> int:
-    """Validate the tunable at parse time (ADVICE r9): a non-integer
-    value must fail with a pointed message rather than a bare
-    ValueError on every import, and a value < 1 would mark EVERY
-    occupied bucket hot — silently emptying the whole minhash dedup
-    family (the oracles would move with it, keeping the gate green
-    while the operators return nothing)."""
-    raw = os.environ.get("SPARK_GRAFT_BAND_MAX_OCCUPANCY", "64")
-    try:
-        val = int(raw)
-    except ValueError:
-        raise ValueError(
-            f"SPARK_GRAFT_BAND_MAX_OCCUPANCY={raw!r} is not an "
-            "integer; it caps per-(band,bucket) occupancy for the "
-            "minhash dedup family (default 64)"
-        ) from None
-    if val < 1:
-        raise ValueError(
-            f"SPARK_GRAFT_BAND_MAX_OCCUPANCY={val} would drop every "
-            "occupied bucket (must be >= 1)"
-        )
-    return val
-
-
-BAND_MAX_OCCUPANCY = _parse_band_max_occupancy()
+#: The DuckDB oracles interpolate THIS constant, so both engines move
+#: together if it is changed; dedup_guard_report surfaces the
+#: dropped-bucket count IN-BAND next to the verified pair volume, so
+#: a pathological corpus shows its recall trade in the dedup output
+#: stream itself, not only in the separate census.
+BAND_MAX_OCCUPANCY = 64
 
 
 def _bucket_pairs(buckets: DataFrame, cap: int | None = None) -> DataFrame:
@@ -545,8 +545,8 @@ def band_occupancy_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_guard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IN-BAND recall-trade accounting for the hot-bucket guard
-    (ADVICE r8): one row pairing the production dedup OUTPUT volume
+    """IN-BAND recall-trade accounting for the hot-bucket guard: one
+    row pairing the production dedup OUTPUT volume
     (verified pairs ≥ MINHASH_VERIFY_MIN from the capped index) with
     what the cap dropped — hot-bucket count and the Σc·(c−1)/2
     within-bucket pair volume the guard declined to generate (an
@@ -554,8 +554,8 @@ def dedup_guard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     its other bands). On shipped corpora the drop columns read 0; on
     a boilerplate-heavy corpus the consumer sees the recall trade in
     the SAME result stream as the dedup output, not only in the
-    separate band_occupancy_census, and can re-run with
-    SPARK_GRAFT_BAND_MAX_OCCUPANCY raised.
+    separate band_occupancy_census, and can decide whether to raise
+    BAND_MAX_OCCUPANCY.
 
     Scale shape: composes the graded pair generator (cached — free if
     dedup already ran) plus one groupBy(band) rollup; both sides
@@ -668,20 +668,14 @@ def minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     arrs = _doc_shingle_arrays(spark, sf_dir)
     cand = _band_candidates(_band_buckets(arrs))
-    a = arrs.select(F.col("doc_id").alias("da"), F.col("arr").alias("arr_a"))
-    b = arrs.select(F.col("doc_id").alias("db"), F.col("arr").alias("arr_b"))
-    inter = F.size(F.array_intersect("arr_a", "arr_b"))
-    scored = (
-        cand.join(a, "da")
-        .join(b, "db")
-        .select(
-            "da",
-            "db",
-            F.round(inter / F.size("arr_a"), 4).alias("containment_a"),
-            F.round(inter / F.size("arr_b"), 4).alias("containment_b"),
-            F.size("arr_a").cast("long").alias("n_a"),
-            F.size("arr_b").cast("long").alias("n_b"),
-        )
+    inter = _inter()
+    scored = _pair_sides(arrs, cand).select(
+        "da",
+        "db",
+        F.round(inter / F.size("arr_a"), 4).alias("containment_a"),
+        F.round(inter / F.size("arr_b"), 4).alias("containment_b"),
+        F.size("arr_a").cast("long").alias("n_a"),
+        F.size("arr_b").cast("long").alias("n_b"),
     )
     return scored.filter(
         F.greatest("containment_a", "containment_b") >= CONTAINMENT_MIN
@@ -1291,23 +1285,19 @@ def _spread_pairs(spark: SparkSession, cand: DataFrame) -> DataFrame:
     return cand.repartition(n, "da", "db")
 
 
-def editdist_pairs(cand: DataFrame, docs: DataFrame) -> DataFrame:
-    """Verify candidate (da, db) pairs by character edit distance.
+def _edit_candidates(cand: DataFrame, docs: DataFrame) -> DataFrame:
+    """(da, db, ta, tb, max_len, thr): candidate pairs with both texts
+    attached, length-prefiltered, and each pair's edit budget ``thr``
+    = floor(max_len·EDIT_NUM/EDIT_DEN).
 
-    Two scale guards before any quadratic work runs:
-    - length prefilter: dist >= |len_a - len_b|, so a pair whose
-      length gap already exceeds the budget never reaches the DP;
-    - Spark's THRESHOLDED levenshtein (per-pair cap = the pair's own
-      budget floor(max_len/EDIT_DEN)): the banded O(k*n) algorithm
-      instead of the O(n^2) full matrix, returning -1 above the cap.
-      dist <= floor(max/D) <=> D*dist <= max over integers, so the
-      thresholded form is exactly the ratio rule the oracle states.
-    """
+    The length prefilter is sound for every edit distance here:
+    dist >= |len_a - len_b|, so a pair whose length gap already
+    exceeds the budget never reaches a DP."""
     a = docs.select(F.col("doc_id").alias("da"), F.col("text").alias("ta"))
     b = docs.select(F.col("doc_id").alias("db"), F.col("text").alias("tb"))
     la, lb = F.length("ta"), F.length("tb")
     mx = F.greatest(la, lb)
-    joined = (
+    return (
         cand.join(a, "da")
         .join(b, "db")
         .filter(EDIT_DEN * F.abs(la - lb) <= EDIT_NUM * mx)
@@ -1317,8 +1307,21 @@ def editdist_pairs(cand: DataFrame, docs: DataFrame) -> DataFrame:
             F.floor(EDIT_NUM * mx / EDIT_DEN).cast("int").alias("thr"),
         )
     )
+
+
+def editdist_pairs(cand: DataFrame, docs: DataFrame) -> DataFrame:
+    """Verify candidate (da, db) pairs by character edit distance.
+
+    Two scale guards before any quadratic work runs: the length
+    prefilter of ``_edit_candidates``, and Spark's THRESHOLDED
+    levenshtein (per-pair cap = the pair's own budget ``thr``): the
+    banded O(k*n) algorithm instead of the O(n^2) full matrix,
+    returning -1 above the cap. dist <= floor(max/D) <=> D*dist <= max
+    over integers, so the thresholded form is exactly the ratio rule
+    the oracle states.
+    """
     return (
-        joined.select(
+        _edit_candidates(cand, docs).select(
             "da", "db", "max_len",
             F.expr("levenshtein(ta, tb, thr)").alias("edit_dist"),
         )
@@ -1512,24 +1515,6 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _signatures(arrs: DataFrame) -> DataFrame:
-    """(doc_id, sig0..sigK): the MinHash signature as columns — the
-    same map-side array folds _band_buckets packs into band keys,
-    exposed for component-level evaluation."""
-    def _sig_hash(k: int):
-        return lambda s: F.substring(
-            F.md5(F.concat(F.lit(f"{k}:"), s)), 1, 16
-        )
-
-    return arrs.filter(F.size("arr") > 0).select(
-        "doc_id",
-        *[
-            F.array_min(F.transform("arr", _sig_hash(k))).alias(f"sig{k}")
-            for k in range(MINHASH_K)
-        ],
-    )
-
-
 def minhash_estimate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash ESTIMATOR calibration — the sketch-eval report for the
     Jaccard family (CMS and KMV have theirs): for every LSH candidate
@@ -1548,38 +1533,22 @@ def minhash_estimate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass it evaluates.
     """
     arrs = _doc_shingle_arrays(spark, sf_dir)
-    sigs = _signatures(arrs)
-    buckets = _band_buckets(arrs)
-    cand = _bucket_pairs(buckets)
-    sa = sigs.select(
-        F.col("doc_id").alias("da"),
-        *[F.col(f"sig{k}").alias(f"a{k}") for k in range(MINHASH_K)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("db"),
-        *[F.col(f"sig{k}").alias(f"b{k}") for k in range(MINHASH_K)],
-    )
+    cand = _bucket_pairs(_band_buckets(arrs))
     n_match = sum(
         (F.col(f"a{k}") == F.col(f"b{k}")).cast("int")
         for k in range(MINHASH_K)
     )
-    a = arrs.select(F.col("doc_id").alias("da"), F.col("arr").alias("arr_a"))
-    b = arrs.select(F.col("doc_id").alias("db"), F.col("arr").alias("arr_b"))
-    inter = F.size(F.array_intersect("arr_a", "arr_b"))
-    return (
-        cand.join(sa, "da")
-        .join(sb, "db")
-        .join(a, "da")
-        .join(b, "db")
-        .select(
-            "da",
-            "db",
-            n_match.cast("int").alias("n_match"),
-            inter.cast("long").alias("inter_size"),
-            (
-                F.size("arr_a") + F.size("arr_b") - inter
-            ).cast("long").alias("union_size"),
-        )
+    inter = _inter()
+    return _pair_sides(
+        arrs, _signature_sides(_signatures(arrs), cand)
+    ).select(
+        "da",
+        "db",
+        n_match.cast("int").alias("n_match"),
+        inter.cast("long").alias("inter_size"),
+        (
+            F.size("arr_a") + F.size("arr_b") - inter
+        ).cast("long").alias("union_size"),
     )
 
 
@@ -1686,17 +1655,7 @@ def minhash_bbit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached map-side folds, and the eval moves only (pair, 2 ints).
     """
     arrs = _doc_shingle_arrays(spark, sf_dir)
-    sigs = _signatures(arrs)
-    buckets = _band_buckets(arrs)
-    cand = _bucket_pairs(buckets)
-    sa = sigs.select(
-        F.col("doc_id").alias("da"),
-        *[F.col(f"sig{k}").alias(f"a{k}") for k in range(MINHASH_K)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("db"),
-        *[F.col(f"sig{k}").alias(f"b{k}") for k in range(MINHASH_K)],
-    )
+    cand = _bucket_pairs(_band_buckets(arrs))
     n_full = sum(
         (F.col(f"a{k}") == F.col(f"b{k}")).cast("int")
         for k in range(MINHASH_K)
@@ -1709,15 +1668,11 @@ def minhash_bbit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("int")
         for k in range(MINHASH_K)
     )
-    return (
-        cand.join(sa, "da")
-        .join(sb, "db")
-        .select(
-            "da",
-            "db",
-            n_full.cast("int").alias("n_match"),
-            n_b4.cast("int").alias("n_match_b4"),
-        )
+    return _signature_sides(_signatures(arrs), cand).select(
+        "da",
+        "db",
+        n_full.cast("int").alias("n_match"),
+        n_b4.cast("int").alias("n_match_b4"),
     )
 
 
@@ -1853,15 +1808,7 @@ def minhash_band_tuning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("band"),
     )
     cand = _bucket_pairs(single)
-    sa = sigs.select(
-        F.col("doc_id").alias("da"),
-        *[F.col(f"sig{k}").alias(f"a{k}") for k in range(MINHASH_K)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("db"),
-        *[F.col(f"sig{k}").alias(f"b{k}") for k in range(MINHASH_K)],
-    )
-    ver = _verified_pairs(arrs, cand).join(sa, "da").join(sb, "db")
+    ver = _signature_sides(sigs, _verified_pairs(arrs, cand))
     ok = F.col("jaccard") >= MINHASH_VERIFY_MIN
 
     def collides(nb: int, rpb: int):
@@ -2231,20 +2178,7 @@ def dedup_editdist_dl(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrs = _doc_shingle_arrays(spark, sf_dir)
     cand = _spread_pairs(spark, _bucket_pairs(_band_buckets(arrs)))
     docs = documents(spark, sf_dir).select("doc_id", "text")
-    a = docs.select(F.col("doc_id").alias("da"), F.col("text").alias("ta"))
-    b = docs.select(F.col("doc_id").alias("db"), F.col("text").alias("tb"))
-    la, lb = F.length("ta"), F.length("tb")
-    mx = F.greatest(la, lb)
-    joined = (
-        cand.join(a, "da")
-        .join(b, "db")
-        .filter(EDIT_DEN * F.abs(la - lb) <= EDIT_NUM * mx)
-        .select(
-            "da", "db", "ta", "tb",
-            mx.alias("max_len"),
-            F.floor(EDIT_NUM * mx / EDIT_DEN).cast("int").alias("thr"),
-        )
-    )
+    joined = _edit_candidates(cand, docs)
     # one thresholded JVM levenshtein at the 2·thr+1 budget feeds
     # both the skip proof and the band tightening (docstring steps
     # 1-3); lev_dist's graded -1 sentinel semantics are recovered
@@ -2505,16 +2439,12 @@ def dedup_minhash_recall_big(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cap, so the pinned recall tables are unchanged — and the
     # "identical to production dedup" claim below stays literal)
     cand = _band_candidates(_band_buckets(arrs))
-    planted = _big_planted_pairs(spark)
-    a = arrs.select(F.col("doc_id").alias("da"), F.col("arr").alias("arr_a"))
-    b = arrs.select(F.col("doc_id").alias("db"), F.col("arr").alias("arr_b"))
-    inter = F.size(F.array_intersect("arr_a", "arr_b"))
+    inter = _inter()
     union = (
         F.size(F.col("arr_a")) + F.size(F.col("arr_b")) - inter
     )
     scored = (
-        planted.join(a, "da")
-        .join(b, "db")
+        _pair_sides(arrs, _big_planted_pairs(spark))
         .join(
             cand.withColumn("is_cand", F.lit(1)),
             ["da", "db"],

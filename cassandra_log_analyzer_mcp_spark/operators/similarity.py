@@ -24,10 +24,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import as_double, dot, dot_long, lit_vector, norm
-from ..sources.tables import table
+from ..sources.tables import spread, table
 from ..memo import memoized, work_path
 from .bigscale import BIG_SCALE
-from ..functions.frames import local_frame
+from ..functions.frames import local_frame, two_stage_top_n
 
 KNN_N_QUERIES = 5    # vec_id < 5 are the query vectors
 KNN_TOP_K = 10
@@ -51,28 +51,54 @@ def lsh_planes(n_planes: int = ANN_N_PLANES, dim: int = EMBED_DIM) -> list[list[
     return [[float(rng.choice((-1, 1))) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def _ranked(pairs: DataFrame, top_k: int) -> DataFrame:
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return pairs.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= top_k
+def _ranked(
+    pairs: DataFrame,
+    top_k: int,
+    score: str = "sim",
+    desc: bool = True,
+    tie: str = "vec_id",
+    rn: str = "rn",
+) -> DataFrame:
+    """Per-query top-k: ``rn`` numbers each q_id's rows by ``score``
+    (descending unless ``desc`` is False), ties broken by ``tie``
+    ascending, and rows past ``top_k`` are dropped. Every ranked
+    candidate list in this module (final top-k, ADC shortlist, IVF
+    probe list) is this one window."""
+    order = F.col(score).desc() if desc else F.col(score)
+    w = Window.partitionBy("q_id").orderBy(order, F.col(tie))
+    return pairs.withColumn(rn, F.row_number().over(w)).filter(
+        F.col(rn) <= top_k
     )
 
 
+def _queries(corpus: DataFrame, n: int, *cols) -> DataFrame:
+    """The query side of a search: the first ``n`` vectors, vec_id
+    renamed q_id, carrying ``cols``."""
+    return corpus.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("q_id"), *cols
+    )
+
+
+def _candidates(
+    corpus: DataFrame, queries: DataFrame, on: str | list[str] | None = None
+) -> DataFrame:
+    """(query, corpus vector) candidate pairs: the small query side
+    broadcast over the corpus, crossed (``on`` None) or equi-joined on
+    an index key (bucket, cell, PQ code), a query never paired with
+    itself."""
+    q = F.broadcast(queries)
+    joined = corpus.crossJoin(q) if on is None else corpus.join(q, on)
+    return joined.filter(F.col("vec_id") != F.col("q_id"))
+
+
 def _emb_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings table spread across cores (same treatment as
-    sources.tables.documents: the testdata ships as one parquet
-    split, and the vector operators are CPU-bound — per-candidate
-    dot products over dim-64 arrays — so one narrow 0.8 MB shuffle
-    buys cluster-wide verify stages; measured round 10, the
-    multiprobe pair join ran its whole explode→join→cosine pipeline
-    in the scan's single task without it). Routed through this
-    module's ``table`` symbol so the unit-test monkeypatch seam
-    keeps working; real corpora arrive in thousands of splits and
-    skip the branch."""
-    df = table(spark, sf_dir, "embeddings")
-    if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-    return df
+    """embeddings table spread across cores (sources.tables.spread:
+    the vector operators are CPU-bound — per-candidate dot products
+    over dim-64 arrays — and without the spread the multiprobe pair
+    join ran its whole explode→join→cosine pipeline in the scan's
+    single task). Read through this module's ``table`` symbol so the
+    unit-test monkeypatch seam keeps working."""
+    return spread(spark, table(spark, sf_dir, "embeddings"))
 
 
 def _embeddings_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,6 +127,30 @@ def _pair_sim(qv: str, v: str, qn: str, vn: str) -> F.Column:
 QUANT_SCALE = 127
 
 
+def _codes(v: str) -> F.Column:
+    """int8 codes of a unit-norm double-array column: floor(x·127)
+    per component."""
+    return F.transform(v, lambda x: F.floor(x * QUANT_SCALE))
+
+
+def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, q): every embedding as its int8 codes."""
+    emb = _emb_table(spark, sf_dir).select(
+        "vec_id", as_double(F.col("embedding")).alias("v")
+    )
+    return emb.select("vec_id", _codes("v").alias("q"))
+
+
+def _int8_queries(quant: DataFrame, n: int) -> DataFrame:
+    """(q_id, qq): the first ``n`` quantized vectors as queries."""
+    return _queries(quant, n, F.col("q").alias("qq"))
+
+
+def _qdot() -> F.Column:
+    """Exact integer query·candidate score over int8 codes."""
+    return dot_long(F.col("qq"), F.col("q")).alias("qdot")
+
+
 def knn_quantized_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k neighbors over int8-quantized vectors — the memory-
     bandwidth path of large-scale ANN (4 bytes/dim → 1): scores are
@@ -110,31 +160,29 @@ def knn_quantized_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-queries / per-query-top-k shape as the exact brute path;
     recall vs full-precision is asserted in tests.
     """
-    emb = _emb_table(spark, sf_dir).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
+    quant = _quantized(spark, sf_dir)
+    pairs = _candidates(quant, _int8_queries(quant, KNN_N_QUERIES)).select(
+        "q_id", "vec_id", _qdot()
     )
-    quant = emb.select(
-        "vec_id",
-        F.transform("v", lambda x: F.floor(x * QUANT_SCALE)).alias("q"),
+    return _ranked(pairs, KNN_TOP_K, "qdot").select(
+        "q_id", "vec_id", "qdot", "rn"
     )
-    queries = quant.filter(F.col("vec_id") < KNN_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("q").alias("qq")
+
+
+def _normed_queries(emb: DataFrame, n: int, *cols) -> DataFrame:
+    """(q_id, qv, qn, cols): the first ``n`` vectors of a normed
+    frame as queries."""
+    return _queries(
+        emb, n, F.col("v").alias("qv"), F.col("nv").alias("qn"), *cols
     )
-    pairs = (
-        quant.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            dot_long(F.col("qq"), F.col("q")).alias("qdot"),
-        )
+
+
+def _cosine_topk(pairs: DataFrame, top_k: int) -> DataFrame:
+    """Rounded-cosine top-k of normed (query, candidate) pairs."""
+    scored = pairs.select(
+        "q_id", "vec_id", _pair_sim("qv", "v", "qn", "nv").alias("sim")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("qdot").desc(), F.col("vec_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KNN_TOP_K)
-        .select("q_id", "vec_id", "qdot", "rn")
-    )
+    return _ranked(scored, top_k).select("q_id", "vec_id", "sim", "rn")
 
 
 def _brute_topk(
@@ -145,17 +193,9 @@ def _brute_topk(
     the query set over the corpus scan; the all-pairs cost is bounded
     by n_queries (a dial), never corpus²."""
     emb = _embeddings_normed(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qn"),
+    return _cosine_topk(
+        _candidates(emb, _normed_queries(emb, n_queries)), top_k
     )
-    pairs = (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _pair_sim("qv", "v", "qn", "nv").alias("sim"))
-    )
-    return _ranked(pairs, top_k).select("q_id", "vec_id", "sim", "rn")
 
 
 def knn_cosine_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -333,37 +373,17 @@ def _ivf_index_and_probes(
             F.col("m.cell").alias("cell"),
         )
     )
-    pw = Window.partitionBy("q_id").orderBy(
-        F.col("csim").desc(), F.col("cell")
-    )
-    probes = (
-        scored.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("nv").alias("qn"),
-            "cell",
-            "csim",
-        )
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= nprobe)
-        .select(
-            "q_id", "qv", "qn", "cell",
-            *(["prn"] if keep_prn else []),
-        )
-    )
+    probes = _ranked(
+        _normed_queries(scored, n_queries, "cell", "csim"),
+        nprobe, "csim", tie="cell", rn="prn",
+    ).select("q_id", "qv", "qn", "cell", *(["prn"] if keep_prn else []))
     return assign, probes
 
 
 def _ivf_probe(assign: DataFrame, probes: DataFrame) -> DataFrame:
     # a corpus vector lives in exactly one cell and probe cells are
     # distinct per query, so (q_id, vec_id) pairs are already unique.
-    pairs = (
-        assign.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _pair_sim("qv", "v", "qn", "nv").alias("sim"))
-    )
-    return _ranked(pairs, IVF_TOP_K).select("q_id", "vec_id", "sim", "rn")
+    return _cosine_topk(_candidates(assign, probes, "cell"), IVF_TOP_K)
 
 
 def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -437,8 +457,7 @@ def _sweep_table(
     # each candidate pair appears once per sweep point that includes
     # it; ranking within (nprobe, q_id) reproduces the per-leg top-k
     expanded = (
-        assign.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
+        _candidates(assign, probes, "cell")
         .select(
             "q_id", "vec_id",
             _pair_sim("qv", "v", "qn", "nv").alias("sim"),
@@ -457,7 +476,7 @@ def _sweep_table(
         "left",
     )
     # Every sweep point must emit a row even when the probe join
-    # produced zero candidates for it (ADVICE r6): the oracle's
+    # produced zero candidates for it: the oracle's
     # per-point aggregates over empty sets still return a zero row,
     # so anchor the grouped counts to the literal sweep-point list
     # and coalesce to 0. One row per IVF_SWEEP_PROBES entry, always.
@@ -479,8 +498,7 @@ def _sweep_table(
     # right-outer keeps every sweep point; the BUILD side of a
     # right-outer broadcast join is the LEFT one, so the hint goes on
     # grouped (≤ |sweep| rows) — a left-outer with the points side
-    # hinted cannot build-broadcast and fell back to SortMergeJoin
-    # (caught by the r7 plan-audit diff)
+    # hinted cannot build-broadcast and falls back to SortMergeJoin
     return (
         F.broadcast(grouped)
         .join(points, "nprobe", "right")
@@ -530,7 +548,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     for cell, s, c in cent:
         sss_over_c2 = sum(x * x for x in s) / (c * c)
         # one parsed expr instead of 64 py4j F.lit round-trips per
-        # cell (×K cells ×iterations — see lit_vector, round 10)
+        # cell (×K cells ×iterations — see lit_vector)
         s_lit = F.expr(
             "array(" + ",".join(f"{int(x)}L" for x in s) + ")"
         )
@@ -545,8 +563,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked_cells = F.slice(F.array_sort(F.array(*structs)), 1, IVF_NPROBE)
     emb = _embeddings_normed(spark, sf_dir)
     probes = (
-        quant.filter(F.col("vec_id") < ANN_N_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), F.explode(ranked_cells).alias("pc"))
+        _queries(quant, ANN_N_QUERIES, F.explode(ranked_cells).alias("pc"))
         .select("q_id", F.col("pc.cell").alias("cell"))
         .join(
             emb.select(
@@ -560,12 +577,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = emb.join(a, "vec_id").select(
         "vec_id", "v", "nv", F.col("cluster").cast("long").alias("cell")
     )
-    pairs = (
-        assign.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _pair_sim("qv", "v", "qn", "nv").alias("sim"))
-    )
-    return _ranked(pairs, IVF_TOP_K).select("q_id", "vec_id", "sim", "rn")
+    return _cosine_topk(_candidates(assign, probes, "cell"), IVF_TOP_K)
 
 
 #: SCALED IVF tuning regime (round 6): the production-sized read of
@@ -793,49 +805,14 @@ def ann_ivf_pq_recall_big(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_pq_codes, _big_ivf_state) like ann_ivf_pq_cosine.
     """
     assign, probes_full, brute = _big_ivf_state(spark)
-    probes = probes_full.filter(
-        F.col("prn") <= BIG_IVF_PQ_NPROBE
-    ).select("q_id", "cell")
-    cand = (
-        assign.select("vec_id", "cell")
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id")
+    cand = _cell_candidates(
+        assign, probes_full.filter(F.col("prn") <= BIG_IVF_PQ_NPROBE)
     )
     quant, enc, lut = _big_pq_codes(spark)
-    pairs = (
-        cand.join(enc.select("vec_id", "m", "code"), "vec_id")
-        .join(F.broadcast(lut), ["q_id", "m", "code"])
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("contrib").alias("adc"))
-    )
-    ws = Window.partitionBy("q_id").orderBy(
-        F.col("adc").desc(), F.col("vec_id")
-    )
-    shortlist = (
-        pairs.withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= BIG_PQ_SHORTLIST)
-        .select("q_id", "vec_id")
-    )
-    qvecs = quant.filter(F.col("vec_id") < BIG_IVF_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("q").alias("qq")
-    )
-    rer = (
-        quant.join(F.broadcast(shortlist), "vec_id")
-        .join(F.broadcast(qvecs), "q_id")
-        .select(
-            "q_id", "vec_id",
-            dot_long(F.col("qq"), F.col("q")).alias("qdot"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("qdot").desc(), F.col("vec_id")
-    )
-    res = (
-        rer.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= BIG_IVF_TOP_K)
-        .select("q_id", "vec_id")
-    )
+    res = _adc_rerank(
+        quant, enc, lut, BIG_IVF_QUERIES, BIG_PQ_SHORTLIST, BIG_IVF_TOP_K,
+        cand=cand,
+    ).select("q_id", "vec_id")
     summary = brute.agg(
         F.countDistinct("q_id").cast("long").alias("n_queries"),
         F.count("*").cast("long").alias("n_truth"),
@@ -928,16 +905,6 @@ KMEANS_K = 8
 KMEANS_ITERS = 3
 
 
-def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb_table(spark, sf_dir).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    return emb.select(
-        "vec_id",
-        F.transform("v", lambda x: F.floor(x * QUANT_SCALE)).alias("q"),
-    )
-
-
 def _kmeans_assign(
     quant: DataFrame, cent: list[tuple[int, list[int], int]]
 ) -> DataFrame:
@@ -959,7 +926,7 @@ def _kmeans_assign(
     for cell, s, c in cent:
         sss_over_c2 = sum(x * x for x in s) / (c * c)
         # one parsed expr instead of 64 py4j F.lit round-trips per
-        # cell (×K cells ×iterations — see lit_vector, round 10)
+        # cell (×K cells ×iterations — see lit_vector)
         s_lit = F.expr(
             "array(" + ",".join(f"{int(x)}L" for x in s) + ")"
         )
@@ -1161,10 +1128,11 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     proven pairing; lossless round(…,1) on integer/.5 medians).
 
     Plan shape: the K-row centroid-state frame broadcasts onto the
-    assignment⋈vectors join; top-K per cluster is TWO-STAGE (within
-    (cluster, vec-id block) first) because a window partitioned by
-    the K cluster ids alone would funnel the corpus through K tasks
-    at scale; the median is a K-row agg broadcast back.
+    assignment⋈vectors join; top-K per cluster is two-stage over
+    (cluster, vec-id block) (``two_stage_top_n``) because a window
+    partitioned by the K cluster ids alone would funnel the corpus
+    through K tasks at scale; the median is a K-row agg broadcast
+    back.
     """
     quant = _quantized(spark, sf_dir)
     a = kmeans_assignments(spark, sf_dir).join(quant, "vec_id")
@@ -1188,17 +1156,11 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "median_dist2"
         )
     )
-    pre_w = Window.partitionBy("cluster", "blk").orderBy(
-        F.col("dist2_scaled").desc(), "vec_id"
-    )
-    w = Window.partitionBy("cluster").orderBy(
-        F.col("dist2_scaled").desc(), "vec_id"
-    )
     return (
-        scored.withColumn("pre_rn", F.row_number().over(pre_w))
-        .filter(F.col("pre_rn") <= OUTLIER_TOP_K)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= OUTLIER_TOP_K)
+        two_stage_top_n(
+            scored, "cluster", "blk", OUTLIER_TOP_K,
+            F.col("dist2_scaled").desc(), "vec_id",
+        )
         .join(F.broadcast(med), "cluster")
         .select(
             "cluster", F.col("rn").cast("int").alias("rn"), "vec_id",
@@ -1210,16 +1172,8 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings_normed(spark, sf_dir)
     corpus = emb.select("vec_id", "v", "nv", _bucket_col("v").alias("bucket"))
-    queries = corpus.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"),
-        F.col("nv").alias("qn"), "bucket",
-    )
-    pairs = (
-        corpus.join(F.broadcast(queries), "bucket")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _pair_sim("qv", "v", "qn", "nv").alias("sim"))
-    )
-    return _ranked(pairs, ANN_TOP_K).select("q_id", "vec_id", "sim", "rn")
+    queries = _normed_queries(corpus, ANN_N_QUERIES, "bucket")
+    return _cosine_topk(_candidates(corpus, queries, "bucket"), ANN_TOP_K)
 
 
 #: product quantization (Jégou/Douze/Schmid, PAMI 2011): subspace
@@ -1285,9 +1239,7 @@ def _pq_codes(
         .select("vec_id", "m", F.col("b.code").alias("code"),
                 F.col("b.cw").alias("cw"))
     )
-    qs = subs.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), "m", F.col("sub").alias("qsub")
-    )
+    qs = _queries(subs, n_queries, "m", F.col("sub").alias("qsub"))
     # the ADC lookup table: query-sub · codeword for every (query, m,
     # code) — PQ_M × PQ_K rows per query, computed ONCE and broadcast;
     # per-candidate scoring is then PQ_M table lookups summed, never a
@@ -1297,6 +1249,43 @@ def _pq_codes(
         dot_long(F.col("qsub"), F.col("cw")).alias("contrib"),
     )
     return quant, enc, lut
+
+
+def _cell_candidates(assign: DataFrame, probes: DataFrame) -> DataFrame:
+    """(q_id, vec_id): the corpus vectors in each query's probe cells."""
+    return _candidates(
+        assign.select("vec_id", "cell"), probes.select("q_id", "cell"), "cell"
+    ).select("q_id", "vec_id")
+
+
+def _adc_rerank(
+    quant: DataFrame, enc: DataFrame, lut: DataFrame, n_queries: int,
+    shortlist: int, top_k: int, cand: DataFrame | None = None,
+) -> DataFrame:
+    """PQ search from the code table: ADC-score each candidate as the
+    sum of its PQ_M lookup-table entries, keep each query's
+    ``shortlist`` best, and re-rank those by exact int8 dot — (q_id,
+    vec_id, qdot, rn) for the top ``top_k``. ``cand`` (q_id, vec_id)
+    limits scoring to, e.g., the IVF probe cells; without it every
+    coded vector is a candidate.
+
+    The (tiny) shortlist broadcasts back onto the code-free originals,
+    so the corpus is touched only for the ``shortlist`` rows per query
+    the codes let through."""
+    if cand is None:
+        hits = _candidates(enc, lut, ["m", "code"])
+    else:
+        hits = cand.join(enc.select("vec_id", "m", "code"), "vec_id").join(
+            F.broadcast(lut), ["q_id", "m", "code"]
+        )
+    adc = hits.groupBy("q_id", "vec_id").agg(F.sum("contrib").alias("adc"))
+    short = _ranked(adc, shortlist, "adc", rn="srn").select("q_id", "vec_id")
+    rer = (
+        quant.join(F.broadcast(short), "vec_id")
+        .join(F.broadcast(_int8_queries(quant, n_queries)), "q_id")
+        .select("q_id", "vec_id", _qdot())
+    )
+    return _ranked(rer, top_k, "qdot")
 
 
 def ann_pq_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1323,42 +1312,9 @@ def ann_pq_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-dim dot against every corpus vector.
     """
     quant, enc, lut = _pq_codes(spark, sf_dir, KNN_N_QUERIES)
-    pairs = (
-        enc.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("contrib").alias("adc"))
-    )
-    ws = Window.partitionBy("q_id").orderBy(
-        F.col("adc").desc(), F.col("vec_id")
-    )
-    shortlist = (
-        pairs.withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= PQ_SHORTLIST)
-        .select("q_id", "vec_id")
-    )
-    # exact re-rank of the survivors: the (tiny) shortlist broadcasts
-    # back onto the code-free originals — the corpus is touched only
-    # for the ~PQ_SHORTLIST rows per query the codes let through.
-    qvecs = quant.filter(F.col("vec_id") < KNN_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("q").alias("qq")
-    )
-    rer = (
-        quant.join(F.broadcast(shortlist), "vec_id")
-        .join(F.broadcast(qvecs), "q_id")
-        .select(
-            "q_id", "vec_id",
-            dot_long(F.col("qq"), F.col("q")).alias("qdot"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("qdot").desc(), F.col("vec_id")
-    )
-    return (
-        rer.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= PQ_TOP_K)
-        .select("q_id", "vec_id", "qdot", "rn")
-    )
+    return _adc_rerank(
+        quant, enc, lut, KNN_N_QUERIES, PQ_SHORTLIST, PQ_TOP_K
+    ).select("q_id", "vec_id", "qdot", "rn")
 
 
 #: IVF-PQ shortlist: smaller than the flat-PQ shortlist because the
@@ -1385,46 +1341,11 @@ def ann_ivf_pq_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC/rerank protocol — bit-identical across engines.
     """
     assign, probes = _ivf_index_and_probes(spark, sf_dir)
-    cand = (
-        assign.select("vec_id", "cell")
-        .join(F.broadcast(probes.select("q_id", "cell")), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id")
-    )
     quant, enc, lut = _pq_codes(spark, sf_dir, ANN_N_QUERIES)
-    pairs = (
-        cand.join(enc.select("vec_id", "m", "code"), "vec_id")
-        .join(F.broadcast(lut), ["q_id", "m", "code"])
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("contrib").alias("adc"))
-    )
-    ws = Window.partitionBy("q_id").orderBy(
-        F.col("adc").desc(), F.col("vec_id")
-    )
-    shortlist = (
-        pairs.withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= IVFPQ_SHORTLIST)
-        .select("q_id", "vec_id")
-    )
-    qvecs = quant.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("q").alias("qq")
-    )
-    rer = (
-        quant.join(F.broadcast(shortlist), "vec_id")
-        .join(F.broadcast(qvecs), "q_id")
-        .select(
-            "q_id", "vec_id",
-            dot_long(F.col("qq"), F.col("q")).alias("qdot"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("qdot").desc(), F.col("vec_id")
-    )
-    return (
-        rer.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= PQ_TOP_K)
-        .select("q_id", "vec_id", "qdot", "rn")
-    )
+    return _adc_rerank(
+        quant, enc, lut, ANN_N_QUERIES, IVFPQ_SHORTLIST, PQ_TOP_K,
+        cand=_cell_candidates(assign, probes),
+    ).select("q_id", "vec_id", "qdot", "rn")
 
 
 #: PCA power iteration: rounds and the per-round rescale target for
@@ -1622,10 +1543,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = _embeddings_normed(spark, sf_dir)
     corpus = emb.select("vec_id", "v", "nv", _bucket_col("v").alias("bucket"))
-    base = corpus.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"),
-        F.col("nv").alias("qn"), "bucket",
-    )
+    base = _normed_queries(corpus, ANN_N_QUERIES, "bucket")
     flips = [F.col("bucket")]
     for i in range(1, ANN_N_PLANES + 1):
         c = F.substring("bucket", i, 1)
@@ -1640,12 +1558,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = base.select(
         "q_id", "qv", "qn", F.explode(F.array(*flips)).alias("bucket")
     )
-    pairs = (
-        corpus.join(F.broadcast(probes), "bucket")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _pair_sim("qv", "v", "qn", "nv").alias("sim"))
-    )
-    return _ranked(pairs, ANN_TOP_K).select("q_id", "vec_id", "sim", "rn")
+    return _cosine_topk(_candidates(corpus, probes, "bucket"), ANN_TOP_K)
 
 
 #: ann_ivf_delete: every IVF_DELETE_MOD-th vector is tombstoned.
@@ -1738,11 +1651,8 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("ov") > 0)
     )
-    ws = Window.partitionBy("q_id").orderBy(F.desc("ov"), "doc_id")
-    sparse = (
-        sp.withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= KNN_TOP_K)
-        .select("q_id", "doc_id", "srn")
+    sparse = _ranked(sp, KNN_TOP_K, "ov", tie="doc_id", rn="srn").select(
+        "q_id", "doc_id", "srn"
     )
     fused = (
         dense.join(sparse, ["q_id", "doc_id"], "full_outer")
@@ -1759,11 +1669,8 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("rrf_scaled"),
         )
     )
-    wf = Window.partitionBy("q_id").orderBy(F.desc("rrf_scaled"), "doc_id")
-    return (
-        fused.withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= KNN_TOP_K)
-        .select("q_id", "doc_id", "rrf_scaled", F.col("rn").cast("int"))
+    return _ranked(fused, KNN_TOP_K, "rrf_scaled", tie="doc_id").select(
+        "q_id", "doc_id", "rrf_scaled", F.col("rn").cast("int")
     )
 
 
@@ -1866,12 +1773,9 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("draw"),
         )
     )
-    wn = Window.partitionBy("q_id").orderBy("draw", "doc_id")
-    negs = (
-        cand.withColumn("nrn", F.row_number().over(wn))
-        .filter(F.col("nrn") <= KNN_TOP_K)
-        .select("q_id", "doc_id")
-    )
+    negs = _ranked(
+        cand, KNN_TOP_K, "draw", desc=False, tie="doc_id", rn="nrn"
+    ).select("q_id", "doc_id")
     return pos.select(
         "q_id", "doc_id", F.lit(1).cast("int").alias("label")
     ).unionByName(
@@ -1936,13 +1840,7 @@ def mmr_diversified_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(K·POOL) integer ops, exactly where production rerankers live
     (the pool, not the corpus, is what MMR ever touches).
     """
-    emb = _emb_table(spark, sf_dir).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    quant = emb.select(
-        "vec_id",
-        F.transform("v", lambda x: F.floor(x * QUANT_SCALE)).alias("q"),
-    )
+    quant = _quantized(spark, sf_dir)
     q0 = quant.filter(F.col("vec_id") == 0).select(
         F.col("q").alias("qq")
     )
@@ -2071,27 +1969,18 @@ def knn_hamming_sign(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(0).cast("long"))
         ).alias("w1"),
     )
-    queries = packed.filter(F.col("vec_id") < KNN_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("w0").alias("q0"),
-        F.col("w1").alias("q1"),
+    queries = _queries(
+        packed, KNN_N_QUERIES, F.col("w0").alias("q0"), F.col("w1").alias("q1")
     )
-    pairs = (
-        packed.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            F.expr(
-                "CAST(bit_count(w0 ^ q0) + bit_count(w1 ^ q1) AS INT)"
-            ).alias("hamming"),
-        )
+    pairs = _candidates(packed, queries).select(
+        "q_id",
+        "vec_id",
+        F.expr(
+            "CAST(bit_count(w0 ^ q0) + bit_count(w1 ^ q1) AS INT)"
+        ).alias("hamming"),
     )
-    w = Window.partitionBy("q_id").orderBy("hamming", "vec_id")
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KNN_TOP_K)
-        .select("q_id", "vec_id", "hamming", F.col("rn").cast("int").alias("rn"))
+    return _ranked(pairs, KNN_TOP_K, "hamming", desc=False).select(
+        "q_id", "vec_id", "hamming", F.col("rn").cast("int").alias("rn")
     )
 
 
@@ -2175,17 +2064,9 @@ def knn_truncated_dims_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(as_double(F.col("embedding")), 1, TRUNC_DIMS).alias("v"),
     )
     emb = emb.select("vec_id", "v", norm(F.col("v")).alias("nv"))
-    queries = emb.filter(F.col("vec_id") < KNN_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qn"),
-    )
-    pairs = (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _pair_sim("qv", "v", "qn", "nv").alias("sim"))
-    )
-    trunc = _ranked(pairs, KNN_TOP_K).select("q_id", "vec_id")
+    trunc = _cosine_topk(
+        _candidates(emb, _normed_queries(emb, KNN_N_QUERIES)), KNN_TOP_K
+    ).select("q_id", "vec_id")
     hits = (
         trunc.join(full, ["q_id", "vec_id"])
         .groupBy("q_id")
@@ -2222,45 +2103,19 @@ def knn_filtered_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.tables import documents
 
-    emb = _emb_table(spark, sf_dir).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    quant = emb.select(
-        "vec_id",
-        F.transform("v", lambda x: F.floor(x * QUANT_SCALE)).alias("q"),
-    )
+    quant = _quantized(spark, sf_dir)
     meta = documents(spark, sf_dir).select(
         F.col("doc_id").alias("vec_id"), "source"
     )
     corpus = quant.join(meta, "vec_id")
     keep = F.col("source").isin(*KNN_FILTER_SOURCES)
-    queries = quant.filter(F.col("vec_id") < KNN_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("q").alias("qq")
+    pairs = _candidates(corpus, _int8_queries(quant, KNN_N_QUERIES)).select(
+        "q_id", "vec_id", keep.alias("keep"), _qdot()
     )
-    pairs = (
-        corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            keep.alias("keep"),
-            dot_long(F.col("qq"), F.col("q")).alias("qdot"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("qdot").desc(), F.col("vec_id")
-    )
-    unfiltered_topk = pairs.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= KNN_TOP_K
-    )
-    n_post = unfiltered_topk.groupBy("q_id").agg(
+    n_post = _ranked(pairs, KNN_TOP_K, "qdot").groupBy("q_id").agg(
         F.sum(F.col("keep").cast("long")).alias("n_postfilter")
     )
-    filtered_topk = (
-        pairs.filter("keep")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KNN_TOP_K)
-    )
+    filtered_topk = _ranked(pairs.filter("keep"), KNN_TOP_K, "qdot")
     return filtered_topk.join(F.broadcast(n_post), "q_id").select(
         "q_id",
         "vec_id",
@@ -2361,14 +2216,7 @@ def embedding_label_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label", as_double(F.col("embedding")).alias("v")
     )
     per_dim = (
-        emb.select(
-            "label",
-            F.posexplode(
-                F.transform(
-                    "v", lambda x: F.floor(x * QUANT_SCALE).cast("long")
-                )
-            ).alias("dim", "qv"),
-        )
+        emb.select("label", F.posexplode(_codes("v")).alias("dim", "qv"))
         .groupBy("label", "dim")
         .agg(F.count("*").alias("n"), F.sum("qv").alias("s"))
     )

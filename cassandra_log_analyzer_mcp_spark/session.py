@@ -36,8 +36,6 @@ RUNTIME_CONFS = {
     # The testdata writes TIMESTAMP(NANOS) parquet, which Spark's reader
     # rejects; read as long and convert (sources/tables.py).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Progress bars interleave with harness stdout parsing.
-    "spark.ui.showConsoleProgress": "false",
 }
 
 
@@ -168,6 +166,10 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             f"-Dlog4j2.configurationFile=file:{quiet}",
         )
+    # Progress bars interleave with harness stdout parsing. A static
+    # conf: it takes effect only at context launch, so it is set here
+    # and not in RUNTIME_CONFS.
+    builder = builder.config("spark.ui.showConsoleProgress", "false")
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return tune(builder.getOrCreate())

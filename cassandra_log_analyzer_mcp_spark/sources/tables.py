@@ -38,19 +38,23 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents table spread across cores.
+def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df`` round-robin repartitioned to the cluster's parallelism
+    when its scan yields fewer partitions than cores, else unchanged.
 
-    The testdata ships as one parquet split; the text operators are
-    CPU-bound (regex + md5), so a cheap shuffle of the small corpus
-    buys full parallelism. Real 100 TB corpora arrive in thousands of
-    splits and never hit this branch (repartition only when the scan
-    yields fewer partitions than cores).
-    """
-    df = table(spark, sf_dir, "documents")
+    The testdata ships each table as one parquet split; the text and
+    vector operators are CPU-bound (regex, md5, dot products), so a
+    cheap shuffle of the small table buys full parallelism. Real
+    100 TB corpora arrive in thousands of splits and never hit the
+    branch."""
     if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
+
+
+def documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents table spread across cores (``spread``)."""
+    return spread(spark, table(spark, sf_dir, "documents"))
 
 
 def logs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -470,6 +470,16 @@ def test_tune_skips_locked_conf_and_logs_once(spark, monkeypatch, caplog):
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
+def test_runtime_confs_are_all_modifiable(spark):
+    """tune() sets RUNTIME_CONFS on a session it did not build, so a
+    static conf there can never apply and only logs a false "locked"
+    warning; static confs belong in get_spark's builder."""
+    from cassandra_log_analyzer_mcp_spark import session
+
+    static = [k for k in session.RUNTIME_CONFS if not spark.conf.isModifiable(k)]
+    assert not static, static
+
+
 # ---------------------------------------------------------------------------
 # search_report / errors_report: one top-k scan of the layer
 # ---------------------------------------------------------------------------

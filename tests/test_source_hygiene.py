@@ -77,3 +77,32 @@ def test_harnesses_prebuild_through_the_registry():
         if builder in (root / name).read_text()
     ]
     assert not bad, "layer builder named outside the prebuild: " + ", ".join(bad)
+
+
+#: the pair-scoring kit of the dedup and ANN families: each step is
+#: written once, in the helper named, and every call site goes
+#: through it (counts over operators/similarity.py + operators/dedup.py)
+_SCORING_KIT = {
+    'Window.partitionBy("q_id")': 1,  # similarity._ranked
+    "F.floor(x * QUANT_SCALE)": 1,  # similarity._codes
+    'alias("adc")': 1,  # similarity._adc_rerank
+    'alias("arr_a")': 1,  # dedup._pair_sides
+    'alias(f"a{k}")': 1,  # dedup._signature_sides
+    "F.floor(EDIT_NUM * mx / EDIT_DEN)": 1,  # dedup._edit_candidates
+}
+#: package-wide: the core-count spread (sources.tables.spread) and the
+#: two-stage per-key top-N (functions.frames.two_stage_top_n)
+_PACKAGE_ONCE = ("getNumPartitions() <", 'withColumn("pre_rn"')
+
+
+def test_pair_scoring_kit_has_one_copy():
+    ops = PKG / "operators"
+    text = "".join(
+        (ops / name).read_text() for name in ("similarity.py", "dedup.py")
+    )
+    got = {pat: text.count(pat) for pat in _SCORING_KIT}
+    assert got == _SCORING_KIT
+    package = "".join(p.read_text() for p in sorted(PKG.rglob("*.py")))
+    assert {pat: package.count(pat) for pat in _PACKAGE_ONCE} == dict.fromkeys(
+        _PACKAGE_ONCE, 1
+    )

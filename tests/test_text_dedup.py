@@ -2332,30 +2332,9 @@ def test_embedding_multiprobe_is_strict_candidate_superset(spark, sf_dir):
         assert ham == 1, (va, vb, ham)
 
 
-def test_band_max_occupancy_env_validated(monkeypatch):
-    """ADVICE r9: the tunable must fail loudly at parse time — a
-    non-integer value used to crash every import with a bare
-    ValueError, and a value < 1 would silently empty the whole
-    minhash dedup family (the oracle interpolates the same constant,
-    so the hash gate would stay green on empty output)."""
-    from cassandra_log_analyzer_mcp_spark.operators import dedup
-
-    monkeypatch.setenv("SPARK_GRAFT_BAND_MAX_OCCUPANCY", "banana")
-    with pytest.raises(ValueError, match="not an integer"):
-        dedup._parse_band_max_occupancy()
-    monkeypatch.setenv("SPARK_GRAFT_BAND_MAX_OCCUPANCY", "0")
-    with pytest.raises(ValueError, match="every"):
-        dedup._parse_band_max_occupancy()
-    monkeypatch.setenv("SPARK_GRAFT_BAND_MAX_OCCUPANCY", "7")
-    assert dedup._parse_band_max_occupancy() == 7
-    monkeypatch.delenv("SPARK_GRAFT_BAND_MAX_OCCUPANCY")
-    assert dedup._parse_band_max_occupancy() == 64
-
-
 def test_big_scale_env_validated(monkeypatch):
-    """SPARK_GRAFT_BIG_SCALE follows the same parse-time validation
-    discipline as the occupancy cap: loud on non-integers, rejected
-    below 1, default 1."""
+    """SPARK_GRAFT_BIG_SCALE is validated at parse time: loud on
+    non-integers, rejected below 1, default 1."""
     from cassandra_log_analyzer_mcp_spark.operators import bigscale
 
     monkeypatch.setenv("SPARK_GRAFT_BIG_SCALE", "big")

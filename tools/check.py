@@ -96,11 +96,9 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
 
-    from cassandra_log_analyzer_mcp_spark.session import get_spark
+    from cassandra_log_analyzer_mcp_spark.session import local_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CHECK_CPUS", "8")
-    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_spark("check")
     con = oracle_connection(sf_dir)
 
     qs = entry_mod.queries()
