@@ -14,11 +14,16 @@ one-machine-RAM to 100 TB.
 
 Every read tool runs over ONE cached parsed layer per store
 (``LogStore.flagged``), rebuilt only when the store's version changes:
-a registered file's path, length or modification time (listed through
-the Hadoop FileSystem, so HDFS/S3 globs version too), or a paste. A
-rebuild unpersists the superseded layer first, so a store holds one
-cache entry however often its logs change. ``session.clear_caches`` is
-safe: the next call finds the layer uncached and rebuilds it.
+a registered file's path, length or modification time, or a paste.
+Each glob's lister is chosen once, at registration: a glob on the
+local file system is listed with Python's ``glob`` and ``os.stat``
+(no JVM round trip), and any other glob (HDFS/S3, or local with
+syntax only Hadoop reads) through its Hadoop FileSystem, so every
+glob versions. A call on an unchanged store pays that listing and one
+JVM call chain to see the layer still cached. A rebuild unpersists
+the superseded layer first, so a store holds one cache entry however
+often its logs change. ``session.clear_caches`` is safe: the next
+call finds the layer uncached and rebuilds it.
 
 Four of the six read tools render from small per-node rollups kept
 next to that layer (``_ROLLUPS``), each collected the first time a
@@ -38,10 +43,14 @@ the layer. search's per-node line numbers are the layer's
 
 from __future__ import annotations
 
+import functools
+import glob
+import logging
 import os
+import re
 import weakref
+from collections.abc import Callable
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,13 +64,20 @@ from .functions.parsing import (
 from .operators import analysis
 from .sources.logfiles import read_log_dir
 
+_log = logging.getLogger(__name__)
+
+#: glob syntax that Python's ``glob`` reads otherwise than Hadoop's:
+#: brace alternation, a backslash escape, a ``[^…]`` class
+_HADOOP_ONLY_SYNTAX = re.compile(r"[{}\\]|\[\^")
+
 
 class LogStore:
     """Registered log locations, one or more per node."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self._globs: list[str] = []
+        #: registered glob -> its lister, in registration order
+        self._globs: dict[str, Callable[[], list[tuple]]] = {}
         self._paste_dir: str | None = None
         self._pastes = 0
         self._layer: DataFrame | None = None
@@ -69,15 +85,17 @@ class LogStore:
 
     def add_glob(self, path_glob: str) -> None:
         """Register a directory glob whose paths encode the node name
-        (…/<node>/<file>.log)."""
-        self._globs.append(path_glob)
+        (…/<node>/<file>.log). A glob already registered is ignored:
+        read twice, its lines would count twice."""
+        if path_glob not in self._globs:
+            self._globs[path_glob] = _glob_lister(self.spark, path_glob)
 
     def add_pasted(self, node_name: str, content: str) -> None:
         """Parity with the reference's manual load_logs tool (ref
         :724-736): land pasted content to a local staging dir."""
         if self._paste_dir is None:
             self._paste_dir = work_dir("logstore")
-            self._globs.append(f"{self._paste_dir}/*/*.log")
+            self.add_glob(f"{self._paste_dir}/*/*.log")
         d = os.path.join(self._paste_dir, node_name)
         os.makedirs(d, exist_ok=True)
         with open(os.path.join(d, "pasted.log"), "a") as fh:
@@ -86,22 +104,8 @@ class LogStore:
 
     def _version(self) -> tuple:
         """(pastes, (path, length, mtime) of every file the globs
-        match). Listed through the Hadoop FileSystem — driver-side
-        metadata calls, no Spark job — so HDFS/S3 globs version too; a
-        matched directory contributes its files, as ``spark.read.text``
-        reads them."""
-        jvm = self.spark.sparkContext._jvm
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        files = []
-        for g in self._globs:
-            path = jvm.org.apache.hadoop.fs.Path(g)
-            fs = path.getFileSystem(conf)
-            for st in fs.globStatus(path) or []:
-                for f in fs.listStatus(st.getPath()) if st.isDirectory() else [st]:
-                    files.append(
-                        (f.getPath().toString(), f.getLen(), f.getModificationTime())
-                    )
-        return self._pastes, tuple(files)
+        match, each glob listed by the lister ``add_glob`` chose)."""
+        return self._pastes, tuple(f for ls in self._globs.values() for f in ls())
 
     def lines(self) -> DataFrame:
         """Every registered glob read as one source: a node's line
@@ -109,7 +113,7 @@ class LogStore:
         paste follows the node's files."""
         if not self._globs:
             raise ValueError("no logs loaded — register a glob or paste content")
-        return read_log_dir(self.spark, self._globs)
+        return read_log_dir(self.spark, list(self._globs))
 
     def flagged(self) -> DataFrame:
         """The store's cached parsed + issue-flagged layer. The same
@@ -121,7 +125,7 @@ class LogStore:
         if (
             self._layer is not None
             and version == self._layer_version
-            and self._layer.storageLevel != StorageLevel.NONE
+            and _cached(self._layer)
         ):
             return self._layer
         if self._layer is not None:
@@ -134,6 +138,70 @@ class LogStore:
     def nodes(self) -> list[str]:
         """The nodes of the store's layer, from its "nodes" rollup."""
         return sorted(r.node for r in _rollup(self.flagged(), "nodes"))
+
+
+def _glob_lister(spark: SparkSession, path_glob: str) -> Callable[[], list[tuple]]:
+    """How ``LogStore._version`` lists the files ``path_glob`` matches
+    as (path, length, mtime); a matched directory contributes its
+    entries, as ``spark.read.text`` reads them. The glob's Hadoop
+    FileSystem is resolved here, once. A local (``file``) glob whose
+    syntax Python's ``glob`` reads as Hadoop does (``*``, ``?``,
+    ``[…]`` without ``^``) is qualified as Hadoop resolves it and then
+    listed without a JVM round trip; any other glob is listed through
+    its FileSystem. A local glob kept on that listing for its syntax
+    is logged here."""
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path_glob)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    uri = fs.makeQualified(path).toUri()
+    if uri.getScheme() == "file":
+        pattern = uri.getPath()
+        if not _HADOOP_ONLY_SYNTAX.search(pattern):
+            return functools.partial(_local_files, pattern)
+        _log.warning(
+            "LogStore: %s uses glob syntax Python's glob reads otherwise; "
+            "it is versioned through the Hadoop FileSystem, a few py4j "
+            "calls per file on every tool call", path_glob,
+        )
+    return functools.partial(_hadoop_files, fs, path)
+
+
+def _local_files(pattern: str) -> list[tuple]:
+    """``_hadoop_files``' (path, length, mtime in ms) triples for a
+    local glob, from ``os.stat``. Unlike ``LocalFileSystem`` it also
+    lists the ``.*.crc`` checksum files a wildcard or directory
+    matches; those change only with the file they guard. A file that
+    goes between the match and its ``stat`` (a rotation) is left out,
+    as a Hadoop listing taken after it would leave it out."""
+    files = []
+    for match in sorted(glob.glob(pattern, include_hidden=True)):
+        if os.path.isdir(match):
+            entries = sorted(e.path for e in os.scandir(match))
+        else:
+            entries = [match]
+        for p in entries:
+            try:
+                st = os.stat(p)
+            except FileNotFoundError:
+                continue
+            files.append((f"file:{p}", st.st_size, st.st_mtime_ns // 1_000_000))
+    return files
+
+
+def _hadoop_files(fs, path) -> list[tuple]:
+    """(path, length, mtime in ms) per file ``path`` matches, listed
+    through the Hadoop FileSystem ``fs`` — driver-side metadata calls,
+    no Spark job — so HDFS/S3 globs version too."""
+    files = []
+    for st in fs.globStatus(path) or []:
+        for f in fs.listStatus(st.getPath()) if st.isDirectory() else [st]:
+            files.append((f.getPath().toString(), f.getLen(), f.getModificationTime()))
+    return files
+
+
+def _cached(df: DataFrame) -> bool:
+    """``df.storageLevel != StorageLevel.NONE`` in one JVM call chain;
+    pyspark's ``storageLevel`` makes six py4j calls."""
+    return df._jdf.storageLevel().isValid()
 
 
 def _cluster_markdown(summary, issues, recs) -> str:
@@ -190,7 +258,7 @@ def _rollup(flagged: DataFrame, part: str) -> list:
     registered, still-cached layer; any other frame is rolled up on
     every call."""
     memo = _ROLLUPS.get(flagged)
-    if memo is not None and flagged.storageLevel == StorageLevel.NONE:
+    if memo is not None and not _cached(flagged):
         del _ROLLUPS[flagged]
         memo = None
     if memo is None:

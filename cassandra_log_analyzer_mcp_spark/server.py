@@ -10,8 +10,6 @@ then scans, instead of holding file contents in driver memory.
 
 from __future__ import annotations
 
-import tempfile
-
 try:
     from mcp.server import Server
     from mcp.types import Resource, TextContent, Tool
@@ -23,6 +21,7 @@ except ImportError:
 from pyspark.sql import SparkSession
 
 from . import api
+from .memo import work_dir
 from .sources import logfiles
 
 
@@ -34,7 +33,7 @@ def build_server(spark: SparkSession):
     server = Server("cassandra-log-analyzer-spark")
     store = api.LogStore(spark)
     ssh_config: dict[str, dict] = {}
-    staging = tempfile.mkdtemp(prefix="ssh_logs_")
+    staging = work_dir("ssh_logs")
 
     def _flagged():
         return store.flagged()

@@ -1,6 +1,7 @@
 """Tool-surface parity: LogStore + markdown reports."""
 
 import gc
+import os
 import re
 import weakref
 
@@ -621,19 +622,149 @@ def test_search_and_errors_run_one_job_on_a_cached_layer(spark, tmp_path):
 
 def test_repeated_search_leaves_no_per_call_state(spark, sf_dir):
     """The hit count is observed on the search scan; repeated calls
-    leave no pending observation or extra listener in the session."""
+    leave no pending observation or extra listener in the session.
+    Listeners are compared by identity, and only for additions: each
+    ``cache()`` clones the session, and the clone's listener bus leaves
+    the context whenever a JVM GC collects the clone."""
     flagged = logs_flagged(spark, sf_dir)
     om = spark._jsparkSession.observationManager()
     field = om.getClass().getDeclaredField("observations")
     field.setAccessible(True)
     bus = spark.sparkContext._jsc.sc().listenerBus()
+    identity = spark.sparkContext._jvm.java.lang.System.identityHashCode
 
-    def state():
-        return field.get(om).size(), bus.listeners().size()
+    def listeners():
+        return {identity(x) for x in bus.listeners()}
 
     api.search_report(flagged, "tombstone", False, None, 3)
-    before = state()
+    assert field.get(om).size() == 0
+    before = listeners()
     for pattern in ("tombstone", "timed out", "no such line", "GC"):
         api.search_report(flagged, pattern, False, None, 3)
-    assert state() == before
-    assert before[0] == 0
+    assert field.get(om).size() == 0
+    assert listeners() <= before
+
+
+# ---------------------------------------------------------------------------
+# LogStore versioning: one lister per glob, chosen at registration
+# ---------------------------------------------------------------------------
+
+
+def _listing_tree(root) -> None:
+    """Three nodes with rotated files, a dotfile, a second log kind and
+    a directory inside a node's directory."""
+    for node, files in {
+        "node0": ("system.log", "system.log.1", "system.log.2", ".hidden.log"),
+        "node1": ("system.log", "system.log.1", "debug.log"),
+        "node2": ("system.log",),
+    }.items():
+        (root / node).mkdir()
+        for k, name in enumerate(files):
+            (root / node / name).write_text(_log_lines(node, 10 * k, 3 + k))
+    (root / "node2" / "archive").mkdir()
+    (root / "node2" / "archive" / "old.log").write_text(_log_lines("node2", 0, 2))
+
+
+def _hadoop_listing(spark, path_glob) -> list[tuple]:
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path_glob)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return api._hadoop_files(fs, path)
+
+
+@pytest.mark.parametrize("shape", [
+    "*/system.log*", "*/*.log", "node0/system.log", "node2", "node[0-1]/*",
+    "dotfile", "relative",
+])
+def test_local_listing_matches_hadoop_listing(spark, tmp_path, shape):
+    """A local glob is listed from Python, and sees exactly the files,
+    lengths and modification times the Hadoop FileSystem listing sees."""
+    _listing_tree(tmp_path)
+    path_glob = {
+        "dotfile": f"{tmp_path}/node0/*",
+        "relative": os.path.relpath(
+            f"{tmp_path}/*/system.log*",
+            spark.sparkContext._jvm.java.lang.System.getProperty("user.dir"),
+        ),
+    }.get(shape, f"{tmp_path}/{shape}")
+    lister = api._glob_lister(spark, path_glob)
+    assert lister.func is api._local_files
+    got = lister()
+    assert got, "an empty listing would match vacuously"
+    assert sorted(got) == sorted(_hadoop_listing(spark, path_glob))
+    if shape == "dotfile":
+        assert any(p.endswith("/.hidden.log") for p, _, _ in got)
+
+
+def test_local_listing_leaves_out_a_file_gone_before_its_stat(tmp_path, monkeypatch):
+    """A file matched and then rotated away before its ``stat`` is left
+    out of the listing; the tool call does not fail."""
+    _listing_tree(tmp_path)
+    pattern = f"{tmp_path}/*/system.log*"
+    want = api._local_files(pattern)
+    match = api.glob.glob
+    monkeypatch.setattr(
+        api.glob, "glob",
+        lambda p, **kw: match(p, **kw) + [f"{tmp_path}/node2/system.log.1"],
+    )
+    assert api._local_files(pattern) == want
+
+
+def test_brace_glob_keeps_hadoop_listing_and_sees_append(spark, tmp_path, caplog):
+    """A local glob Python's glob would read otherwise is listed through
+    Hadoop, logged once at registration, and still versions: an append
+    shows in the next answer."""
+    import logging
+
+    _listing_tree(tmp_path)
+    path_glob = f"{tmp_path}/{{node0,node1}}/system.log"
+    store = api.LogStore(spark)
+    with caplog.at_level(logging.WARNING, logger=api.__name__):
+        store.add_glob(path_glob)
+        store.add_glob(path_glob)
+        n = store.flagged().count()
+        assert store._globs[path_glob].func is api._hadoop_files
+        with open(tmp_path / "node1" / "system.log", "a") as fh:
+            fh.write(_log_lines("node1", 50, 4))
+        assert store.flagged().count() == n + 4
+    hits = [r for r in caplog.records if path_glob in r.getMessage()]
+    assert len(hits) == 1
+
+
+def test_repeated_glob_counts_its_lines_once(spark, tmp_path):
+    """Registering a glob again (the SSH tools re-register the staging
+    glob on every load) leaves every answer unchanged."""
+    store = _rotated_store(spark, tmp_path)
+    n = store.flagged().count()
+    report = api.compare_report(store.flagged())
+    store.add_glob(f"{tmp_path}/*/system.log*")
+    assert store.flagged().count() == n
+    assert api.compare_report(store.flagged()) == report
+
+
+def test_rollup_call_on_unchanged_store_makes_few_py4j_calls(spark, tmp_path, monkeypatch):
+    """On an unchanged local store a rollup tool call crosses to the JVM
+    only to see its layer still cached (one call chain in ``flagged``,
+    one in the rollup lookup): at most 4 py4j commands, counted on the
+    calling thread (py4j's finalizer thread sends its own)."""
+    import threading
+
+    store = _rotated_store(spark, tmp_path)
+    store.add_pasted("nodeP", _log_lines("nodeP", 0, 5))
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    for report in (api.analyze_cluster_report, api.compare_report,
+                   api.issues_report, api.health_report):
+        want = report(store.flagged())
+        monkeypatch.setattr(client, "send_command", counting)
+        sent.clear()
+        assert report(store.flagged()) == want
+        monkeypatch.undo()
+        assert len(sent) <= 4, (report.__name__, sent)

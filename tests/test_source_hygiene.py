@@ -26,8 +26,6 @@ _MEMO_ONLY = {
         r"^_?[A-Z][A-Z0-9_]*\s*(:[^=]*)?=\s*(\{\}|dict\(\))\s*(#.*)?$"
     ),
 }
-#: the MCP adapter's SSH staging dir, which no test can drive
-_ALLOWED = {("server.py", "mkdtemp")}
 
 
 def test_memo_and_scratch_go_through_memo_module():
@@ -37,7 +35,7 @@ def test_memo_and_scratch_go_through_memo_module():
         if path.name != "memo.py"
         for n, line in enumerate(path.read_text().splitlines(), 1)
         for what, pat in _MEMO_ONLY.items()
-        if pat.search(line) and (path.name, what) not in _ALLOWED
+        if pat.search(line)
     ]
     assert not bad, "outside memo.py: " + ", ".join(bad)
 
